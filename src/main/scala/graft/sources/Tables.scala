@@ -35,28 +35,6 @@ object Tables {
     "events" -> Seq("event_id"),
     "embeddings" -> Seq("vec_id"))
 
-  /** Conditional scan-parallelism FLOOR (guide §2.5 "input skew",
-    * §6 `minPartitionNum`): when a frame plans fewer partitions than
-    * the session default — the single-row-group / unsplittable-file
-    * shape, where all work FUSED into the scan stage (tokenize,
-    * explode, partial aggregation, string rewrites, vector math)
-    * serializes onto one core — redistribute ONCE by a deterministic
-    * content key. At scale the scan already plans ≥ default-parallelism
-    * splits and this is the IDENTITY (no exchange added), so the floor
-    * is data-adaptive, not a local-mode constant. Hash partitioning on
-    * a real key keeps row→partition deterministic under task retries
-    * (the SPARK-38388 hazard of rand()/round-robin keys); filters and
-    * column pruning still push below the repartition to the scan.
-    * Results are partitioning-independent by construction (every
-    * registered query ends in a total order; aggregates are
-    * partition-commutative), so the floor never changes what a query
-    * computes. */
-  def parallelismFloor(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= want) df
-    else df.repartition(want, keys: _*)
-  }
-
   /** Floor decision memo (None = scan already wide enough, leave it).
     * `df.rdd.getNumPartitions` forces a physical plan (file listing
     * included) per probe; the answer depends only on the file layout
@@ -87,8 +65,18 @@ object Tables {
     * So the floor now lives AT those call sites — the default read
     * stays the raw scan and each heavy consumer asks for the floored
     * shape explicitly (r17; guide §1.2 step 1 "choose a partitioning",
-    * §2.5). Same deterministic keys, same identity-at-scale argument
-    * as [[parallelismFloor]]. */
+    * §2.5).
+    *
+    * The floor targets the single-row-group / unsplittable-file shape,
+    * where all work fused into the scan stage serializes onto one core:
+    * it redistributes ONCE by the table's deterministic content key
+    * ([[floorKeys]]), which keeps row→partition deterministic under
+    * task retries (the SPARK-38388 hazard of rand()/round-robin keys).
+    * At scale the scan already plans enough splits and the floor is the
+    * identity (no exchange added). Results are partitioning-independent
+    * by construction (every registered query ends in a total order;
+    * aggregates are partition-commutative), so the floor never changes
+    * what a query computes. */
   def floored(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = load(spark, sfDir, name)
     val keys = floorKeys.getOrElse(name,

@@ -417,6 +417,30 @@ class PlanLintSpec extends SparkSpec {
       "detector false-positives on the slice-inside-transform spelling")
   }
 
+  test("word-count queries tokenize with the byte kernel: no regex split or filter") {
+    // a fallback to split([ \n]) + rlike(^[a-z]) would bring back a
+    // per-row String decode, Pattern compile and per-token regex
+    import org.apache.spark.sql.catalyst.expressions.{RLike, StringSplit}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.plans.logical.Expand
+    Seq("wordcount_topk", "wordcount_full", "wordcount_textfile", "letter_buckets").foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      val exprs = plan.collect { case p => p.expressions }.flatten
+      val regex = exprs.flatMap(_.collect {
+        case e @ (_: RLike | _: StringSplit) => e.prettyName
+      })
+      assert(regex.isEmpty, s"$q plans regex tokenization: ${regex.distinct}")
+      assert(exprs.exists(_.exists(_.isInstanceOf[graft.functions.AzTokens])),
+        s"$q does not tokenize with az_tokens")
+    }
+    val buckets = SparkEntry.queries("letter_buckets")(spark, sf).queryExecution.optimizedPlan
+    val distinct = buckets.collect { case p => p.expressions }.flatten.flatMap(_.collect {
+      case a: AggregateExpression if a.isDistinct => a
+    })
+    assert(distinct.isEmpty && buckets.collect { case e: Expand => e }.isEmpty,
+      s"letter_buckets plans a distinct aggregate: $distinct")
+  }
+
   test("every query's plan builds and has output columns") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)

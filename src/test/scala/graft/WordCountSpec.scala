@@ -8,9 +8,7 @@ class WordCountSpec extends SparkSpec {
   import spark.implicits._
 
   private def countsOf(lines: String*): Seq[(String, Long)] =
-    lines.toDF("text")
-      .select(WordCount.tokens(col("text")).as("word"))
-      .filter(WordCount.azFilter(col("word")))
+    WordCount.wordsOf(lines.toDF("text"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("word"))
       .as[(String, Long)].collect().toSeq
