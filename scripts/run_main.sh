@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Run a graft main outside sbt (parallel-safe: no project lock, no sbt
 # logger prefix). Usage: scripts/run_main.sh graft.Bench [args...]
+#                        scripts/run_main.sh graft.Tool <command> [args...]
 # Env: SPARK_DRIVER_MEM (default 8g) sizes the heap, matching build.sbt.
 set -euo pipefail
 cd "$(dirname "$0")/.."

@@ -19,21 +19,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bound the per-job SQLExecutionStart plan description: deep
-      // checkpoint/cache chains over AQE subtrees can otherwise render
-      // multi-GB plan strings (the r17 chunk-replay OOM) — 8 MB keeps
-      // any diagnostic value while capping render cost
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus, "graft-bench")
 
     // 4 timed runs per query (2 suite passes × 2 reps — see phase 2):
     // host timing noise on single runs measured at ±20% with occasional
@@ -133,7 +120,7 @@ object Bench {
     }
     // belt-and-braces: restore the session value before any timed run
     // even if a drain's finally was skipped by a JVM-level error
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     val warmSec = (System.nanoTime() - warmT0) / 1e9
     // a warm-only failure (cold artifact-write race, say) is not a
     // measured failure: report the two phases' failures separately

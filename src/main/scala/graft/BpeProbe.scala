@@ -23,43 +23,35 @@ import org.apache.spark.sql.SparkSession
   * measures TRAINING cost (pay-once by contract), not the steady-state
   * artifact read the registered queries measure.
   *
-  * Usage: runMain graft.BpeProbe <sfDir> [scans] [batch] [window]
+  * Usage: runMain graft.Tool bpe-probe <sfDir> [scans] [batch] [window]
   * Prints one JSON line with the per-scan curve.
   */
 object BpeProbe {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val sfDir = args(0)
     val scans = if (args.length > 1) args(1).toInt else 32
     val batch = if (args.length > 2) args(2).toInt else 64
     val window = if (args.length > 3) args(3).toInt else 32768
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val perScan = scala.collection.mutable.ListBuffer
       .empty[(Int, Int, Int, Double)]
     var capped = 0
-    try {
-      val (rows, _) = graft.operators.TextAnalysis.bpeTrainBatchedLoop(
-        spark, sfDir, scans, batch, window, keepFinal = false,
-        onScan = (k, cands, keeps, sec) => {
-          if (cands >= window && keeps < batch) capped += 1
-          System.err.println(f"[bpe-probe] scan $k%3d: candidates=$cands%6d " +
-            f"keeps=$keeps%3d sec=$sec%7.2f")
-          perScan += ((k, cands, keeps, sec))
-        })
-      val sec = (System.nanoTime() - t0) / 1e9
-      def r2(v: Double) = math.round(v * 100) / 100.0
-      val curve = perScan.map { case (k, c, kp, s) =>
-        s"""{"scan":$k,"cands":$c,"keeps":$kp,"sec":${r2(s)}}"""
-      }.mkString("[", ",", "]")
-      println(s"""{"probe":"bpe_train_batched","sf":"$sfDir","scans":$scans,""" +
-        s""""batch":$batch,"window":$window,"merges":${rows.size},""" +
-        s""""window_capped_scans":$capped,"sec":${r2(sec)},"per_scan":$curve}""")
-    } finally spark.stop()
+    val (rows, _) = graft.operators.TextAnalysis.bpeTrainBatchedLoop(
+      spark, sfDir, scans, batch, window, keepFinal = false,
+      onScan = (k, cands, keeps, sec) => {
+        if (cands >= window && keeps < batch) capped += 1
+        System.err.println(f"[bpe-probe] scan $k%3d: candidates=$cands%6d " +
+          f"keeps=$keeps%3d sec=$sec%7.2f")
+        perScan += ((k, cands, keeps, sec))
+      })
+    val sec = (System.nanoTime() - t0) / 1e9
+    def r2(v: Double) = math.round(v * 100) / 100.0
+    val curve = perScan.map { case (k, c, kp, s) =>
+      s"""{"scan":$k,"cands":$c,"keeps":$kp,"sec":${r2(s)}}"""
+    }.mkString("[", ",", "]")
+    println(s"""{"probe":"bpe_train_batched","sf":"$sfDir","scans":$scans,""" +
+      s""""batch":$batch,"window":$window,"merges":${rows.size},""" +
+      s""""window_capped_scans":$capped,"sec":${r2(sec)},"per_scan":$curve}""")
+    0
   }
 }

@@ -3,23 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one or more registered
-  * queries. Usage: runMain graft.Explain <sfDir> <query>[,<query>...]
+  * queries. Usage: runMain graft.Tool explain <sfDir> <query>[,<query>...]
   * (or 'all') [tree]. The optional `tree` mode prints the raw
   * `executedPlan` tree instead of explain("formatted") — the string
   * PLANS.md snippets and the plan-lint assertions are written against. */
 object Explain {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val which = if (args.length > 1) args(1) else "all"
     val tree = args.length > 2 && args(2) == "tree"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (which == "all") SparkEntry.queries.keys.toSeq.sorted
       else which.split(",").toSeq
@@ -29,6 +21,6 @@ object Explain {
       if (tree) println(df.queryExecution.executedPlan.toString)
       else df.explain("formatted")
     }
-    spark.stop()
+    0
   }
 }

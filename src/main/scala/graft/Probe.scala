@@ -5,27 +5,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB timing breakdown of one registered query — the
   * stage-level view graft.Bench's one-number-per-query output hides.
-  * Usage: runMain graft.Probe <sfDir> <query> [reps]
+  * Usage: runMain graft.Tool probe <sfDir> <query> [reps]
   *
   * Prints, per rep: DataFrame CONSTRUCTION seconds (where eager
   * localCheckpoints run), noop-sink EXECUTION seconds, and every Spark
-  * job's wall seconds in completion order. Env mirrors Bench
-  * (SPARK_GRAFT_CPUS). */
+  * job's wall seconds in completion order. */
 object Probe {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobs = java.util.Collections.synchronizedList(
@@ -55,6 +44,6 @@ object Probe {
         f"execute ${(t2 - t1) / 1e9}%.3f s, jobs ${js.length}")
       println("  " + js.map { case (id, s) => f"j$id=$s%.3f" }.mkString(" "))
     }
-    spark.stop()
+    0
   }
 }

@@ -61,7 +61,7 @@ import graft.sources.Tables
   * so the full registry runs against the output dir. n_chars is
   * recomputed to stay consistent with the grown text.
   *
-  * Usage: runMain graft.ScaleUp <srcSfDir> <outDir> <factor> [skew|longdoc]
+  * Usage: runMain graft.Tool scale-up <srcSfDir> <outDir> <factor> [skew|longdoc]
   */
 object ScaleUp {
   private val KeyOffset = 1000000000L
@@ -70,21 +70,14 @@ object ScaleUp {
     * oracle-replayable (the driver keys are dense sequential ids). */
   private def hot(key: Column): Column = key % 100 === 0
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val (src, out, factor, mode) = args match {
       case Array(s, o, f)            => (s, o, f.toInt, "uniform")
       case Array(s, o, f, "skew")    => (s, o, f.toInt, "skew")
       case Array(s, o, f, "longdoc") => (s, o, f.toInt, "longdoc")
-      case _ => sys.error("usage: ScaleUp <srcSfDir> <outDir> <factor> [skew|longdoc]")
+      case _ => sys.error("usage: scale-up <srcSfDir> <outDir> <factor> [skew|longdoc]")
     }
     val skewMode = mode == "skew"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def guardUniverse(df: DataFrame, keyCols: Seq[String]): Unit = {
       // universes must not overlap: a source key >= KeyOffset would
@@ -212,7 +205,7 @@ object ScaleUp {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[scaleup] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
     }
-    spark.stop()
+    0
   }
 
   /** Tiny pipe helper (Dataset.transform with nicer call-site syntax

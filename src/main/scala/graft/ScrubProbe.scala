@@ -22,58 +22,48 @@ import org.apache.spark.sql.functions._
   * with the two timings. The r13 spelling lives ONLY here, as the
   * measured-against baseline.
   *
-  * Usage: runMain graft.ScrubProbe [nDocs] [alsoOld]
+  * Usage: runMain graft.Tool scrub-probe [nDocs] [alsoOld]
   * (alsoOld=false skips the straggler plan when only the shipped
   * number is wanted.)
   */
 object ScrubProbe {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val alsoOld = if (args.length > 1) args(1).toBoolean else true
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scrub-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val header = (0 until 32).map(i => s"lic$i").mkString(" ")
-      // header chunk shared by ALL docs; tail chunk unique per doc
-      // materialized like a real table read: without the checkpoint the
-      // generator re-runs per scan and the timing compares generation
-      // counts, not scrub plans
-      val docs = spark.range(n).select(col("id").as("doc_id"),
-        concat(lit(header + " "), expr(
-          "concat_ws(' ', transform(sequence(0, 31), i -> concat('u', id, 'x', i)))"))
-          .as("text"))
-        .localCheckpoint()
-      // sum(length(clean_text)) keeps clean_text ALIVE through the
-      // timed plan — a bare counts-only aggregate would let Catalyst
-      // prune the text column out of the old spelling's window shuffle,
-      // which is precisely the cost under measurement
-      def time(f: => DataFrame): (Double, (Long, Long, Long)) = {
-        val t0 = System.nanoTime()
-        val agg = f.agg(sum("n_chunks"), sum("n_kept"),
-          sum(length(col("clean_text")))).head()
-        ((System.nanoTime() - t0) / 1e9,
-          (agg.getLong(0), agg.getLong(1), agg.getLong(2)))
-      }
-      val (newSec, newTotals) = time(graft.operators.Dedup.chunkDedupScrubOf(docs))
-      // every doc: 2 chunks; kept: doc 0 keeps both, others keep the tail
-      require((newTotals._1, newTotals._2) == ((2 * n, n + 1)),
-        s"shipped scrub totals wrong: $newTotals")
-      val oldSec = if (alsoOld) {
-        val (s, oldTotals) = time(r13WindowScrub(docs))
-        require(oldTotals == newTotals, s"plans disagree: $oldTotals vs $newTotals")
-        s
-      } else -1.0
-      println(s"""{"probe":"scrub-boilerplate","n_docs":$n,""" +
-        s""""hot_fp_occupancy":$n,"new_sec":${math.round(newSec * 100) / 100.0},""" +
-        s""""old_window_sec":${math.round(oldSec * 100) / 100.0}}""")
-    } finally spark.stop()
+    val header = (0 until 32).map(i => s"lic$i").mkString(" ")
+    // header chunk shared by ALL docs; tail chunk unique per doc
+    // materialized like a real table read: without the checkpoint the
+    // generator re-runs per scan and the timing compares generation
+    // counts, not scrub plans
+    val docs = spark.range(n).select(col("id").as("doc_id"),
+      concat(lit(header + " "), expr(
+        "concat_ws(' ', transform(sequence(0, 31), i -> concat('u', id, 'x', i)))"))
+        .as("text"))
+      .localCheckpoint()
+    // sum(length(clean_text)) keeps clean_text ALIVE through the
+    // timed plan — a bare counts-only aggregate would let Catalyst
+    // prune the text column out of the old spelling's window shuffle,
+    // which is precisely the cost under measurement
+    def time(f: => DataFrame): (Double, (Long, Long, Long)) = {
+      val t0 = System.nanoTime()
+      val agg = f.agg(sum("n_chunks"), sum("n_kept"),
+        sum(length(col("clean_text")))).head()
+      ((System.nanoTime() - t0) / 1e9,
+        (agg.getLong(0), agg.getLong(1), agg.getLong(2)))
+    }
+    val (newSec, newTotals) = time(graft.operators.Dedup.chunkDedupScrubOf(docs))
+    // every doc: 2 chunks; kept: doc 0 keeps both, others keep the tail
+    require((newTotals._1, newTotals._2) == ((2 * n, n + 1)),
+      s"shipped scrub totals wrong: $newTotals")
+    val oldSec = if (alsoOld) {
+      val (s, oldTotals) = time(r13WindowScrub(docs))
+      require(oldTotals == newTotals, s"plans disagree: $oldTotals vs $newTotals")
+      s
+    } else -1.0
+    println(s"""{"probe":"scrub-boilerplate","n_docs":$n,""" +
+      s""""hot_fp_occupancy":$n,"new_sec":${math.round(newSec * 100) / 100.0},""" +
+      s""""old_window_sec":${math.round(oldSec * 100) / 100.0}}""")
+    0
   }
 
   /** The r13 spelling, verbatim shape (Dedup.scala:1012-1030 at commit

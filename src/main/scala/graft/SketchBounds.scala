@@ -9,12 +9,12 @@ import graft.operators.{Events, Stats}
   * directory. The sketch rows are the only registry entries whose
   * justification is an error bound rather than a DuckDB hash; this
   * makes that justification scale with the rest of the evidence
-  * (25×/100× via the main) AND machine-checkable per round (r14:
+  * (25×/100× via `Tool sketch-bounds`) AND machine-checkable per round (r14:
   * [[Verify]] emits `sketch_bounds.json` next to the oracle dump and
   * [[Bench]] carries a `bounds` field in its JSON line, so the round
   * artifacts record measured-vs-bound instead of spec-trusting it).
   *
-  * Usage: runMain graft.SketchBounds <dataDir>
+  * Usage: runMain graft.Tool sketch-bounds [dataDir]
   * Prints one line per check with the measured max relative error /
   * max rank drift and the bound; exits nonzero if any bound is broken.
   */
@@ -78,24 +78,13 @@ object SketchBounds {
       s""""$name":{"measured":$m,"bound":$b,"ok":${measured <= bound}}"""
     }.mkString("{", ",", "}")
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-sketch-bounds")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val rows = measure(spark, dir)
     rows.foreach { case (name, measured, bound, detail) =>
       println(f"[sketch-bounds] $name%-34s measured=$measured%.5f bound=$bound%.5f ${if (measured <= bound) "OK" else "BROKEN"} ($detail)")
     }
-    spark.stop()
-    if (rows.exists { case (_, m, b, _) => m > b }) sys.exit(1)
+    if (rows.exists { case (_, m, b, _) => m > b }) 1 else 0
   }
 }

@@ -10,18 +10,11 @@ import graft.sources.Tables
   * query inventory. Worker liveness itself is native Spark (executor
   * registration + heartbeats, SURVEY.md §2.2) — nothing to reimplement.
   *
-  * Usage: runMain graft.Status [sfDir]
+  * Usage: runMain graft.Tool status [sfDir]
   */
 object Status {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     println(s"== graft engine status ==")
     println(s"spark ${spark.version}, master ${spark.sparkContext.master}, " +
       s"defaultParallelism ${spark.sparkContext.defaultParallelism}")
@@ -36,6 +29,6 @@ object Status {
       val mark = if (oracled(q)) "oracle" else "rows-only"
       println(f"  $q%-28s $mark")
     }
-    spark.stop()
+    0
   }
 }

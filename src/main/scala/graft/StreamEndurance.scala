@@ -7,8 +7,8 @@ import java.sql.Timestamp
 /** Dev tool: the multi-restart streaming endurance run at ARBITRARY
   * scale — the unit-scale spec (`StreamingSpec` "multi-restart
   * endurance") proves the kill/resume choreography on sf0.001; this
-  * main replays the same protocol against a scaled events table (point
-  * it at a ScaleUp output) with the RocksDB state-store provider
+  * tool replays the same protocol against a scaled events table (point
+  * it at a `scale-up` output) with the RocksDB state-store provider
   * pinned, so recovery is proven where state is big enough to matter
   * (the r10 100× sweep showed the in-heap store OOMs near 183 MB of
   * source; recovery must be exercised under the provider a cluster
@@ -29,7 +29,7 @@ import java.sql.Timestamp
   * [[graft.streaming.EventStream.lastClickAttribution]] — the
   * `flatMapGroupsWithState` single-row-per-user state with event-time
   * timeout EVICTION, whose skew hazard is one user holding ~10⁶ events
-  * (run this mode against a `ScaleUp … skew` output so recovery is
+  * (run this mode against a `scale-up … skew` output so recovery is
   * proven with a giant hot-key group in play). In lastclick mode the
   * final sink must equal the EXACT batch window replay of the
   * operator's semantics (running max-(ts, id) click per user in
@@ -54,41 +54,31 @@ import java.sql.Timestamp
   * (arrival-order-free, so the batch equality is exact); the final
   * sink must equal the batch DISTINCT md5(normText(text)).
   *
-  * Usage: runMain graft.StreamEndurance <sfDir> [cycles] [lastclick|docdedup|chunkdedup]
+  * Usage: runMain graft.Tool endurance <sfDir> [cycles] [lastclick|docdedup|chunkdedup]
   * Prints one JSON line: {"endurance":"pass", ...} and exits non-zero
   * on any violated invariant.
   */
 object StreamEndurance {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Int = {
     val sfDir = args(0)
     val cycles = if (args.length > 1) args(1).toInt else 3
-    val lastClickMode = args.contains("lastclick")
-    val docDedupMode = args.contains("docdedup")
-    val chunkDedupMode = args.contains("chunkdedup")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the point of the scaled run: recovery under the provider a
-      // cluster runs for big state, not the in-heap default
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // both are runtime SQL confs, read by each query at start(): 16
+    // state partitions, and — the point of the scaled run — recovery
+    // under the provider a cluster runs for big state, not the in-heap
+    // default
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    if (args.contains("docdedup")) runDocDedup(spark, sfDir, cycles)
+    else if (args.contains("chunkdedup")) runChunkDedup(spark, sfDir, cycles)
+    else runEvents(spark, sfDir, cycles, lastClickMode = args.contains("lastclick"))
+    0
+  }
+
+  /** The `sessions` and `lastclick` modes (see object scaladoc). */
+  private def runEvents(spark: SparkSession, sfDir: String, cycles: Int,
+      lastClickMode: Boolean): Unit = {
     import spark.implicits._
-
-    if (docDedupMode) {
-      try runDocDedup(spark, sfDir, cycles)
-      finally spark.stop()
-      return
-    }
-    if (chunkDedupMode) {
-      try runChunkDedup(spark, sfDir, cycles)
-      finally spark.stop()
-      return
-    }
-
     val inDir = java.nio.file.Files.createTempDirectory("graft-end25-in").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-end25-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-end25-ckpt").toString
@@ -227,16 +217,14 @@ object StreamEndurance {
     } finally {
       Seq(inDir, outDir, ckpt).foreach(d =>
         graft.sources.ArtifactCache.deleteRecursively(new java.io.File(d)))
-      spark.stop()
     }
   }
 
   /** The docdedup mode (see object scaladoc): documents sliced by
     * doc_id, fingerprint + dropDuplicates state, kill/resume cycles,
     * final sink == batch DISTINCT fingerprint set. private[graft] so
-    * StreamingSpec drives the SAME protocol at fixture scale (the
-    * caller owns the session — this method never stops it). */
-  private[graft] def runDocDedup(spark: org.apache.spark.sql.SparkSession,
+    * StreamingSpec drives the SAME protocol at fixture scale. */
+  private[graft] def runDocDedup(spark: SparkSession,
       sfDir: String, cycles: Int): Unit = {
     import org.apache.spark.sql.functions._
     val inDir = java.nio.file.Files.createTempDirectory("graft-endd-in").toString
@@ -346,7 +334,7 @@ object StreamEndurance {
     * seen-chunk set is the out-of-band index), so recovery cost is
     * offsets + sink log only. Final sink must equal the registered
     * batch query `dedup_chunk_incremental` row-for-row. */
-  private[graft] def runChunkDedup(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def runChunkDedup(spark: SparkSession,
       sfDir: String, cycles: Int): Unit = {
     import org.apache.spark.sql.functions._
     val inDir = java.nio.file.Files.createTempDirectory("graft-endc-in").toString

@@ -46,7 +46,7 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   * registrations of the engine's native expressions
   * (`graft_dot(a, b)`, `graft_rolling_hash(s)`).
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)`
+  * Usage: pass an instance to the session builder's `withExtensions`,
   * or `--conf spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -67,7 +67,9 @@ object GraftExtensions {
   /** Runtime opt-in for an ALREADY-BUILT session (build-time extensions
     * only apply to new sessions — `getOrCreate` on an existing one
     * silently ignores `withExtensions`). Uses the public experimental
-    * rule hook and the temp function registry. */
+    * rule hook and the temp function registry. Idempotent: a rule,
+    * strategy or function already in place is left as it is, so the
+    * per-construction calls of the native as-of join replace nothing. */
   def registerRuntime(spark: org.apache.spark.sql.SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(DotProductRewrite)) {
       spark.experimental.extraOptimizations =
@@ -77,9 +79,11 @@ object GraftExtensions {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", args => DotProduct(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", args => RollingHash(args.head), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    def register(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    register("graft_dot", args => DotProduct(args(0), args(1)))
+    register("graft_rolling_hash", args => RollingHash(args.head))
   }
 }

@@ -38,21 +38,20 @@ object Tables {
   /** Floor decision memo (None = scan already wide enough, leave it).
     * `df.rdd.getNumPartitions` forces a physical plan (file listing
     * included) per probe; the answer depends only on the file layout
-    * and the session parallelism, so pay it once per (dir, table,
-    * parallelism), not once per query construction (ADVICE r16). */
+    * and the session parallelism, so pay it once per (table
+    * fingerprint, parallelism), not once per query construction
+    * (ADVICE r16). The fingerprint, not the path, keys it: a table
+    * rewritten in place is a new layout and is sized again. */
   private val floorMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Int]]()
 
-  /** Total on-disk bytes of one table's parquet (file or directory). */
-  private def tableBytes(sfDir: String, name: String): Long = {
-    val p = java.nio.file.Paths.get(s"$sfDir/$name.parquet")
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      val st = java.nio.file.Files.walk(p)
-      try st.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally st.close()
-    }
+  /** Total bytes of one table's parquet (file or directory), through
+    * the path's Hadoop file system, so any `sfDir` scheme is sized;
+    * 0 when the table is absent. */
+  private[graft] def tableBytes(spark: SparkSession, sfDir: String, name: String): Long = {
+    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) 0L else fs.getContentSummary(path).getLength
   }
 
   /** Opt-in floored fact-table read for HEAVY per-row consumers (BPE
@@ -82,7 +81,8 @@ object Tables {
     val keys = floorKeys.getOrElse(name,
       sys.error(s"no floor key declared for table $name"))
     val want = spark.sparkContext.defaultParallelism
-    val target = floorMemo.computeIfAbsent(s"$sfDir/$name@$want", _ => {
+    val fp = ArtifactCache.fingerprint(spark, s"$sfDir/$name.parquet")
+    val target = floorMemo.computeIfAbsent(s"$fp@$want", _ => {
       // SIZE-ADAPTIVE target, not a blind jump to defaultParallelism
       // (guide §2.2 "fewer, larger partitions"): one partition per
       // ~2 MB of compressed source, clamped to [2, want]. A 32-way
@@ -93,7 +93,7 @@ object Tables {
       // planning enough splits on its own, so the cap (and the probe)
       // keep the floor the identity there.
       val parts = math.max(2L, math.min(want.toLong,
-        tableBytes(sfDir, name) / (2L << 20))).toInt
+        tableBytes(spark, sfDir, name) / (2L << 20))).toInt
       if (df.rdd.getNumPartitions >= parts) None else Some(parts)
     })
     target.fold(df)(n =>

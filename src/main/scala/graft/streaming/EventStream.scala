@@ -99,23 +99,6 @@ object EventStream {
     dir.toString
   }
 
-  /** Driver-contract entry for the streaming path: run the events
-    * parquet through the FILE-SOURCE streaming pipeline ([[readEvents]]
-    * → [[windowedCounts]]) to completion and return the result as a
-    * batch DataFrame — the incremental twin of `events_tumbling`,
-    * sharing its oracle, so streaming correctness is visible to the
-    * driver and not only to `sbt test`.
-    *
-    * `Trigger.AvailableNow` drains the source and stops; `complete`
-    * output mode emits EVERY window, including the ones a watermark
-    * would still hold open at end-of-input under `append` (the final
-    * hour of a finite corpus never closes in append mode because no
-    * later event advances the watermark past it — that would break
-    * batch parity). Complete mode ignores the watermark for eviction,
-    * which is exactly right here: the result must equal the batch
-    * aggregation over all input. The memory sink holds only the
-    * aggregated (hour × event_type) rows, not the events. Production
-    * wiring with a durable sink + checkpoint is [[startFileSink]]. */
   /** Streaming source over the corpus events parquet. The test corpus
     * stores events as a single parquet FILE; the file stream source
     * derives basePath from a non-glob path and then requires it to be
@@ -148,65 +131,6 @@ object EventStream {
       case _ => base
     }
   }
-
-  /** Drain a finite streaming frame to completion and hand back the
-    * result as a batch DataFrame. `Trigger.AvailableNow` consumes the
-    * source and stops; `complete` output mode emits EVERY window,
-    * including the ones a watermark would still hold open at
-    * end-of-input under `append` (the final window of a finite corpus
-    * never closes in append mode because no later event advances the
-    * watermark past it — that would break batch parity). Complete mode
-    * ignores the watermark for eviction, which is exactly right here:
-    * the result must equal the batch aggregation over all input. The
-    * memory sink holds only the aggregated rows, not the events. */
-  /** Total on-disk bytes under a file or directory (parquet outputs are
-    * directories of part files). */
-  private def inputBytes(path: String): Long = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      val st = java.nio.file.Files.walk(p)
-      try st.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally st.close()
-    }
-  }
-
-  /** State partitioning for a finite drain, sized to input VOLUME
-    * (~2 MB of compressed source per partition, clamped to [4, 16]) —
-    * neither a constant nor the host CPU count is the right dial.
-    * Measured both failure modes at sf0.1×10 (19 MB of events): pinned
-    * at 4, the session-window merge serializes (9.7 s, vs 6.7 s at 8+);
-    * at the session default of 32, per-partition state-store commits
-    * dominate (a stream-stream join keeps FOUR stores per partition:
-    * 9.1 s vs 3.0 s for the same 10× join). Production replaces the
-    * local file-size probe with source stats, same sizing rule. The
-    * probe is keyed by the table the stream ACTUALLY reads — sizing a
-    * documents drain off events bytes would track the wrong input. */
-  private def drainPartitions(sfDir: String, file: String = "events.parquet"): Int = {
-    val bytes = inputBytes(s"$sfDir/$file")
-    math.max(4, math.min(16, (bytes / (2L << 20)).toInt))
-  }
-
-  /** State-store provider for a finite drain, chosen by the same source
-    * probe: above ~64 MB of compressed source, switch the drain to the
-    * RocksDB provider (ships with Spark; state lives in native memory +
-    * local disk) instead of the default HDFS-backed store, which holds
-    * every partition's FULL key map on the JVM heap — and in local mode
-    * every partition shares ONE heap, so partition count cannot spread
-    * the state the way a cluster does. Measured: the r10 full-suite
-    * 100× sweep (183 MB events, ~5 M distinct dropDuplicates keys)
-    * OOM'd an 8 GB heap in `stream_dedup`'s drain under the in-heap
-    * store and passes under RocksDB; at ≤25× (≤46 MB) the in-heap
-    * store is measured fine and stays — its per-batch commit is
-    * cheaper at micro-state sizes, the same trade the partition clamp
-    * encodes. On a real cluster the dial is the same, just per
-    * executor: big state → RocksDB is the standard Spark posture. */
-  private def drainStateProvider(sfDir: String,
-      file: String = "events.parquet"): Option[String] =
-    if (inputBytes(s"$sfDir/$file") > (64L << 20))
-      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else None
 
   /** Drain a FINITE stream to completion across restarts — the reusable
     * form of the watermark-restore rule the endurance spec discovered
@@ -264,17 +188,48 @@ object EventStream {
 
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
 
-  private def runToCompletion(spark: SparkSession, out: DataFrame,
+  /** Drain the finite stream `out`, read from the corpus table `source`
+    * of `sfDir`, to completion and hand back the result as a batch
+    * DataFrame.
+    *
+    * One probe of the source's bytes sizes the drain; both settings are
+    * snapshotted by the query at start(), pinned for the drain and
+    * restored after. Neither a constant nor the host CPU count is the
+    * right dial, and the probe reads the table the stream ACTUALLY
+    * reads — sizing a documents drain off events bytes would track the
+    * wrong input. Production replaces the probe with source stats,
+    * same sizing rules:
+    *  - STATE PARTITIONS: ~2 MB of compressed source per partition,
+    *    clamped to [4, 16]. Measured both failure modes at sf0.1×10
+    *    (19 MB of events): pinned at 4, the session-window merge
+    *    serializes (9.7 s, vs 6.7 s at 8+); at the session default of
+    *    32, per-partition state-store commits dominate (a stream-stream
+    *    join keeps FOUR stores per partition: 9.1 s vs 3.0 s for the
+    *    same 10× join).
+    *  - STATE-STORE PROVIDER: above ~64 MB of compressed source, the
+    *    RocksDB provider (ships with Spark; state lives in native
+    *    memory + local disk) instead of the default HDFS-backed store,
+    *    which holds every partition's FULL key map on the JVM heap —
+    *    and in local mode every partition shares ONE heap, so
+    *    partition count cannot spread the state the way a cluster
+    *    does. Measured: the r10 full-suite 100× sweep (183 MB events,
+    *    ~5 M distinct dropDuplicates keys) OOM'd an 8 GB heap in
+    *    `stream_dedup`'s drain under the in-heap store and passes under
+    *    RocksDB; at ≤25× (≤46 MB) the in-heap store is measured fine
+    *    and stays — its per-batch commit is cheaper at micro-state
+    *    sizes, the same trade the partition clamp encodes. On a real
+    *    cluster the dial is the same, just per executor. */
+  private def runToCompletion(spark: SparkSession, sfDir: String, out: DataFrame,
       prefix: String, mode: OutputMode = OutputMode.Complete(),
-      partitions: Int = 4, stateProvider: Option[String] = None,
-      rowScaled: Boolean = false,
+      source: String = "events", rowScaled: Boolean = false,
       perBatch: Option[DataFrame => DataFrame] = None): DataFrame = {
     val name = s"${prefix}_${runSeq.incrementAndGet()}"
-    // Pin the drain's state partitioning and (for large sources) its
-    // state-store provider — both snapshotted by the query at start()
-    // — and restore the session values after: see [[drainPartitions]] /
-    // [[drainStateProvider]] for the measured sizing rationales.
-    //
+    val bytes = graft.sources.Tables.tableBytes(spark, sfDir, source)
+    val partitions = math.max(4, math.min(16, (bytes / (2L << 20)).toInt))
+    val stateProvider =
+      if (bytes > (64L << 20))
+        Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else None
     // SINK CHOICE is a scale contract: the memory sink materializes
     // every output row in the DRIVER heap as a local relation, and a
     // local relation re-parallelizes by EMBEDDING its rows in task
@@ -364,10 +319,8 @@ object EventStream {
     * `sbt test`. Production wiring with a durable sink + checkpoint is
     * [[startFileSink]]. */
   def tumblingViaStream(spark: SparkSession, sfDir: String): DataFrame =
-    runToCompletion(spark,
-      windowedCounts(corpusEventsSource(spark, sfDir)), "graft_stream_tumbling",
-      partitions = drainPartitions(sfDir),
-      stateProvider = drainStateProvider(sfDir))
+    runToCompletion(spark, sfDir,
+      windowedCounts(corpusEventsSource(spark, sfDir)), "graft_stream_tumbling")
       .orderBy("window_start", "event_type")
 
   /** Sliding-window twin of `events_sliding` through the streaming
@@ -383,9 +336,7 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
       .agg(count(lit(1)).as("n"), rd(qsum(col("value"), 6), 4).as("sum_value"))
       .select(col("w.start").as("window_start"), col("n"), col("sum_value"))
-    runToCompletion(spark, slid, "graft_stream_sliding",
-      partitions = drainPartitions(sfDir),
-      stateProvider = drainStateProvider(sfDir))
+    runToCompletion(spark, sfDir, slid, "graft_stream_sliding")
       .orderBy("window_start")
   }
 
@@ -413,10 +364,8 @@ object EventStream {
     * incremental twin of `events_sessionize` with the same columns and
     * oracle. Exercises session-merge state, not just keyed windows. */
   def sessionizeViaStream(spark: SparkSession, sfDir: String): DataFrame =
-    runToCompletion(spark, sessionAgg(corpusEventsSource(spark, sfDir)),
+    runToCompletion(spark, sfDir, sessionAgg(corpusEventsSource(spark, sfDir)),
       "graft_stream_sessionize",
-      partitions = drainPartitions(sfDir),
-      stateProvider = drainStateProvider(sfDir),
       rowScaled = true) // one row per (user, session): grows with input
       .orderBy("user_id", "session_start")
 
@@ -471,9 +420,7 @@ object EventStream {
       src.filter(col("event_type") === "click"),
       src.filter(col("event_type") === "purchase"))
     val rounded = joined.withColumn("purchase_value", rd(col("purchase_value"), 4))
-    runToCompletion(spark, rounded, "graft_stream_attribution", OutputMode.Append(),
-      partitions = drainPartitions(sfDir),
-      stateProvider = drainStateProvider(sfDir),
+    runToCompletion(spark, sfDir, rounded, "graft_stream_attribution", OutputMode.Append(),
       rowScaled = true) // one row per click→purchase match: grows with input
       .orderBy("click_id", "purchase_id")
   }
@@ -574,9 +521,7 @@ object EventStream {
       .select(col("user_id"), col("event_type"),
         date_trunc("hour", col("ts")).as("hour_start"))
       .dropDuplicates("user_id", "event_type", "hour_start")
-    runToCompletion(spark, keys, "graft_stream_dedup", OutputMode.Append(),
-      partitions = drainPartitions(sfDir),
-      stateProvider = drainStateProvider(sfDir),
+    runToCompletion(spark, sfDir, keys, "graft_stream_dedup", OutputMode.Append(),
       rowScaled = true) // one row per distinct key: ~5 M at 100×
       .orderBy("user_id", "event_type", "hour_start")
   }
@@ -600,9 +545,7 @@ object EventStream {
         when(col("user_events") >= 70, lit("heavy")).otherwise(lit("light")))
       .groupBy("event_type", "band")
       .agg(count(lit(1)).as("n"), rd(qsum(col("value"), 6), 4).as("sum_value"))
-    runToCompletion(spark, banded, "graft_stream_enrich",
-      partitions = drainPartitions(sfDir),
-      stateProvider = drainStateProvider(sfDir))
+    runToCompletion(spark, sfDir, banded, "graft_stream_enrich")
       .orderBy("event_type", "band")
   }
 
@@ -641,10 +584,9 @@ object EventStream {
       .join(broadcast(priorIdx), Seq("fingerprint"), "left_outer")
       .select(col("doc_id"), col("fingerprint"), col("dup_of"),
         col("dup_of").isNull.as("is_new"))
-    runToCompletion(spark, verdicts, "graft_stream_doc_dedup",
+    runToCompletion(spark, sfDir, verdicts, "graft_stream_doc_dedup",
       OutputMode.Append(),
-      partitions = drainPartitions(sfDir, "documents.parquet"),
-      stateProvider = drainStateProvider(sfDir, "documents.parquet"),
+      source = "documents",
       rowScaled = true) // one verdict per arriving doc: grows with input
       .orderBy("doc_id")
   }
@@ -683,10 +625,9 @@ object EventStream {
       .select("doc_id", "text")
     val verdicts = graft.operators.Dedup.chunkVerdictsFrom(
       arrivals, broadcast(priorFps), chunkSize)
-    runToCompletion(spark, verdicts, "graft_stream_chunk_dedup",
+    runToCompletion(spark, sfDir, verdicts, "graft_stream_chunk_dedup",
       OutputMode.Append(),
-      partitions = drainPartitions(sfDir, "documents.parquet"),
-      stateProvider = drainStateProvider(sfDir, "documents.parquet"),
+      source = "documents",
       rowScaled = true, // one verdict per arriving doc after the rollup
       perBatch = Some(graft.operators.Dedup.chunkNoveltyRollup))
       .orderBy("doc_id")
@@ -725,10 +666,9 @@ object EventStream {
       .parquet(path + "*")
       .filter(col("doc_id") % 2 === 1)
       .select("doc_id", "text")
-    runToCompletion(spark, arrivals, "graft_stream_classifier",
+    runToCompletion(spark, sfDir, arrivals, "graft_stream_classifier",
       OutputMode.Append(),
-      partitions = drainPartitions(sfDir, "documents.parquet"),
-      stateProvider = drainStateProvider(sfDir, "documents.parquet"),
+      source = "documents",
       rowScaled = true, // one verdict per arriving doc
       perBatch = Some(b => graft.operators.TextAnalysis
         .classifierScoreWith(spark, sfDir, b, wtab)))
@@ -971,9 +911,7 @@ object EventStream {
     val out = lastClickAttribution(corpusEventsSource(spark, sfDir).as[Ev])
       .toDF()
       .withColumn("purchase_value", rd(col("purchase_value"), 4))
-    runToCompletion(spark, out, "graft_stream_lastclick", OutputMode.Append(),
-      partitions = drainPartitions(sfDir),
-      stateProvider = drainStateProvider(sfDir),
+    runToCompletion(spark, sfDir, out, "graft_stream_lastclick", OutputMode.Append(),
       rowScaled = true)
       .orderBy("purchase_id")
   }

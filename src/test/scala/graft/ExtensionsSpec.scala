@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import graft.plans.GraftExtensions
 
@@ -16,6 +17,20 @@ class ExtensionsSpec extends SparkSpec {
     val s = TestSpark.spark.newSession()
     GraftExtensions.registerRuntime(s)
     s
+  }
+
+  test("registerRuntime is idempotent: a second call replaces nothing") {
+    val registry = extSpark.sessionState.functionRegistry
+    // a non-capturing builder lambda is one JVM-wide instance, so a
+    // replaced registration shows in its fresh ExpressionInfo
+    def entries = Seq("graft_dot", "graft_rolling_hash").map(FunctionIdentifier(_))
+      .flatMap(id => Seq(registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get))
+    val (rules, strategies, before) = (extSpark.experimental.extraOptimizations,
+      extSpark.experimental.extraStrategies, entries)
+    GraftExtensions.registerRuntime(extSpark)
+    assert(extSpark.experimental.extraOptimizations eq rules)
+    assert(extSpark.experimental.extraStrategies eq strategies)
+    entries.zip(before).foreach { case (now, was) => assert(now eq was) }
   }
 
   test("optimizer rule rewrites HOF dot product to native DotProduct") {

@@ -5,20 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM; forked by sbt). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // cap per-job plan-description rendering (see Bench.scala): deep
-      // checkpoint chains with AQE subtrees otherwise OOM on the string
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val cpus = 4
+  lazy val spark: SparkSession = GraftSession.local(cpus, "graft-test")
   val sf = "/root/testdata/sf0.001"
 }
 
