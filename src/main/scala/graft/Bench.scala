@@ -44,8 +44,8 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).toSet)
     val excluded = sys.env.get("SPARK_GRAFT_EXCLUDE")
       .map(_.split(',').map(_.trim).toSet).getOrElse(Set.empty)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) && !excluded(name) }
+    val selected = SparkEntry.specs.sortBy(_.name)
+      .filter(s => only.forall(_.contains(s.name)) && !excluded(s.name))
     // Phase 1 — artifact pre-warm: one untimed pass over every query so
     // fingerprint-keyed pay-once work (bucketed-table writes, ANN/pair
     // indexes, footer reads) lands HERE, reported as one separate
@@ -64,15 +64,15 @@ object Bench {
     // only the untimed pay-once phase parallelizes.
     val warmT0 = System.nanoTime()
     val warmPar = sys.env.getOrElse("SPARK_GRAFT_WARM_PAR", "8").toInt
-    // The stream_* drains pin-and-restore the SESSION-global
+    // The drains (`drain = true`) pin-and-restore the SESSION-global
     // spark.sql.shuffle.partitions (EventStream.runToCompletion). Run
     // them OUTSIDE the pool, serially: a batch query racing a drain's
     // pinned low value (4-16) would write its pay-once artifacts with
     // that partition count, and those artifacts persist into the timed
     // phase — the post-warm re-pin fixes the session value, not files
     // already on disk.
-    val (drains, pooled) = selected.partition(_._1.startsWith("stream_"))
-    if (warmPar <= 1) selected.foreach { case (name, fn) => timeOnce(name, fn): Unit }
+    val (drains, pooled) = selected.partition(_.drain)
+    if (warmPar <= 1) selected.foreach(s => timeOnce(s.name, s.build): Unit)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(warmPar)
       // job group per warm task: cancellation must reach the SPARK JOBS,
@@ -80,10 +80,10 @@ object Bench {
       // the waiter while the already-submitted job keeps stealing
       // executor cores through the drains/timed phase
       val warmGroup = "graft-warm"
-      try pooled.map { case (name, fn) =>
+      try pooled.map { s =>
         pool.submit(new Runnable { def run(): Unit = {
-          spark.sparkContext.setJobGroup(warmGroup, name, interruptOnCancel = true)
-          try timeOnce(name, fn): Unit
+          spark.sparkContext.setJobGroup(warmGroup, s.name, interruptOnCancel = true)
+          try timeOnce(s.name, s.build): Unit
           finally spark.sparkContext.clearJobGroup()
         } })
       }.foreach(_.get())
@@ -116,7 +116,7 @@ object Bench {
           spark.sparkContext.cancelJobGroup(warmGroup)
         }
       }
-      drains.foreach { case (name, fn) => timeOnce(name, fn): Unit }
+      drains.foreach(s => timeOnce(s.name, s.build): Unit)
     }
     // belt-and-braces: restore the session value before any timed run
     // even if a drain's finally was skipped by a JVM-level error
@@ -151,9 +151,7 @@ object Bench {
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
     def onePass(): Seq[(String, Double)] =
-      selected.map { case (name, fn) =>
-        name -> Seq.fill(reps)(timeOnce(name, fn)).min
-      }
+      selected.map(s => s.name -> Seq.fill(reps)(timeOnce(s.name, s.build)).min)
     // CLEAN-WINDOW retry: a contended host shows up as pass-sum spread
     // (r9 read +35% on untouched code from one multi-minute external
     // burst). If the spread across the baseline passes exceeds 5%,

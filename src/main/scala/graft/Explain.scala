@@ -13,7 +13,7 @@ object Explain {
     val which = if (args.length > 1) args(1) else "all"
     val tree = args.length > 2 && args(2) == "tree"
     val names =
-      if (which == "all") SparkEntry.queries.keys.toSeq.sorted
+      if (which == "all") SparkEntry.specs.map(_.name).sorted
       else which.split(",").toSeq
     names.foreach { name =>
       println(s"\n========== $name ==========")

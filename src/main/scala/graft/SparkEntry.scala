@@ -1,15 +1,39 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.QuerySpec.{Bound, Oracle}
 import graft.operators._
+import graft.streaming.EventStream
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its name, its builder over (session, data
+  * directory), how its rows are checked, and whether it drains a
+  * Structured Streaming query to completion. */
+final case class QuerySpec(name: String,
+    build: (SparkSession, String) => DataFrame, check: QuerySpec.Check,
+    drain: Boolean = false)
+
+object QuerySpec {
+  /** How a query's rows are checked: every query has exactly one. */
+  sealed trait Check
+
+  /** The rows equal what DuckDB returns for `sql` on the same tables. */
+  final case class Oracle(sql: String) extends Check
+
+  /** An engine-specific sketch no SQL can replay: `measure(spark, dir)`
+    * gives (measured error, bound, detail) and passes when the measured
+    * error is at most the bound. */
+  final case class Bound(
+      measure: (SparkSession, String) => (Double, Double, String)) extends Check
+}
+
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 (and the training-data
-  * pipeline extensions) registers here: a Spark query in [[queries]] and,
-  * when ANSI-SQL-expressible, a DuckDB oracle in [[oracleSql]]. Column
-  * names are aliased identically on both sides (the driver's compare
-  * sorts columns by name before hashing).
+  * pipeline extensions) registers once in [[specs]]: its Spark builder
+  * and either a DuckDB oracle or a sketch bound. [[queries]] and
+  * [[oracleSql]] are projections of that list. Column names are aliased
+  * identically on both sides (the driver's compare sorts columns by name
+  * before hashing).
   */
 object SparkEntry {
 
@@ -18,320 +42,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     WordCount.topK(spark, "/root/testdata/sf0.001", 100)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- reference surface (SURVEY.md §2.1, O1-O12) ---
-    "wordcount_topk" -> ((s, d) => WordCount.topK(s, d, 100)),
-    "wordcount_full" -> ((s, d) => WordCount.full(s, d)),
-    // O2/O3 end-to-end: same counts, but ingested through a real
-    // on-disk newline-delimited text file via spark.read.text
-    "wordcount_textfile" -> ((s, d) => WordCount.fullFromTextFile(s, d)),
-    "events_heavy_users" -> ((s, d) => SkewTools.heavyUsers(s, d)),
-    "letter_buckets" -> ((s, d) => WordCount.letterBuckets(s, d)),
-    // --- relational surface (SURVEY.md §7.2 PR3; absent in reference §2.3) ---
-    "q1_pricing_summary" -> (Relational.q1PricingSummary _),
-    "q3_shipping_priority" -> (Relational.q3ShippingPriority _),
-    "q5_region_revenue" -> (Relational.q5RegionRevenue _),
-    "top_customers" -> (Relational.topCustomers _),
-    "order_priority_exists" -> (Relational.orderPriorityExists _),
-    "customers_no_orders" -> (Relational.customersNoOrders _),
-    "nation_customer_stats" -> (Relational.nationCustomerStats _),
-    "window_top_orders" -> (Relational.windowTopOrders _),
-    "rollup_lineitem" -> (Relational.rollupLineitem _),
-    "cube_orders" -> (Relational.cubeOrders _),
-    "grouping_sets_orders" -> (Relational.groupingSetsOrders _),
-    "window_analytics_orders" -> (Relational.windowAnalyticsOrders _),
-    "q8_market_share" -> ((s, d) => Relational.q8MarketShare(s, d)),
-    "q6_forecast_revenue" -> ((s, d) => Relational.q6ForecastRevenue(s, d)),
-    "q14_promo_share" -> ((s, d) => Relational.q14PromoShare(s, d)),
-    "events_interarrival" -> ((s, d) => Events.interarrivalStats(s, d)),
-    "q10_returned_items" -> ((s, d) => Relational.q10ReturnedItems(s, d)),
-    "q17_small_quantity" -> ((s, d) => Relational.q17SmallQuantityRevenue(s, d)),
-    "q18_large_orders" -> ((s, d) => Relational.q18LargeVolumeOrders(s, d)),
-    "q19_disjunctive_revenue" -> ((s, d) => Relational.q19DisjunctiveRevenue(s, d)),
-    "q2_min_cost_supplier" -> ((s, d) => Relational.q2MinCostSupplier(s, d)),
-    "q7_nation_trade" -> ((s, d) => Relational.q7VolumeShipping(s, d)),
-    "q9_product_profit" -> ((s, d) => Relational.q9ProductProfit(s, d)),
-    "q11_important_parts" -> ((s, d) => Relational.q11ImportantParts(s, d)),
-    "q12_delay_classes" -> (Relational.q12DelayClasses _),
-    "q13_order_distribution" -> (Relational.q13OrderCountDistribution _),
-    "q16_supplier_variety" -> ((s, d) => Relational.q16SupplierVariety(s, d)),
-    "q20_dominant_suppliers" -> ((s, d) => Relational.q20DominantSuppliers(s, d)),
-    "q21_waiting_suppliers" -> ((s, d) => Relational.q21WaitingSuppliers(s, d)),
-    "q22_dormant_customers" -> ((s, d) => Relational.q22DormantCustomers(s, d)),
-    "corpus_vocab_growth" -> ((s, d) => TextAnalysis.vocabGrowth(s, d)),
-    "events_salted_enrich" -> ((s, d) => SkewTools.saltedUserEnrich(s, d)),
-    "set_ops_active_customers" -> (Relational.setOpsActiveCustomers _),
-    "scalar_functions" -> (Relational.scalarFunctions _),
-    "brand_top_parts" -> (Relational.brandTopParts _),
-    // --- text analysis (training-data pipeline ops) ---
-    "text_token_stats" -> (TextAnalysis.tokenStats _),
-    "text_quality" -> (TextAnalysis.qualityScore _),
-    "text_lang_id" -> (TextAnalysis.langId _),
-    "text_fingerprint" -> (TextAnalysis.fingerprint _),
-    "text_pii_scrub" -> (TextAnalysis.piiScrub _),
-    "text_chunks" -> ((s, d) => TextAnalysis.chunkDocs(s, d)),
-    "text_pack" -> ((s, d) => TextAnalysis.packManifest(s, d)),
-    "text_winnowing" -> ((s, d) => TextAnalysis.winnowingSketch(s, d)),
-    "corpus_shuffle" -> ((s, d) => TextAnalysis.epochShuffle(s, d)),
-    "corpus_mixture" -> ((s, d) => TextAnalysis.mixtureSample(s, d)),
-    "curation_keep_best" -> ((s, d) => TextAnalysis.keepBestPerCluster(s, d)),
-    "curation_keep_best_winnow" -> ((s, d) => TextAnalysis.keepBestPerClusterWinnow(s, d)),
-    "text_tfidf" -> ((s, d) => TextAnalysis.tfidfTopTerms(s, d)),
-    "text_unigram_logprob" -> ((s, d) => TextAnalysis.unigramLogProb(s, d)),
-    "corpus_dsir_select" -> ((s, d) => TextAnalysis.dsirSelect(s, d)),
-    "corpus_apply_diff" -> ((s, d) => TextAnalysis.applyDiff(s, d)),
-    "corpus_profile" -> ((s, d) => TextAnalysis.corpusProfile(s, d)),
-    "curation_quality_threshold" -> ((s, d) => TextAnalysis.qualityBudgetCalibration(s, d)),
-    "corpus_vocab_stats" -> ((s, d) => TextAnalysis.vocabStats(s, d)),
-    "corpus_ccnet_buckets" -> ((s, d) => TextAnalysis.ccnetBuckets(s, d)),
-    "dedup_soft_weights" -> ((s, d) => Dedup.softDedupWeights(s, d)),
-    "dedup_cluster_histogram" -> ((s, d) => Dedup.clusterSizeHistogram(s, d)),
-    "corpus_quality_sample" -> ((s, d) => TextAnalysis.qualitySample(s, d)),
-    "corpus_weighted_sample" -> ((s, d) => TextAnalysis.weightedSample(s, d)),
-    "corpus_split_assign" -> ((s, d) => TextAnalysis.splitAssign(s, d)),
-    "corpus_source_overlap" -> ((s, d) => TextAnalysis.sourceVocabOverlap(s, d)),
-    "corpus_bigrams" -> ((s, d) => TextAnalysis.bigramStats(s, d)),
-    "text_bpe_merge" -> ((s, d) => TextAnalysis.bpeMergeStep(s, d)),
-    "text_bpe_train" -> ((s, d) => TextAnalysis.bpeTrain(s, d)),
-    "text_bpe_encode_holdout" -> ((s, d) => TextAnalysis.bpeEncodeHoldout(s, d)),
-    "text_bpe_apply" -> ((s, d) => TextAnalysis.bpeEncode(s, d)),
-    // the k>>5 regime: 8 scans x up-to-64 disjoint merges (~318 learned
-    // on this corpus) instead of one corpus scan per merge
-    "text_bpe_train_batched" -> ((s, d) => TextAnalysis.bpeTrainBatched(s, d)),
-    "text_bpe_holdout_batched" ->
-      ((s, d) => TextAnalysis.bpeEncodeHoldoutBatched(s, d)),
-    "text_bpe_apply_batched" -> ((s, d) => TextAnalysis.bpeEncodeBatched(s, d)),
-    "text_bigram_logprob" -> ((s, d) => TextAnalysis.bigramLogProb(s, d)),
-    "corpus_zipf" -> ((s, d) => TextAnalysis.zipfFit(s, d)),
-    "corpus_df_spectrum" -> ((s, d) => TextAnalysis.docFrequencySpectrum(s, d)),
-    "corpus_split_leakage" -> ((s, d) => TextAnalysis.splitLeakage(s, d)),
-    "corpus_split_repair" -> ((s, d) => TextAnalysis.splitRepair(s, d)),
-    "corpus_export_manifest" -> ((s, d) => TextAnalysis.exportManifest(s, d)),
-    "corpus_split_budget" -> ((s, d) => TextAnalysis.splitBudget(s, d)),
-    "text_boilerplate_by_source" -> ((s, d) => TextAnalysis.boilerplateBySource(s, d)),
-    "text_hash_classifier" -> ((s, d) => TextAnalysis.hashClassifier(s, d)),
-    "text_readability" -> ((s, d) => TextAnalysis.readability(s, d)),
-    "text_mixed_language" -> ((s, d) => TextAnalysis.mixedLanguage(s, d)),
-    "text_length_histogram" -> ((s, d) => TextAnalysis.lengthHistogram(s, d)),
-    "embedding_decontamination" -> ((s, d) => Similarity.embeddingDecontaminate(s, d)),
-    "corpus_diff" -> ((s, d) => TextAnalysis.snapshotDiff(s, d)),
-    // chunk-grain churn accounting over the same synthetic refresh —
-    // both snapshots' fp sets are stored artifacts
-    "corpus_chunk_diff" -> ((s, d) => TextAnalysis.chunkSnapshotDiff(s, d)),
-    // the trained quality classifier: k-step deterministic logistic
-    // regression over hashed features, gate-labeled; weights stored
-    "text_classifier_train" -> ((s, d) => TextAnalysis.classifierTrain(s, d)),
-    "text_classifier_score" -> ((s, d) => TextAnalysis.classifierScore(s, d)),
-    // bounded-sample trainer (r16): k-doc deterministic sample, same
-    // 8-step replay — the flat-cold-cost posture of a 100 TB catalog
-    "text_classifier_train_sampled" ->
-      ((s, d) => TextAnalysis.classifierTrainSampled(s, d)),
-    // full-corpus inference under the sample-trained weights
-    "text_classifier_score_sampled" ->
-      ((s, d) => TextAnalysis.classifierScoreSampled(s, d)),
-    // the LEARNED curation gate (r16): classifier prediction replaces
-    // the heuristic quality threshold in the pipeline keep set
-    "curation_classifier" -> ((s, d) => TextAnalysis.curationClassifier(s, d)),
-    // generalization evidence: train on even docs, score the unseen odd
-    "text_classifier_holdout" -> ((s, d) => TextAnalysis.classifierHoldout(s, d)),
-    "dedup_winnowing" -> ((s, d) => Dedup.winnowingPairsMaterialized(s, d)),
-    // --- deduplication ---
-    "dedup_exact" -> (Dedup.exact _),
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairsMaterialized(s, d)),
-    "dedup_minhash_lsh" -> ((s, d) => Dedup.minhashLshPairs(s, d)),
-    "dedup_simhash" -> ((s, d) => Dedup.simhashPairs(s, d)),
-    // ROUTING: this is the EXACT cosine threshold join — inherently
-    // Ω(N²) compares (measured p=1.96 to 25×; the θ=0.35 continuum on
-    // this corpus defeats banding, see the operator scaladoc). The r10
-    // centroid+residual block-pair bound prunes provably-empty block
-    // pairs without changing a row, but on near-uniform data the right
-    // tool is a different operator: θ high / top-k → the ANN paths
-    // (ann_topk_lsh / ann_topk_ivf / ann_knn_join); bounded compare
-    // budget with accepted recall → dedup_semantic (within-cell
-    // SemDeDup). Keep this query for when exactness is the contract.
-    "dedup_embedding" -> ((s, d) => Dedup.embeddingNearDupPairsBlocked(s, d)),
-    "dedup_semantic" -> ((s, d) => Dedup.semanticDedupPairs(s, d)),
-    // the prune-list form: one keeper verdict per vector, output LINEAR
-    // in the corpus at any duplication level (the all-pairs view above
-    // owes k²/2 rows per k-clone group — both contracts ship)
-    "dedup_semantic_keepers" -> ((s, d) => Dedup.semanticDedupKeepers(s, d)),
-    // the BOUNDED pair form: top-m same-cell neighbors per vector —
-    // ≤ N·m output rows at any duplication, so 100×+ corpora get pairs
-    // without raising the budget (candidates cut to m+1 lowest ids per
-    // partner group at canonical level; never expands member pairs)
-    "dedup_semantic_topm" -> ((s, d) => Dedup.semanticDedupTopM(s, d)),
-    // the guard's pricing made observable: exact would-be expansion of
-    // both all-pairs views, no expansion executed (oracle counts the
-    // replayed member-level pair tables independently)
-    "dedup_pair_budgets" -> ((s, d) => Dedup.pairExpansionReport(s, d)),
-    "text_decontamination" -> ((s, d) => Dedup.decontaminate(s, d)),
-    "text_bloom_decontamination" -> ((s, d) => Dedup.bloomDecontaminate(s, d)),
-    "dedup_incremental" -> ((s, d) => Dedup.incrementalDedup(s, d)),
-    "text_dup_spans" -> ((s, d) => Dedup.dupSpans(s, d)),
-    "text_line_dedup" -> ((s, d) => Dedup.lineDedup(s, d)),
-    "text_dup_span_merge" -> ((s, d) => Dedup.dupSpanMerge(s, d)),
-    "text_scrub_dup_spans" -> ((s, d) => Dedup.dupSpanScrub(s, d)),
-    "text_repetition" -> ((s, d) => TextAnalysis.repetitionSignals(s, d)),
-    "corpus_split_repair_converged" ->
-      ((s, d) => TextAnalysis.splitRepairConverged(s, d)),
-    "dedup_edit_distance" -> ((s, d) => Dedup.editDistancePairs(s, d)),
-    // chunk-grain dedup (r13): the linear interface the DP guard's
-    // refusal names for book-length near-duplicate editions
-    "dedup_chunk_keepers" -> ((s, d) => Dedup.chunkDedupKeepers(s, d)),
-    "dedup_chunk_rate" -> ((s, d) => Dedup.chunkDedupRate(s, d)),
-    // content-defined chunking: boundaries declared by token content
-    // (md5 suffix rule), so insertions REALIGN instead of shifting
-    // every boundary — the shift-robust sibling of text_chunks
-    "text_cdc_chunks" -> ((s, d) => TextAnalysis.cdcChunkDocs(s, d)),
-    "dedup_cdc_keepers" -> ((s, d) => Dedup.cdcDedupKeepers(s, d)),
-    // chunk-dedup writeback: every duplicated chunk survives ONCE, at
-    // its first occurrence; per-doc cleaned text in chunk order
-    "dedup_chunk_scrub" -> ((s, d) => Dedup.chunkDedupScrub(s, d)),
-    // CDC-grain writeback (r14): the same first-occurrence scrub over
-    // content-defined chunks — completes the CDC family symmetrically
-    "dedup_cdc_scrub" -> ((s, d) => Dedup.cdcDedupScrub(s, d)),
-    // chunk-grain incremental dedup (r14): arrivals' per-doc novelty
-    // vs the prior corpus's distinct-chunk index
-    "dedup_chunk_incremental" -> ((s, d) => Dedup.chunkDedupIncremental(s, d)),
-    // catalog refresh closing the continuous-ingest loop: merge the
-    // odd-id batch into the stored even-id keeper index (mergeable
-    // aggregates; must equal the from-scratch index over the corpus)
-    "dedup_chunk_index_refresh" -> ((s, d) => Dedup.chunkIndexRefresh(s, d)),
-    // sketch-index refresh by merge (r16): the shingle/minhash/simhash
-    // indexes absorb the odd-id arrivals against the stored even-id
-    // artifacts; shingle emits the SQL-replayable canonical profile,
-    // the signature families are asserted END-TO-END (pair queries
-    // served from the refreshed indexes share the from-scratch oracles)
-    "dedup_shingle_index_refresh" ->
-      ((s, d) => Dedup.shingleIndexRefresh(s, d)),
-    "dedup_minhash_index_refresh" ->
-      ((s, d) => Dedup.minhashLshPairsRefreshed(s, d)),
-    "dedup_simhash_index_refresh" ->
-      ((s, d) => Dedup.simhashPairsRefreshed(s, d)),
-    "corpus_sample_per_group" -> ((s, d) => TextAnalysis.samplePerGroup(s, d)),
-    "layout_zorder" -> ((s, d) => Layout.zorderLayout(s, d)),
-    "layout_bucketed_join" -> ((s, d) => Layout.bucketedOrderRevenue(s, d)),
-    // --- similarity search ---
-    "ann_topk_brute" -> ((s, d) => Similarity.bruteForceTopK(s, d)),
-    "ann_topk_lsh" -> ((s, d) => Similarity.lshTopK(s, d)),
-    "ann_range_search" -> ((s, d) => Similarity.rangeSearch(s, d)),
-    // --- events: JSON, event-time windows, sessionization ---
-    "events_json_stats" -> (Events.jsonStats _),
-    "events_tumbling" -> (Events.tumblingHourly _),
-    // the file-source Structured Streaming path, run to completion —
-    // shares events_tumbling's oracle, so stream/batch parity is a
-    // driver-checked fact, not only an sbt-test one
-    "stream_tumbling" -> (graft.streaming.EventStream.tumblingViaStream _),
-    "events_sliding" -> (Events.slidingHourly _),
-    "stream_sliding" -> (graft.streaming.EventStream.slidingViaStream _),
-    "layout_compaction_plan" -> ((s, d) => Layout.compactionPlan(s, d)),
-    "events_sessionize" -> (Events.sessionize _),
-    "stream_sessionize" -> (graft.streaming.EventStream.sessionizeViaStream _),
-    "stream_click_attribution" ->
-      ((s, d) => graft.streaming.EventStream.clickAttributionViaStream(s, d)),
-    // the LINEAR attribution interface: one latest-click state row per
-    // user, one output row per attributed purchase — skew-safe where
-    // the all-pairs join above is quadratic on a hot user
-    "stream_last_click" -> (graft.streaming.EventStream.lastClickViaStream _),
-    "stream_dedup" -> (graft.streaming.EventStream.dedupViaStream _),
-    "stream_static_enrich" -> (graft.streaming.EventStream.staticEnrichViaStream _),
-    "stream_doc_dedup" -> (graft.streaming.EventStream.docDedupViaStream _),
-    // chunk-grain continuous-ingest twin: stateless chunk+probe against
-    // the STORED chunk-keeper index, per-doc rollup in foreachBatch
-    "stream_chunk_dedup" ->
-      ((s, d) => graft.streaming.EventStream.chunkDedupViaStream(s, d)),
-    // streaming classifier inference (r16): stream-static scoring
-    // against the stored weight artifact, rollup in foreachBatch
-    "stream_classifier_score" ->
-      (graft.streaming.EventStream.classifierScoreViaStream _),
-    "events_user_stats" -> (Events.userStats _),
-    "events_top_user_hours" -> ((s, d) => Events.topUserHours(s, d)),
-    "events_funnel" -> ((s, d) => Events.funnel(s, d)),
-    "events_rolling_active" -> ((s, d) => Events.rollingActiveUsers(s, d)),
-    "events_retention_cohorts" -> ((s, d) => Events.retentionCohorts(s, d)),
-    "events_rfm_segments" -> ((s, d) => Events.rfmSegments(s, d)),
-    // --- multimodal binary columns (decode stubbed, plumbing real) ---
-    "multimodal_features" -> (Multimodal.features _),
-    "multimodal_summary" -> (Multimodal.modalitySummary _),
-    "multimodal_frame_plan" -> ((s, d) => Multimodal.frameSamplePlan(s, d)),
-    "multimodal_frame_exec" -> ((s, d) => Multimodal.frameSampleExec(s, d)),
-    "multimodal_dedup" -> ((s, d) => Multimodal.blobDedup(s, d)),
-    "multimodal_container_audit" -> ((s, d) => Multimodal.containerAudit(s, d)),
-    "data_quality_report" -> ((s, d) => Stats.dataQualityReport(s, d)),
-    "events_cumulative_users" -> ((s, d) => Events.cumulativeUsers(s, d)),
-    // --- custom operators ---
-    "events_asof_purchase" -> (AsOfJoin.clickAttribution _),
-    "events_asof_purchase_native" -> (AsOfJoin.clickAttributionNative _),
-    "events_asof_purchase_recent" -> ((s, d) => AsOfJoin.clickAttributionRecent(s, d)),
-    "events_asof_conversion" -> ((s, d) => AsOfJoin.clickConversion(s, d)),
-    "events_asof_nearest" -> (AsOfJoin.clickNearestPurchase _),
-    "events_approx_distinct" -> (Events.approxDistinctUsers _),
-    "window_top_orders_heap" -> ((s, d) => graft.functions.TopKAggregate.topOrdersPerCustomer(s, d)),
-    "text_fingerprint_rolling" -> (TextAnalysis.rollingFingerprint _),
-    "events_pivot" -> (Events.userTypePivot _),
-    "quantity_percentiles" -> (Events.quantityPercentiles _),
-    "stats_lineitem_columns" -> ((s, d) => Stats.lineitemColumnStats(s, d)),
-    "stats_lineitem_columns_approx" -> ((s, d) => Stats.lineitemColumnStatsApprox(s, d)),
-    "stats_equidepth_histogram" -> ((s, d) => Stats.orderValueEquidepth(s, d)),
-    // no oracle: GK-sketch boundaries are engine-specific; StatsSpec
-    // bounds the bucket depths against the exact form
-    "stats_equidepth_histogram_approx" -> ((s, d) => Stats.orderValueEquidepthApprox(s, d)),
-    "curation_pipeline" -> ((s, d) => TextAnalysis.curationPipeline(s, d)),
-    "curation_gated" -> ((s, d) => TextAnalysis.curationGated(s, d)),
-    "curation_scrubbed" -> ((s, d) => TextAnalysis.curationScrubbed(s, d)),
-    "events_range_join" -> ((s, d) => Events.nearbyEventPairs(s, d)),
-    // bounded sibling (r14): per-event top-m nearest-in-time neighbors
-    // — ≤ N·m output at any skew, the interface the range-join guard's
-    // refusal points skewed corpora at
-    "events_nearby_topm" -> ((s, d) => Events.nearbyEventTopM(s, d)),
-    "lineitem_unpivot" -> (Events.lineitemUnpivot _),
-    "stratified_sample" -> ((s, d) => Events.stratifiedSample(s, d)),
-    "ann_topk_ivf" -> ((s, d) => Similarity.ivfTopK(s, d)),
-    "ann_knn_join" -> ((s, d) => Similarity.knnJoin(s, d)),
-    // the code-currency form: candidates scored via symmetric PQ (SDC
-    // table lookups over the stored code index, ~6× less join payload
-    // than float vectors), exact rerank on each vector's shortlist only
-    "ann_knn_join_pq" -> ((s, d) => Similarity.knnJoinPq(s, d)),
-    // the heap form: top-k as a mergeable bounded aggregation, so the
-    // exchange carries ≤k rows per vector instead of the full
-    // nprobe·N·√N candidate relation the window form sorts — the
-    // measured 100× bottleneck (same scoring, same oracle as the
-    // window form)
-    "ann_knn_join_heap" -> ((s, d) => Similarity.knnJoinHeap(s, d)),
-    "events_distinct_rollup" -> ((s, d) => Events.distinctUsersViaSketchRollup(s, d)),
-    "ann_incremental_assign" -> ((s, d) => Similarity.incrementalAssign(s, d)),
-    // quantizer drift trigger (r16): arrival-batch quantization error
-    // vs the training-time profile — the retrain signal completing
-    // ANN continuous-ingest
-    "ann_index_drift" -> ((s, d) => Similarity.indexDrift(s, d)),
-    "ann_index_health" -> ((s, d) => Similarity.indexHealth(s, d)),
-    "ann_recall_curve" -> ((s, d) => Similarity.recallCurve(s, d)),
-    "q15_top_supplier" -> ((s, d) => Relational.q15TopSupplier(s, d)),
-    "brand_supplier_hhi" -> ((s, d) => Relational.brandSupplierHhi(s, d)),
-    "dedup_rate_by_source" -> ((s, d) => Dedup.dedupRateBySource(s, d)),
-    "events_value_outliers" -> ((s, d) => Events.valueOutliers(s, d)),
-    "orders_status_aging" -> ((s, d) => Relational.orderStatusAging(s, d)),
-    "events_stickiness" -> ((s, d) => Events.stickiness(s, d)),
-    "corpus_effective_size" -> ((s, d) => Dedup.effectiveSize(s, d)),
-    "embedding_prototypicality" -> ((s, d) => Similarity.prototypicality(s, d)),
-    "ann_topk_pq_adc" -> ((s, d) => Similarity.pqTopK(s, d)),
-    "ann_topk_pq" -> ((s, d) => Similarity.pqRerankTopK(s, d)),
-    "ann_topk_ivfpq" -> ((s, d) => Similarity.ivfPqTopK(s, d)),
-    "ann_topk_ivfpq_rerank" -> ((s, d) => Similarity.ivfPqRerankTopK(s, d)),
-    "corpus_cluster_sample" -> ((s, d) => Similarity.clusterBalancedSample(s, d)),
-    "parts_left_revenue" -> (Relational.partsLeftRevenue _),
-    "customer_activity_transition" -> (Relational.customerActivityTransition _),
-    // --- SQL front door (correlated subqueries, decorrelated by Catalyst) ---
-    "sql_brand_floor_parts" -> (Relational.sqlBrandFloorParts _),
-    "sql_priority_customers" -> (Relational.sqlPriorityCustomers _),
-    // --- analytics: running-total caps, second moments, binning ---
-    "curation_token_budget" -> ((s, d) => TextAnalysis.tokenBudgetSample(s, d)),
-    "events_hourly_anomaly" -> ((s, d) => Events.hourlyAnomalies(s, d)),
-    "order_value_histogram" -> ((s, d) => Events.orderValueHistogram(s, d)),
-    "events_dense_hourly" -> (Events.denseHourlyCounts _),
-    "dedup_clusters" -> ((s, d) => Dedup.nearDupClusters(s, d)),
-  )
+  /** Builders by name, projected from [[specs]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.build).toMap
+
+  /** DuckDB oracle SQL by name, projected from the [[Oracle]] specs. */
+  lazy val oracleSql: Map[String, String] =
+    specs.collect { case QuerySpec(name, _, Oracle(sql), _) => name -> sql }.toMap
 
   /** Shared CTE prefix (quality, langid, token counts, 3-gram-Jaccard
     * near-dup losers) for the curation_pipeline / curation_gated
@@ -523,8 +240,6 @@ object SparkEntry {
       |            string_agg(w.words[k.p + 1], ' ' ORDER BY k.p) AS clean_text
       |          FROM kept k JOIN w ON w.doc_id = k.doc_id GROUP BY k.doc_id)""".stripMargin
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
   /** Shared DuckDB replay of the 5-round BPE trainer (CTEs w,
     * s0..s5, t1..t5, r1..r5): text_bpe_train reads the per-round
     * stats, text_bpe_apply the final encoded corpus state s5. */
@@ -740,43 +455,55 @@ object SparkEntry {
       |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
       |WHERE cosine >= 0.35 ORDER BY vec_a, vec_b""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "wordcount_topk" ->
+  /** The query registry: every implemented operator from SURVEY.md §2
+    * (and the training-data pipeline extensions), each listed once with
+    * its builder and its check. An [[Oracle]] is ANSI SQL that DuckDB
+    * runs on the same parquet tables; a [[Bound]] measures an
+    * engine-specific sketch's error against its bound, for the rows no
+    * SQL can replay. `drain = true` marks the Structured Streaming
+    * queries that run to completion. Lazy, because the entries read the
+    * private SQL helpers defined around it. */
+  lazy val specs: Seq[QuerySpec] = Seq(
+    // --- reference surface (SURVEY.md §2.1, O1-O12) ---
+    QuerySpec("wordcount_topk", WordCount.topK(_, _, 100), Oracle(
       """SELECT word, COUNT(*) AS cnt
         |FROM (SELECT unnest(string_split_regex(text, '[ \n]')) AS word FROM documents)
         |WHERE regexp_matches(word, '^[a-z]')
-        |GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 100""".stripMargin,
-    "wordcount_full" ->
+        |GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 100""".stripMargin)),
+    QuerySpec("wordcount_full", WordCount.full(_, _), Oracle(
       """SELECT word, COUNT(*) AS cnt
         |FROM (SELECT unnest(string_split_regex(text, '[ \n]')) AS word FROM documents)
         |WHERE regexp_matches(word, '^[a-z]')
-        |GROUP BY word ORDER BY word ASC""".stripMargin,
+        |GROUP BY word ORDER BY word ASC""".stripMargin)),
+    // O2/O3 end-to-end: same counts, but ingested through a real
+    // on-disk newline-delimited text file via spark.read.text
     // fullFromTextFile: the Spark side counts over the .txt spool of
     // documents.text read back via spark.read.text; the oracle counts
     // from the documents view directly — a hash match proves the text
     // file round-trip preserved the token multiset (O2/O3 evidence)
-    "wordcount_textfile" ->
+    QuerySpec("wordcount_textfile", WordCount.fullFromTextFile(_, _), Oracle(
       """SELECT word, COUNT(*) AS cnt
         |FROM (SELECT unnest(string_split_regex(text, '[ \n]')) AS word FROM documents)
         |WHERE regexp_matches(word, '^[a-z]')
-        |GROUP BY word ORDER BY word ASC""".stripMargin,
+        |GROUP BY word ORDER BY word ASC""".stripMargin)),
     // CMS guard is semantics-free (no false negatives + exact re-count),
     // so the oracle is the PLAIN groupBy+HAVING over the same threshold
-    "events_heavy_users" ->
+    QuerySpec("events_heavy_users", SkewTools.heavyUsers(_, _), Oracle(
       """WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id),
         |t AS (SELECT greatest(1, CAST(ceil(
         |        (1.2 * (SELECT count(user_id) FROM events))
         |        / (SELECT count(DISTINCT user_id) FROM events)) AS BIGINT)) AS thr)
         |SELECT user_id, cnt FROM c
         |WHERE cnt >= (SELECT thr FROM t)
-        |ORDER BY cnt DESC, user_id ASC""".stripMargin,
-    "letter_buckets" ->
+        |ORDER BY cnt DESC, user_id ASC""".stripMargin)),
+    QuerySpec("letter_buckets", WordCount.letterBuckets(_, _), Oracle(
       """SELECT substr(word, 1, 1) AS letter, COUNT(*) AS n_words,
         |       COUNT(DISTINCT word) AS n_distinct
         |FROM (SELECT unnest(string_split_regex(text, '[ \n]')) AS word FROM documents)
         |WHERE regexp_matches(word, '^[a-z]')
-        |GROUP BY 1 ORDER BY letter ASC""".stripMargin,
-    "q1_pricing_summary" ->
+        |GROUP BY 1 ORDER BY letter ASC""".stripMargin)),
+    // --- relational surface (SURVEY.md §7.2 PR3; absent in reference §2.3) ---
+    QuerySpec("q1_pricing_summary", Relational.q1PricingSummary(_, _), Oracle(
       """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
         |  CAST(sum(CAST(floor((l_extendedprice) * 1e2 + 0.5) AS BIGINT)) AS DOUBLE) / 1e2 AS sum_base_price,
         |  floor((CAST(sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) * 1e2 + 0.5) / 1e2 AS sum_disc_price,
@@ -785,8 +512,8 @@ object SparkEntry {
         |  floor((CAST(sum(CAST(floor((l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / (count(l_discount) * 1e6)) * 1e4 + 0.5) / 1e4 AS avg_disc,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1999-12-31'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    QuerySpec("q3_shipping_priority", Relational.q3ShippingPriority(_, _), Oracle(
       """SELECT l_orderkey, o_orderdate, o_orderpriority,
         |  floor((CAST(sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) * 1e2 + 0.5) / 1e2 AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -795,8 +522,8 @@ object SparkEntry {
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
         |  AND l_shipdate > TIMESTAMP '1998-01-01'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""".stripMargin,
-    "q5_region_revenue" ->
+        |ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""".stripMargin)),
+    QuerySpec("q5_region_revenue", Relational.q5RegionRevenue(_, _), Oracle(
       """SELECT n_name, floor((CAST(sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) * 1e2 + 0.5) / 1e2 AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |  JOIN customer ON o_custkey = c_custkey
@@ -806,52 +533,53 @@ object SparkEntry {
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name ASC""".stripMargin,
-    "top_customers" ->
+        |GROUP BY n_name ORDER BY revenue DESC, n_name ASC""".stripMargin)),
+    QuerySpec("top_customers", Relational.topCustomers(_, _), Oracle(
       """SELECT c_custkey, c_name, floor((CAST(sum(CAST(floor((o_totalprice) * 1e4 + 0.5) AS BIGINT)) AS DOUBLE) / 1e4) * 1e2 + 0.5) / 1e2 AS total_spend,
         |  count(*) AS n_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_custkey, c_name
-        |ORDER BY total_spend DESC, c_custkey ASC LIMIT 20""".stripMargin,
-    "order_priority_exists" ->
+        |ORDER BY total_spend DESC, c_custkey ASC LIMIT 20""".stripMargin)),
+    QuerySpec("order_priority_exists", Relational.orderPriorityExists(_, _), Oracle(
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "customers_no_orders" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+    QuerySpec("customers_no_orders", Relational.customersNoOrders(_, _), Oracle(
       """SELECT n_name, count(*) AS n_customers
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderdate < TIMESTAMP '1996-01-01')
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "nation_customer_stats" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin)),
+    QuerySpec("nation_customer_stats", Relational.nationCustomerStats(_, _), Oracle(
       """SELECT n_name, count(DISTINCT c_mktsegment) AS n_segments,
         |  count(*) AS n_customers, floor((CAST(sum(CAST(floor((c_acctbal) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / (count(c_acctbal) * 1e6)) * 1e4 + 0.5) / 1e4 AS avg_acctbal
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "window_top_orders" -> windowTopOrdersOracle,
+        |GROUP BY n_name ORDER BY n_name""".stripMargin)),
+    QuerySpec("window_top_orders", Relational.windowTopOrders(_, _), Oracle(windowTopOrdersOracle)),
     // same results, heap-aggregated (TopKAggregate) instead of windowed
-    "window_top_orders_heap" -> windowTopOrdersOracle,
-    "rollup_lineitem" ->
+    QuerySpec("window_top_orders_heap", graft.functions.TopKAggregate.topOrdersPerCustomer(_, _),
+      Oracle(windowTopOrdersOracle)),
+    QuerySpec("rollup_lineitem", Relational.rollupLineitem(_, _), Oracle(
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         |  coalesce(l_linestatus, 'ALL') AS linestatus,
         |  count(*) AS n, sum(l_quantity) AS sum_qty
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
+        |ORDER BY returnflag, linestatus""".stripMargin)),
     // CUBE lattice; grouping id must use the same bit order (first key
     // = MSB) in both engines — DuckDB GROUPING(a, b) matches Spark's
     // grouping_id() for cube(a, b)
-    "cube_orders" ->
+    QuerySpec("cube_orders", Relational.cubeOrders(_, _), Oracle(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS INT) AS gid,
         |  count(*) AS n,
         |  CAST(sum(CAST(floor((o_totalprice) * 1e2 + 0.5) AS BIGINT)) AS DOUBLE) / 1e2 AS sum_price
         |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY gid, status, priority""".stripMargin,
+        |ORDER BY gid, status, priority""".stripMargin)),
     // explicit GROUPING SETS: same bitmask convention as the cube oracle
-    "grouping_sets_orders" ->
+    QuerySpec("grouping_sets_orders", Relational.groupingSetsOrders(_, _), Oracle(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS INT) AS gid,
@@ -859,10 +587,10 @@ object SparkEntry {
         |  CAST(sum(CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT)) AS DOUBLE) / 1e2 AS sum_price
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY gid, status, priority""".stripMargin,
+        |ORDER BY gid, status, priority""".stripMargin)),
     // analytic windows: every function over the same (custkey, date,
     // orderkey) order; the running sum is frame-ordered in both engines
-    "window_analytics_orders" ->
+    QuerySpec("window_analytics_orders", Relational.windowAnalyticsOrders(_, _), Oracle(
       """SELECT o_custkey, o_orderkey,
         |  coalesce(lag(o_totalprice, 1) OVER w, 0.0) AS prev_price,
         |  coalesce(lead(o_totalprice, 1) OVER w, 0.0) AS next_price,
@@ -873,10 +601,10 @@ object SparkEntry {
         |                                 ROWS UNBOUNDED PRECEDING)) * 1e2 + 0.5) / 1e2 AS running_total
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)),
     // Q8 market share: the ratio divides the UNROUNDED 1e-6 quantized
     // sums (the 2-dp columns are display rounding only)
-    "q8_market_share" ->
+    QuerySpec("q8_market_share", Relational.q8MarketShare(_, _), Oracle(
       """WITH vol AS (
         |  SELECT year(o.o_orderdate) AS o_year, ns.n_name AS supp_nation,
         |    l.l_extendedprice * (1 - l.l_discount) AS volume
@@ -897,17 +625,17 @@ object SparkEntry {
         |  floor(nv * 1e2 + 0.5) / 1e2 AS nation_volume,
         |  floor(tv * 1e2 + 0.5) / 1e2 AS total_volume,
         |  floor((nv / tv) * 1e4 + 0.5) / 1e4 AS mkt_share
-        |FROM agg ORDER BY o_year""".stripMargin,
+        |FROM agg ORDER BY o_year""".stripMargin)),
     // Q6: one filtered agg; revenue via the exact 1e-6 quantized sum
-    "q6_forecast_revenue" ->
+    QuerySpec("q6_forecast_revenue", Relational.q6ForecastRevenue(_, _), Oracle(
       """SELECT count(*) AS n_items,
         |  floor((CAST(sum(CAST(floor(l_extendedprice * l_discount * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
         |        * 1e2 + 0.5) / 1e2 AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin)),
     // Q10: top 20 by the QUANTIZED revenue, c_custkey tiebreak
-    "q10_returned_items" ->
+    QuerySpec("q10_returned_items", Relational.q10ReturnedItems(_, _), Oracle(
       """SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
         |  floor((CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
         |        * 1e2 + 0.5) / 1e2 AS revenue
@@ -917,9 +645,9 @@ object SparkEntry {
         |  JOIN nation n ON c.c_nationkey = n.n_nationkey
         |WHERE l.l_returnflag = 'R'
         |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
-        |ORDER BY revenue DESC, c.c_custkey LIMIT 20""".stripMargin,
+        |ORDER BY revenue DESC, c.c_custkey LIMIT 20""".stripMargin)),
     // Q14: share of the UNROUNDED quantized sums (q8's device), month grain
-    "q14_promo_share" ->
+    QuerySpec("q14_promo_share", Relational.q14PromoShare(_, _), Oracle(
       """WITH v AS (SELECT strftime(l.l_shipdate, '%Y-%m') AS month,
         |    l.l_extendedprice * (1 - l.l_discount) AS rev, p.p_type
         |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
@@ -931,10 +659,10 @@ object SparkEntry {
         |  floor(pv * 1e2 + 0.5) / 1e2 AS promo_revenue,
         |  floor(tv * 1e2 + 0.5) / 1e2 AS total_revenue,
         |  floor((pv * 100.0 / tv) * 1e4 + 0.5) / 1e4 AS promo_share
-        |FROM agg ORDER BY month""".stripMargin,
+        |FROM agg ORDER BY month""".stripMargin)),
     // interarrival: lag over (user, ts, event_id); integer-microsecond
     // gaps so quantile_cont interpolates exactly like Spark percentile
-    "events_interarrival" ->
+    QuerySpec("events_interarrival", Events.interarrivalStats(_, _), Oracle(
       """WITH g AS (SELECT epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
         |           FROM events
         |           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
@@ -944,10 +672,10 @@ object SparkEntry {
         |  quantile_cont(gap_us, 0.75) AS p75_us,
         |  quantile_cont(gap_us, 0.9) AS p90_us,
         |  max(gap_us) AS max_us
-        |FROM g WHERE gap_us IS NOT NULL""".stripMargin,
+        |FROM g WHERE gap_us IS NOT NULL""".stripMargin)),
     // Q19: OR of brand/size/quantity conjunctions over the common-
     // conjunct prefilters
-    "q19_disjunctive_revenue" ->
+    QuerySpec("q19_disjunctive_revenue", Relational.q19DisjunctiveRevenue(_, _), Oracle(
       """SELECT p.p_brand, count(*) AS n_items,
         |  floor((CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
         |        * 1e2 + 0.5) / 1e2 AS revenue
@@ -956,10 +684,10 @@ object SparkEntry {
         |  AND ((p.p_brand = 'Brand#12' AND p.p_size <= 5 AND l.l_quantity <= 11)
         |    OR (p.p_brand = 'Brand#23' AND p.p_size <= 10 AND l.l_quantity BETWEEN 10 AND 20)
         |    OR (p.p_brand = 'Brand#34' AND p.p_size <= 15 AND l.l_quantity >= 20))
-        |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin,
+        |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin)),
     // Q2: per-part min unit price (4-dp-quantized per row, so the
     // equality join-back is engine-stable), DISTINCT offer rows
-    "q2_min_cost_supplier" ->
+    QuerySpec("q2_min_cost_supplier", Relational.q2MinCostSupplier(_, _), Oracle(
       """WITH offers AS (
         |  SELECT DISTINCT p.p_partkey, p.p_name, l.l_suppkey,
         |    floor(l.l_extendedprice / l.l_quantity * 1e4 + 0.5) / 1e4 AS unit_price
@@ -972,9 +700,9 @@ object SparkEntry {
         |  JOIN best b ON o.p_partkey = b.p_partkey AND o.unit_price = b.min_price
         |  JOIN supplier s ON o.l_suppkey = s.s_suppkey
         |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |ORDER BY s.s_acctbal DESC, s.s_name, o.p_partkey""".stripMargin,
+        |ORDER BY s.s_acctbal DESC, s.s_name, o.p_partkey""".stripMargin)),
     // Q7: bilateral nation trade by ship year
-    "q7_nation_trade" ->
+    QuerySpec("q7_nation_trade", Relational.q7VolumeShipping(_, _), Oracle(
       """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
         |  CAST(year(l.l_shipdate) AS INT) AS l_year,
         |  floor((CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
@@ -987,11 +715,11 @@ object SparkEntry {
         |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
         |WHERE (cn.n_name = 'NATION_3' AND sn.n_name = 'NATION_8')
         |   OR (cn.n_name = 'NATION_8' AND sn.n_name = 'NATION_3')
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
     // Q9: profit under the documented 0.5×retail cost model; per-row
     // profit (possibly negative) quantized at 4 dp — floor is
     // toward -inf in both engines, so negatives round identically
-    "q9_product_profit" ->
+    QuerySpec("q9_product_profit", Relational.q9ProductProfit(_, _), Oracle(
       """SELECT sn.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
         |  floor((CAST(sum(CAST(floor((l.l_extendedprice * (1 - l.l_discount)
         |                              - 0.5 * p.p_retailprice * l.l_quantity) * 1e4 + 0.5) AS BIGINT)) AS DOUBLE) / 1e4)
@@ -1002,9 +730,9 @@ object SparkEntry {
         |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
         |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
         |WHERE p.p_name LIKE '%widget%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin)),
     // Q11: fraction-of-total threshold off the same integer-unit agg
-    "q11_important_parts" ->
+    QuerySpec("q11_important_parts", Relational.q11ImportantParts(_, _), Oracle(
       """WITH v AS (
         |  SELECT l.l_partkey,
         |    sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 1e6 + 0.5) AS BIGINT)) AS units
@@ -1019,38 +747,38 @@ object SparkEntry {
         |  floor((CAST(units AS DOUBLE) / 1e6) * 1e2 + 0.5) / 1e2 AS part_value
         |FROM v
         |WHERE CAST(units AS DOUBLE) / 1e6 > (SELECT total FROM t) * 0.002
-        |ORDER BY part_value DESC, l_partkey""".stripMargin,
+        |ORDER BY part_value DESC, l_partkey""".stripMargin)),
     // Q12: delay buckets from exact integer day arithmetic
-    "q12_delay_classes" ->
+    QuerySpec("q12_delay_classes", Relational.q12DelayClasses(_, _), Oracle(
       """SELECT CASE WHEN date_diff('day', o.o_orderdate, l.l_shipdate) <= 30 THEN '1_FAST'
         |            WHEN date_diff('day', o.o_orderdate, l.l_shipdate) <= 90 THEN '2_MEDIUM'
         |            ELSE '3_SLOW' END AS delay_class,
         |  CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
         |  CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
     // Q13: zero-including histogram — exclusion predicate lives in the
     // LEFT JOIN condition, never a WHERE
-    "q13_order_distribution" ->
+    QuerySpec("q13_order_distribution", Relational.q13OrderCountDistribution(_, _), Oracle(
       """WITH pc AS (
         |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
         |  FROM customer c LEFT JOIN orders o
         |    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '4-NOT SPECIFIED'
         |  GROUP BY 1)
         |SELECT c_count, count(*) AS custdist
-        |FROM pc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
+        |FROM pc GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin)),
     // Q16: NOT IN subquery over negative-balance suppliers
-    "q16_supplier_variety" ->
+    QuerySpec("q16_supplier_variety", Relational.q16SupplierVariety(_, _), Oracle(
       """SELECT p.p_brand, p.p_type, p.p_size,
         |  count(DISTINCT l.l_suppkey) AS supplier_cnt
         |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         |WHERE p.p_brand <> 'Brand#1' AND p.p_size IN (1, 3, 9, 14, 19, 23, 36, 45)
         |  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
     // Q20: mean-relative threshold; quantities are integral doubles so
     // the BIGINT cast is exact
-    "q20_dominant_suppliers" ->
+    QuerySpec("q20_dominant_suppliers", Relational.q20DominantSuppliers(_, _), Oracle(
       """WITH ps AS (
         |  SELECT l.l_suppkey, CAST(sum(l.l_quantity) AS BIGINT) AS red_qty
         |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -1062,10 +790,10 @@ object SparkEntry {
         |  JOIN supplier s ON ps.l_suppkey = s.s_suppkey
         |  JOIN nation n ON s.s_nationkey = n.n_nationkey
         |WHERE CAST(ps.red_qty AS DOUBLE) > 1.1 * (SELECT mean FROM m)
-        |ORDER BY ps.red_qty DESC, s.s_name""".stripMargin,
+        |ORDER BY ps.red_qty DESC, s.s_name""".stripMargin)),
     // Q21: per-order (n_supp, n_late) profile replays EXISTS/NOT EXISTS;
     // each qualifying (order, supplier) pair counts once
-    "q21_waiting_suppliers" ->
+    QuerySpec("q21_waiting_suppliers", Relational.q21WaitingSuppliers(_, _), Oracle(
       """WITH li AS (
         |  SELECT l.l_orderkey, l.l_suppkey,
         |    date_diff('day', o.o_orderdate, l.l_shipdate) > 60 AS late
@@ -1081,9 +809,9 @@ object SparkEntry {
         |  WHERE li.late AND prof.n_supp > 1 AND prof.n_late = 1)
         |SELECT s.s_name, count(*) AS numwait
         |FROM w JOIN supplier s ON w.l_suppkey = s.s_suppkey
-        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
+        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin)),
     // Q22: exact quantized mean threshold + NOT EXISTS on recent orders
-    "q22_dormant_customers" ->
+    QuerySpec("q22_dormant_customers", Relational.q22DormantCustomers(_, _), Oracle(
       """WITH thr AS (
         |  SELECT CAST(sum(CAST(floor(c_acctbal * 1e2 + 0.5) AS BIGINT)) AS DOUBLE)
         |         / (count(c_acctbal) * 1e2) AS t
@@ -1099,10 +827,10 @@ object SparkEntry {
         |  floor((CAST(sum(CAST(floor(d.c_acctbal * 1e2 + 0.5) AS BIGINT)) AS DOUBLE) / 1e2)
         |        * 1e2 + 0.5) / 1e2 AS totacctbal
         |FROM d JOIN nation n ON d.c_nationkey = n.n_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
     // vocabGrowth(buckets=10): first-seen decomposition; integer-div
     // buckets from the id range
-    "corpus_vocab_growth" ->
+    QuerySpec("corpus_vocab_growth", TextAnalysis.vocabGrowth(_, _), Oracle(
       """WITH mx AS (SELECT max(doc_id) + 1 AS m FROM documents),
         |toks AS (SELECT (doc_id * 10) // (SELECT m FROM mx) AS bucket, doc_id,
         |           unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS token
@@ -1116,10 +844,10 @@ object SparkEntry {
         |  CAST(sum(coalesce(f.new_types, 0)) OVER (ORDER BY o.bucket
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_types
         |FROM occ o LEFT JOIN fs f ON f.bucket = o.bucket
-        |ORDER BY o.bucket""".stripMargin,
+        |ORDER BY o.bucket""".stripMargin)),
     // Q17: the correlated threshold decorrelated to a per-part agg; the
     // predicate 5·q·c < S is the exact-integer form of q < 0.2·S/c
-    "q17_small_quantity" ->
+    QuerySpec("q17_small_quantity", Relational.q17SmallQuantityRevenue(_, _), Oracle(
       """WITH pa AS (SELECT l_partkey, CAST(sum(l_quantity) AS BIGINT) AS s_qty,
         |              count(*) AS n_li
         |            FROM lineitem GROUP BY l_partkey)
@@ -1131,10 +859,10 @@ object SparkEntry {
         |  JOIN part p ON p.p_partkey = l.l_partkey
         |WHERE 5 * CAST(l.l_quantity AS BIGINT) * pa.n_li < pa.s_qty
         |GROUP BY p.p_brand
-        |ORDER BY p.p_brand""".stripMargin,
+        |ORDER BY p.p_brand""".stripMargin)),
     // Q18(minQty=250): group-HAVING semi-join; quantities are integral
     // doubles so the sum and threshold compare exactly
-    "q18_large_orders" ->
+    QuerySpec("q18_large_orders", Relational.q18LargeVolumeOrders(_, _), Oracle(
       """WITH big AS (SELECT l_orderkey, sum(l_quantity) AS total_qty
         |             FROM lineitem GROUP BY l_orderkey
         |             HAVING sum(l_quantity) > 250)
@@ -1142,17 +870,17 @@ object SparkEntry {
         |FROM orders o
         |  JOIN big b ON o.o_orderkey = b.l_orderkey
         |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY o.o_orderkey""".stripMargin,
+        |ORDER BY o.o_orderkey""".stripMargin)),
     // salted-join path: the oracle is the PLAIN join+agg — the driver
     // hash-check proves salting is semantics-free
-    "events_salted_enrich" ->
+    QuerySpec("events_salted_enrich", SkewTools.saltedUserEnrich(_, _), Oracle(
       """WITH dim AS (SELECT user_id, count(*) AS user_events FROM events GROUP BY user_id)
         |SELECT e.event_type, count(*) AS n,
         |  CAST(sum(CASE WHEN d.user_events >= 70 THEN 1 ELSE 0 END) AS BIGINT) AS n_heavy_events,
         |  count(DISTINCT CASE WHEN d.user_events >= 70 THEN e.user_id END) AS n_heavy_users
         |FROM events e JOIN dim d ON e.user_id = d.user_id
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-    "set_ops_active_customers" ->
+        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin)),
+    QuerySpec("set_ops_active_customers", Relational.setOpsActiveCustomers(_, _), Oracle(
       """SELECT o_custkey FROM (
         |  (SELECT o_custkey FROM orders
         |   WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
@@ -1161,8 +889,8 @@ object SparkEntry {
         |   WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01')
         |  EXCEPT
         |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
-        |ORDER BY o_custkey""".stripMargin,
-    "scalar_functions" ->
+        |ORDER BY o_custkey""".stripMargin)),
+    QuerySpec("scalar_functions", Relational.scalarFunctions(_, _), Oracle(
       """SELECT o_orderkey,
         |  CAST(year(o_orderdate) AS INT) AS o_year,
         |  CAST(month(o_orderdate) AS INT) AS o_month,
@@ -1173,8 +901,8 @@ object SparkEntry {
         |       ELSE 'low' END AS price_band,
         |  floor((sqrt(o_totalprice)) * 1e4 + 0.5) / 1e4 AS sqrt_price,
         |  floor((ln(o_totalprice + 1)) * 1e4 + 0.5) / 1e4 AS log_price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "brand_top_parts" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    QuerySpec("brand_top_parts", Relational.brandTopParts(_, _), Oracle(
       """SELECT p_brand, p_partkey, p_name, part_revenue, CAST(rn AS INT) AS rn
         |FROM (SELECT p_brand, p_partkey, p_name, part_revenue,
         |        row_number() OVER (PARTITION BY p_brand
@@ -1182,8 +910,9 @@ object SparkEntry {
         |      FROM (SELECT l_partkey, floor((CAST(sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) * 1e2 + 0.5) / 1e2 AS part_revenue
         |            FROM lineitem GROUP BY l_partkey)
         |        JOIN part ON l_partkey = p_partkey)
-        |WHERE rn <= 3 ORDER BY p_brand, rn""".stripMargin,
-    "text_token_stats" ->
+        |WHERE rn <= 3 ORDER BY p_brand, rn""".stripMargin)),
+    // --- text analysis (training-data pipeline ops) ---
+    QuerySpec("text_token_stats", TextAnalysis.tokenStats(_, _), Oracle(
       """SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \n]')) AS INT) AS n_bpe_tokens,
         |  floor((CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
@@ -1192,8 +921,8 @@ object SparkEntry {
         |FROM (SELECT doc_id, text,
         |        list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS toks
         |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
+        |ORDER BY doc_id""".stripMargin)),
+    QuerySpec("text_quality", TextAnalysis.qualityScore(_, _), Oracle(
       """WITH base AS (SELECT doc_id,
         |        list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS toks,
         |        CAST(len(regexp_extract_all(text, '\b(the|a|of|and|to|in|is)\b')) AS DOUBLE) AS n_stop,
@@ -1220,8 +949,8 @@ object SparkEntry {
         |      + 0.3 * least(len / 500.0, 1.0)
         |      + 0.2 * (1.0 - n_punct / greatest(len, 1.0))) * 1e4 + 0.5) / 1e4 AS quality
         |FROM base b LEFT JOIN t2 ON b.doc_id = t2.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-    "text_pii_scrub" ->
+        |ORDER BY b.doc_id""".stripMargin)),
+    QuerySpec("text_pii_scrub", TextAnalysis.piiScrub(_, _), Oracle(
       """SELECT doc_id,
         |  regexp_replace(regexp_replace(regexp_replace(text,
         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
@@ -1230,11 +959,11 @@ object SparkEntry {
         |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
         |  CAST(len(regexp_extract_all(text, '\(?[0-9]{3}\)?[- .][0-9]{3}[- .][0-9]{4}')) AS INT) AS n_phones,
         |  CAST(len(regexp_extract_all(text, '[0-9]{3}-[0-9]{2}-[0-9]{4}')) AS INT) AS n_ssn
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // chunkDocs(chunkSize=32, overlap=8, stride=24): identical candidate
     // starts (multiples of 24 below n, kept iff first or adding tokens)
     // and list-slice arithmetic as the Spark side
-    "text_chunks" ->
+    QuerySpec("text_chunks", TextAnalysis.chunkDocs(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -1252,10 +981,10 @@ object SparkEntry {
         |SELECT doc_id, chunk_id, start_tok,
         |  CAST(len(ctoks) AS INT) AS n_chunk_tokens,
         |  array_to_string(ctoks, ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
     // packManifest(capacity=512): concat-and-split packing — per-source
     // window cumsum then exact integer div/mod
-    "text_pack" ->
+    QuerySpec("text_pack", TextAnalysis.packManifest(_, _), Oracle(
       """WITH t AS (
         |  SELECT source, doc_id,
         |    CAST(len(list_filter(string_split_regex(text, '[ \n]'), x -> x != '')) AS BIGINT) AS n_tokens
@@ -1270,16 +999,16 @@ object SparkEntry {
         |  CAST(tok_before % 512 AS BIGINT) AS seq_offset,
         |  CASE WHEN n_tokens = 0 THEN CAST(0 AS BIGINT)
         |       ELSE CAST(((tok_before + n_tokens - 1) // 512) - (tok_before // 512) + 1 AS BIGINT) END AS n_seqs_spanned
-        |FROM c ORDER BY source, doc_id""".stripMargin,
+        |FROM c ORDER BY source, doc_id""".stripMargin)),
     // epochShuffle(seed=epoch0): md5 evaluates identically in both engines
-    "corpus_shuffle" ->
+    QuerySpec("corpus_shuffle", TextAnalysis.epochShuffle(_, _), Oracle(
       """SELECT md5('epoch0|' || CAST(doc_id AS VARCHAR)) AS shuffle_key,
         |  doc_id, source
-        |FROM documents ORDER BY shuffle_key""".stripMargin,
+        |FROM documents ORDER BY shuffle_key""".stripMargin)),
     // mixtureSample(rates src0=0.5 src1=0.25 src2=0.1, default 0.05,
     // seed=mix0): keep iff the 8-hex md5 prefix is below the rate's hex
     // threshold — fixed-width lowercase hex compares like the number
-    "corpus_mixture" ->
+    QuerySpec("corpus_mixture", TextAnalysis.mixtureSample(_, _), Oracle(
       """SELECT doc_id, source,
         |  substr(md5('mix0|' || CAST(doc_id AS VARCHAR)), 1, 8) AS sample_key,
         |  CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.25
@@ -1288,11 +1017,11 @@ object SparkEntry {
         |WHERE substr(md5('mix0|' || CAST(doc_id AS VARCHAR)), 1, 8) <
         |  CASE source WHEN 'src0' THEN '80000000' WHEN 'src1' THEN '40000000'
         |    WHEN 'src2' THEN '19999999' ELSE '0ccccccc' END
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
     // winnowingPairs(threshold=0.5, k=8, w=8): sketch-set Jaccard over
     // the winnowing fingerprints (naive spelling; the Spark side's
     // canonical collapse is output-equivalent, as with the ngram path)
-    "dedup_winnowing" ->
+    QuerySpec("dedup_winnowing", Dedup.winnowingPairsMaterialized(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents),
         |h AS (
@@ -1317,9 +1046,9 @@ object SparkEntry {
         |  JOIN sz sb ON sb.doc_id = b.doc_id
         |GROUP BY a.doc_id, b.doc_id, sa.sz, sb.sz
         |HAVING floor((count(*) * 1.0 / (sa.sz + sb.sz - count(*))) * 1e4 + 0.5) / 1e4 >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin)),
     // tfidfTopTerms(topK=5): rank on the ROUNDED score in both engines
-    "text_tfidf" ->
+    QuerySpec("text_tfidf", TextAnalysis.tfidfTopTerms(_, _), Oracle(
       """WITH toks AS (SELECT doc_id,
         |  unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS term
         |  FROM documents),
@@ -1332,11 +1061,11 @@ object SparkEntry {
         |    CAST(row_number() OVER (PARTITION BY doc_id
         |      ORDER BY floor((tf * ln(CAST(n_docs AS DOUBLE) / df)) * 1e4 + 0.5) / 1e4 DESC, term ASC) AS INT) AS rank
         |  FROM tf JOIN df USING (term) CROSS JOIN n)
-        |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
+        |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin)),
     // unigramLogProb: per-token log10 rounded to 6 dp BEFORE the exact
     // integer-unit mean — the rounded values are integers in 1e-6 units,
     // so the average is add-order-free and replays exactly
-    "text_unigram_logprob" ->
+    QuerySpec("text_unigram_logprob", TextAnalysis.unigramLogProb(_, _), Oracle(
       """WITH toks AS (SELECT doc_id,
         |  unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS tok
         |  FROM documents),
@@ -1348,10 +1077,10 @@ object SparkEntry {
         |SELECT doc_id, count(*) AS n_tokens,
         |  floor((CAST(sum(CAST(floor(lp * 1e6 + 0.5) AS BIGINT)) AS DOUBLE)
         |         / (count(*) * 1e6)) * 1e4 + 0.5) / 1e4 AS avg_logprob
-        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // dsirSelect(target=en, topK=200): per-token LLR rounded to 6 dp,
     // exact integer-unit mean, rank on (rounded score, doc_id)
-    "corpus_dsir_select" ->
+    QuerySpec("corpus_dsir_select", TextAnalysis.dsirSelect(_, _), Oracle(
       """WITH toks AS (SELECT doc_id,
         |  unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS tok
         |  FROM documents),
@@ -1374,10 +1103,10 @@ object SparkEntry {
         |  SELECT doc_id, n_tokens, avg_llr,
         |    CAST(row_number() OVER (ORDER BY avg_llr DESC, doc_id) AS INT) AS rank
         |  FROM sc)
-        |WHERE rank <= 200 ORDER BY rank""".stripMargin,
+        |WHERE rank <= 200 ORDER BY rank""".stripMargin)),
     // corpusProfile(minQuality=0.4): quality replayed per doc (same
     // formula as text_quality's oracle), exact integer-unit mean
-    "corpus_profile" ->
+    QuerySpec("corpus_profile", TextAnalysis.corpusProfile(_, _), Oracle(
       """WITH q AS (SELECT doc_id,
         |  floor((0.5 * (n_stop / greatest(n_tok, 1.0))
         |      + 0.3 * least(len / 500.0, 1.0)
@@ -1397,12 +1126,12 @@ object SparkEntry {
         |         / (count(*) * 1e4)) * 1e4 + 0.5) / 1e4 AS avg_quality,
         |  CAST(sum(CASE WHEN q.quality >= 0.4 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
         |FROM documents d JOIN q USING (doc_id) JOIN t USING (doc_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // ccnetBuckets: unigram logprob replay (same CTE as
     // text_unigram_logprob), bin counts per (source, score), tertile
     // cuts via window cumsum over the bin table, greedy bin-granular
     // prefix exactly as the engine computes it
-    "corpus_ccnet_buckets" ->
+    QuerySpec("corpus_ccnet_buckets", TextAnalysis.ccnetBuckets(_, _), Oracle(
       """WITH toks AS (SELECT doc_id,
         |  unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS tok
         |  FROM documents),
@@ -1428,10 +1157,10 @@ object SparkEntry {
         |                sum(n) OVER (PARTITION BY source) AS total
         |              FROM bins))
         |SELECT sc.doc_id, sc.source, sc.avg_logprob, lab.bucket
-        |FROM sc JOIN lab USING (source, avg_logprob) ORDER BY sc.doc_id""".stripMargin,
+        |FROM sc JOIN lab USING (source, avg_logprob) ORDER BY sc.doc_id""".stripMargin)),
     // softDedupWeights(threshold=0.8): clusters replayed by the same
     // recursive CTE as dedup_clusters; singletons weight 1
-    "dedup_soft_weights" ->
+    QuerySpec("dedup_soft_weights", Dedup.softDedupWeights(_, _), Oracle(
       """WITH RECURSIVE pairs AS (
         |  WITH w AS (SELECT doc_id,
         |               list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
@@ -1460,10 +1189,10 @@ object SparkEntry {
         |sz2 AS (SELECT cluster_id, count(*) AS cluster_size FROM allc GROUP BY 1)
         |SELECT a.doc_id, a.cluster_id, s.cluster_size,
         |  floor((1.0 / s.cluster_size) * 1e4 + 0.5) / 1e4 AS weight
-        |FROM allc a JOIN sz2 s USING (cluster_id) ORDER BY a.doc_id""".stripMargin,
+        |FROM allc a JOIN sz2 s USING (cluster_id) ORDER BY a.doc_id""".stripMargin)),
     // clusterSizeHistogram(threshold=0.8): same recursive-CTE clusters
     // as dedup_soft_weights, rolled up twice
-    "dedup_cluster_histogram" ->
+    QuerySpec("dedup_cluster_histogram", Dedup.clusterSizeHistogram(_, _), Oracle(
       """WITH RECURSIVE pairs AS (
         |  WITH w AS (SELECT doc_id,
         |               list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
@@ -1492,12 +1221,12 @@ object SparkEntry {
         |sz2 AS (SELECT cluster_id, count(*) AS cluster_size FROM allc GROUP BY 1)
         |SELECT cluster_size, count(*) AS n_clusters,
         |  CAST(sum(cluster_size) AS BIGINT) AS n_docs
-        |FROM sz2 GROUP BY 1 ORDER BY cluster_size""".stripMargin,
+        |FROM sz2 GROUP BY 1 ORDER BY cluster_size""".stripMargin)),
     // qualitySample(seed=qs0): u = first 8 md5 hex digits as an integer
     // (digit fold with exact powers of 16 — every intermediate is exact
     // in a double); kept iff u < quality * 2^32, both engines computing
     // the identical IEEE product
-    "corpus_quality_sample" ->
+    QuerySpec("corpus_quality_sample", TextAnalysis.qualitySample(_, _), Oracle(
       """WITH q AS (SELECT doc_id,
         |  floor((0.5 * (n_stop / greatest(n_tok, 1.0))
         |      + 0.3 * least(len / 500.0, 1.0)
@@ -1516,7 +1245,7 @@ object SparkEntry {
         |SELECT d.doc_id, d.source, q.quality
         |FROM documents d JOIN q USING (doc_id) JOIN u USING (doc_id)
         |WHERE u.uval < q.quality * 4294967296.0
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
     // weightedSample(k=300, seed=wks0): Efraimidis–Spirakis replayed —
     // same quality CTE, same digit-fold uniform (+1 so u > 0), ranked
     // on the 10-dp rounded ln(u)/max(quality, 0.01) key.
@@ -1526,7 +1255,7 @@ object SparkEntry {
     // by 1 ulp exactly on a 10-dp boundary of es_key). A red hash here
     // after a data refresh means "find the boundary doc_id and compare
     // unrounded ln values", not "the operator broke".
-    "corpus_weighted_sample" ->
+    QuerySpec("corpus_weighted_sample", TextAnalysis.weightedSample(_, _), Oracle(
       """WITH q AS (SELECT doc_id,
         |  floor((0.5 * (n_stop / greatest(n_tok, 1.0))
         |      + 0.3 * least(len / 500.0, 1.0)
@@ -1546,10 +1275,10 @@ object SparkEntry {
         |  floor((ln((u.uval + 1.0) / 4294967296.0)
         |         / greatest(q.quality, 0.01)) * 1e10 + 0.5) / 1e10 AS es_key
         |FROM q JOIN u USING (doc_id)
-        |ORDER BY es_key DESC, doc_id ASC LIMIT 300""".stripMargin,
+        |ORDER BY es_key DESC, doc_id ASC LIMIT 300""".stripMargin)),
     // splitAssign(seed=split0, 90/5/5): same digit-fold uniform, bucket
     // by mod 100
-    "corpus_split_assign" ->
+    QuerySpec("corpus_split_assign", TextAnalysis.splitAssign(_, _), Oracle(
       """WITH u AS (SELECT doc_id, CAST(list_sum(list_transform(range(1, 9),
         |        i -> (strpos('0123456789abcdef',
         |                substr(md5('split0|' || CAST(doc_id AS VARCHAR)), i, 1)) - 1)
@@ -1560,11 +1289,11 @@ object SparkEntry {
         |       WHEN u.bucket < 95 THEN 'val'
         |       ELSE 'test' END AS split
         |FROM documents d JOIN u USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
     // sourceVocabOverlap: the oracle states the intersection as the
     // token-keyed self-join the engine deliberately avoids (its
     // row-local pair expansion must reproduce it exactly)
-    "corpus_source_overlap" ->
+    QuerySpec("corpus_source_overlap", TextAnalysis.sourceVocabOverlap(_, _), Oracle(
       """WITH st AS (SELECT DISTINCT source, token FROM
         |       (SELECT source,
         |          unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS token
@@ -1577,11 +1306,11 @@ object SparkEntry {
         |  i.n_shared,
         |  floor((CAST(i.n_shared AS DOUBLE) / (va.vocab + vb.vocab - i.n_shared)) * 1e4 + 0.5) / 1e4 AS jaccard
         |FROM i JOIN v va ON va.source = i.src_a JOIN v vb ON vb.source = i.src_b
-        |ORDER BY i.src_a, i.src_b""".stripMargin,
+        |ORDER BY i.src_a, i.src_b""".stripMargin)),
     // bigramStats(k=100): row-local adjacent pairs, top-K by count with
     // (w1, w2) tiebreak, PMI via the same 6-dp log10 replay as
     // text_unigram_logprob
-    "corpus_bigrams" ->
+    QuerySpec("corpus_bigrams", TextAnalysis.bigramStats(_, _), Oracle(
       """WITH w AS (SELECT list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
         |bgp AS (SELECT unnest([{'w1': words[i], 'w2': words[i+1]}
@@ -1596,10 +1325,10 @@ object SparkEntry {
         |  floor(log10((CAST(t.n_pair AS DOUBLE) * tot.nu * tot.nu) /
         |              (CAST(tot.nb AS DOUBLE) * u1.n_w * u2.n_w)) * 1e6 + 0.5) / 1e6 AS pmi
         |FROM topk t JOIN u u1 ON u1.w = t.w1 JOIN u u2 ON u2.w = t.w2, tot
-        |ORDER BY t.n_pair DESC, t.w1, t.w2""".stripMargin,
+        |ORDER BY t.n_pair DESC, t.w1, t.w2""".stripMargin)),
     // bigramLogProb: add-one-smoothed conditional lp at 6 dp, exact
     // integer-unit mean (the text_unigram_logprob device, one n-gram up)
-    "text_bigram_logprob" ->
+    QuerySpec("text_bigram_logprob", TextAnalysis.bigramLogProb(_, _), Oracle(
       """WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -1618,10 +1347,10 @@ object SparkEntry {
         |SELECT doc_id, count(*) AS n_bigrams,
         |  floor((CAST(sum(CAST(floor(lp * 1e6 + 0.5) AS BIGINT)) AS DOUBLE)
         |         / (count(*) * 1e6)) * 1e4 + 0.5) / 1e4 AS avg_logprob
-        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // zipfFit(topN=1000): logs quantized at 6 dp, exact integer-unit
     // sums, identical IEEE least-squares arithmetic in both engines
-    "corpus_zipf" ->
+    QuerySpec("corpus_zipf", TextAnalysis.zipfFit(_, _), Oracle(
       """WITH f AS (SELECT t AS token, count(*) AS cnt
         |           FROM (SELECT unnest(list_filter(string_split_regex(text, '[ \n]'),
         |                                           x -> x != '')) AS t
@@ -1640,12 +1369,12 @@ object SparkEntry {
         |SELECT n AS n_fit,
         |  floor(((n * sxy - sx * sy) / (n * sxx - sx * sx)) * 1e4 + 0.5) / 1e4 AS slope,
         |  floor(((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n) * 1e4 + 0.5) / 1e4 AS intercept
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin)),
     // bpeMergeStep: top pair replays the bigram CTE; greedy non-overlap
     // merge count = plain adjacent-match count when w1 != w2 (overlap
     // impossible), floor(run/2) over w1-runs (gaps-and-islands) when
     // w1 = w2
-    "text_bpe_merge" ->
+    QuerySpec("text_bpe_merge", TextAnalysis.bpeMergeStep(_, _), Oracle(
       """WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -1676,33 +1405,38 @@ object SparkEntry {
         |FROM w d CROSS JOIN top
         |  LEFT JOIN c1 ON c1.doc_id = d.doc_id
         |  LEFT JOIN c2 ON c2.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
     // bpeTrain(rounds=5): the k-round trainer replayed literally — each
     // round re-splits the chr(2)-delimited symbol strings for the pair
     // count, picks the (count desc, w1, w2) winner, and applies the
     // same literal replace() the Spark side runs (identical left-to-
     // right non-overlapping scan semantics in both engines); merges
     // fall out of chr(1) counts, symbols out of chr(2) counts
-    "text_bpe_train" -> (bpeReplayCtes +
+    QuerySpec("text_bpe_train", TextAnalysis.bpeTrain(_, _), Oracle((bpeReplayCtes +
       """
         |SELECT round, w1, w2, n_pair,
         |  glued - lag(glued, 1, 0) OVER (ORDER BY round) AS n_merges,
         |  n_tokens_after
         |FROM (SELECT * FROM r1 UNION ALL SELECT * FROM r2 UNION ALL SELECT * FROM r3
         |      UNION ALL SELECT * FROM r4 UNION ALL SELECT * FROM r5)
-        |ORDER BY round""".stripMargin),
+        |ORDER BY round""".stripMargin))),
+    // the k>>5 regime: 8 scans x up-to-64 disjoint merges (~318 learned
+    // on this corpus) instead of one corpus scan per merge
     // bpeTrainBatched(scans=8, batch=64, window=32768): per scan, rank
     // the pair counts, replay the greedy disjoint selection as a
     // recursive CTE (state = used-symbol list), fold the kept merges
     // over the corpus in one list_reduce pass
-    "text_bpe_train_batched" -> bpeBatchedTrainSql(8, 64, 32768),
+    QuerySpec("text_bpe_train_batched", TextAnalysis.bpeTrainBatched(_, _),
+      Oracle(bpeBatchedTrainSql(8, 64, 32768))),
     // bpeEncodeHoldoutBatched: batched training on even doc_ids, then
     // each scan's kept merges fold over the odd split in learned order
-    "text_bpe_holdout_batched" -> bpeBatchedHoldoutSql(8, 64, 32768),
+    QuerySpec("text_bpe_holdout_batched", TextAnalysis.bpeEncodeHoldoutBatched(_, _),
+      Oracle(bpeBatchedHoldoutSql(8, 64, 32768))),
     // bpeEncodeBatched: the full-corpus encode equals the batched
     // trainer's final rewritten state s8 (replay-equivalence: scan k's
     // merges apply to exactly the state scan k trained on)
-    "text_bpe_apply_batched" -> (bpeBatchedCtesOver("", 8, 64, 32768) +
+    QuerySpec("text_bpe_apply_batched", TextAnalysis.bpeEncodeBatched(_, _),
+      Oracle((bpeBatchedCtesOver("", 8, 64, 32768) +
       """
         |SELECT doc_id,
         |  CAST((length(s) - length(replace(s, chr(1), '')))
@@ -1712,13 +1446,13 @@ object SparkEntry {
         |  replace(array_to_string(list_filter(string_split(s, chr(2)), x -> x != ''), ' '),
         |          chr(1), '_') AS encoded
         |FROM s8
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin))),
     // bpeEncode(rounds=5): the SAME 5-round replay as text_bpe_train
     // (identical s0..s5 chain), but the final projection reads the
     // ENCODED corpus state s5 per document — counts off the delimited
     // chr(1)/chr(2) representation (2 seps per symbol, 1 glue per
     // merge), encoded string by re-joining the symbols with spaces
-    "text_bpe_apply" -> (bpeReplayCtes +
+    QuerySpec("text_bpe_apply", TextAnalysis.bpeEncode(_, _), Oracle((bpeReplayCtes +
       """
         |SELECT doc_id,
         |  CAST((length(s) - length(replace(s, chr(1), '')))
@@ -1728,11 +1462,12 @@ object SparkEntry {
         |  replace(array_to_string(list_filter(string_split(s, chr(2)), x -> x != ''), ' '),
         |          chr(1), '_') AS encoded
         |FROM s5
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin))),
     // bpeEncodeHoldout(rounds=5): train t/g on even doc_ids, replay the
     // learned merges over the odd split (h0..h5), project per doc —
     // the train/apply separation a tokenizer team operates
-    "text_bpe_encode_holdout" -> (bpeHoldoutCtes +
+    QuerySpec("text_bpe_encode_holdout", TextAnalysis.bpeEncodeHoldout(_, _),
+      Oracle((bpeHoldoutCtes +
       """
         |SELECT doc_id,
         |  CAST((length(s) - length(replace(s, chr(1), '')))
@@ -1742,20 +1477,20 @@ object SparkEntry {
         |  replace(array_to_string(list_filter(string_split(s, chr(2)), x -> x != ''), ' '),
         |          chr(1), '_') AS encoded
         |FROM h5
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin))),
     // docFrequencySpectrum: distinct (doc, token) then two bounded aggs
-    "corpus_df_spectrum" ->
+    QuerySpec("corpus_df_spectrum", TextAnalysis.docFrequencySpectrum(_, _), Oracle(
       """WITH dt AS (SELECT DISTINCT doc_id, t AS token
         |            FROM (SELECT doc_id,
         |                    unnest(list_filter(string_split_regex(text, '[ \n]'),
         |                                       x -> x != '')) AS t
         |                  FROM documents)),
         |df AS (SELECT token, count(*) AS df FROM dt GROUP BY token)
-        |SELECT df, count(*) AS n_tokens FROM df GROUP BY df ORDER BY df""".stripMargin,
+        |SELECT df, count(*) AS n_tokens FROM df GROUP BY df ORDER BY df""".stripMargin)),
     // splitLeakage(threshold=0.8): the ngram-jaccard pair CTE (same body
     // as ngramJaccardOracle) joined twice against the split-bucket
     // replay (same md5 device as corpus_split_assign)
-    "corpus_split_leakage" ->
+    QuerySpec("corpus_split_leakage", TextAnalysis.splitLeakage(_, _), Oracle(
       """WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -1783,9 +1518,9 @@ object SparkEntry {
         |SELECT p.doc_a, p.doc_b, p.jaccard, sa.split AS split_a, sb.split AS split_b
         |FROM pr p JOIN sp sa ON sa.doc_id = p.doc_a JOIN sp sb ON sb.doc_id = p.doc_b
         |WHERE sa.split != sb.split
-        |ORDER BY p.doc_a, p.doc_b""".stripMargin,
+        |ORDER BY p.doc_a, p.doc_b""".stripMargin)),
     // splitRepair: the leakage CTEs + follow-the-minimum-doc_a rule
-    "corpus_split_repair" ->
+    QuerySpec("corpus_split_repair", TextAnalysis.splitRepair(_, _), Oracle(
       """WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -1816,13 +1551,13 @@ object SparkEntry {
         |SELECT m.doc_id, so.split AS old_split, sn.split AS new_split, m.follow_doc
         |FROM mv m JOIN sp so ON so.doc_id = m.doc_id
         |  JOIN sp sn ON sn.doc_id = m.follow_doc
-        |ORDER BY m.doc_id""".stripMargin,
+        |ORDER BY m.doc_id""".stripMargin)),
     // splitRepairConverged: the fixpoint is "every doc in a near-dup
     // connected component takes the split of the component's min-id
     // doc" — the oracle states the components as the same recursive
     // transitive closure dedup_clusters uses, over the same 3-gram
     // jaccard ≥ 0.8 pair set, then replays the split hash
-    "corpus_split_repair_converged" ->
+    QuerySpec("corpus_split_repair_converged", TextAnalysis.splitRepairConverged(_, _), Oracle(
       """WITH RECURSIVE pairs AS (
         |  WITH w AS (SELECT doc_id,
         |               list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
@@ -1858,10 +1593,10 @@ object SparkEntry {
         |FROM cl c JOIN sp so ON so.doc_id = c.doc_id
         |  JOIN sp sn ON sn.doc_id = c.cluster_id
         |WHERE so.split != sn.split
-        |ORDER BY c.doc_id""".stripMargin,
+        |ORDER BY c.doc_id""".stripMargin)),
     // readability: sentence segments on [.!?] (trimmed non-empty, min
     // 1), vowel-group syllables (min 1/word), 4-dp Flesch replay
-    "text_readability" ->
+    QuerySpec("text_readability", TextAnalysis.readability(_, _), Oracle(
       """WITH t AS (SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS words,
         |    greatest(len(list_filter(list_transform(string_split_regex(text, '[.!?]'),
@@ -1878,20 +1613,20 @@ object SparkEntry {
         |  floor((206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_sentences)
         |         - 84.6 * (CAST(n_syllables AS DOUBLE) / greatest(n_words, 1)))
         |        * 1e4 + 0.5) / 1e4 AS reading_ease
-        |FROM s ORDER BY doc_id""".stripMargin,
+        |FROM s ORDER BY doc_id""".stripMargin)),
     // lengthHistogram(binWidth=100): integer bins over the same
     // whitespace-token count the signal index stores
-    "text_length_histogram" ->
+    QuerySpec("text_length_histogram", TextAnalysis.lengthHistogram(_, _), Oracle(
       """WITH n AS (SELECT source,
         |             len(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS n_tok
         |           FROM documents)
         |SELECT source, CAST(floor(n_tok / 100.0) AS BIGINT) AS bin,
         |  CAST(floor(n_tok / 100.0) AS BIGINT) * 100 AS bin_low,
         |  count(*) AS n_docs
-        |FROM n GROUP BY 1, 2, 3 ORDER BY source, bin""".stripMargin,
+        |FROM n GROUP BY 1, 2, 3 ORDER BY source, bin""".stripMargin)),
     // embeddingDecontaminate(eval=src9, tau=0.4): per-pair 4-dp rounding
     // inside the max, exactly as the engine aggregates
-    "embedding_decontamination" ->
+    QuerySpec("embedding_decontamination", Similarity.embeddingDecontaminate(_, _), Oracle(
       """WITH n AS (SELECT vec_id, embedding,
         |             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS nrm
         |           FROM embeddings),
@@ -1906,10 +1641,10 @@ object SparkEntry {
         |            / (t.nrm * e.nrm)) * 1e4 + 0.5) / 1e4) AS max_eval_cosine
         |      FROM tr t, ev e GROUP BY 1)
         |SELECT doc_id, max_eval_cosine, max_eval_cosine >= 0.4 AS contaminated
-        |FROM m ORDER BY doc_id""".stripMargin,
+        |FROM m ORDER BY doc_id""".stripMargin)),
     // qualityBudgetCalibration(budget=20000): quality replayed per doc,
     // binned at its own 4-dp grid, window cumsum over the tiny bin table
-    "curation_quality_threshold" ->
+    QuerySpec("curation_quality_threshold", TextAnalysis.qualityBudgetCalibration(_, _), Oracle(
       """WITH q AS (SELECT doc_id,
         |  floor((0.5 * (n_stop / greatest(n_tok, 1.0))
         |      + 0.3 * least(len / 500.0, 1.0)
@@ -1932,10 +1667,10 @@ object SparkEntry {
         |      FROM bins)
         |SELECT quality, n_docs, bin_tokens, cum_tokens,
         |  (cum_tokens - bin_tokens) < 20000 AS kept
-        |FROM c ORDER BY quality DESC""".stripMargin,
+        |FROM c ORDER BY quality DESC""".stripMargin)),
     // vocabStats: wordcount-currency counts per (source, token); hapax =
     // count-1 tokens; top token tiebreaks lexicographically
-    "corpus_vocab_stats" ->
+    QuerySpec("corpus_vocab_stats", TextAnalysis.vocabStats(_, _), Oracle(
       """WITH tok AS (SELECT source,
         |               unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS token
         |             FROM documents),
@@ -1951,10 +1686,10 @@ object SparkEntry {
         |SELECT a.source, a.total_tokens, a.vocab_size, a.hapax_count,
         |  floor((CAST(a.vocab_size AS DOUBLE) / a.total_tokens) * 1e4 + 0.5) / 1e4 AS type_token_ratio,
         |  t.top_token, t.top_token_count
-        |FROM agg a JOIN top t USING (source) ORDER BY a.source""".stripMargin,
+        |FROM agg a JOIN top t USING (source) ORDER BY a.source""".stripMargin)),
     // applyDiff: MERGE INTO replayed as full-outer join + filter; the
     // change-set is the same %11/%7/%13 scheme snapshotDiff diffs against
-    "corpus_apply_diff" ->
+    QuerySpec("corpus_apply_diff", TextAnalysis.applyDiff(_, _), Oracle(
       """WITH base AS (SELECT doc_id, text FROM documents),
         |ch AS (
         |  SELECT doc_id, 'delete' AS op, CAST(NULL AS VARCHAR) AS text_new
@@ -1970,10 +1705,10 @@ object SparkEntry {
         |        c.op
         |      FROM base b FULL OUTER JOIN ch c ON b.doc_id = c.doc_id)
         |SELECT doc_id, md5(text) AS fp FROM m
-        |WHERE op IS NULL OR op != 'delete' ORDER BY doc_id""".stripMargin,
+        |WHERE op IS NULL OR op != 'delete' ORDER BY doc_id""".stripMargin)),
     // snapshotDiff: synthetic next snapshot (%11 dropped, %7 edited,
     // %13 re-added under a shifted id), md5 compare
-    "corpus_diff" ->
+    QuerySpec("corpus_diff", TextAnalysis.snapshotDiff(_, _), Oracle(
       """WITH oldd AS (SELECT doc_id, md5(text) AS old_fp FROM documents),
         |nextd AS (
         |  SELECT doc_id, md5(CASE WHEN doc_id % 7 = 0 THEN text || ' [edited]' ELSE text END) AS new_fp
@@ -1986,11 +1721,13 @@ object SparkEntry {
         |       WHEN old_fp != new_fp THEN 'changed'
         |       ELSE 'unchanged' END AS status
         |FROM oldd FULL OUTER JOIN nextd USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
+    // chunk-grain churn accounting over the same synthetic refresh —
+    // both snapshots' fp sets are stored artifacts
     // chunkSnapshotDiff: the same synthetic refresh as corpus_diff, at
     // chunk grain — replay stride-32 chunking on both snapshots, take
     // per-source distinct fps, full-outer diff, source-bounded rollup
-    "corpus_chunk_diff" ->
+    QuerySpec("corpus_chunk_diff", TextAnalysis.chunkSnapshotDiff(_, _), Oracle(
       """WITH t AS (SELECT doc_id, source, text FROM documents),
         |nx AS (SELECT doc_id, source,
         |         CASE WHEN doc_id % 7 = 0 THEN text || ' [edited]' ELSE text END AS text
@@ -2024,11 +1761,11 @@ object SparkEntry {
         |        CAST(sum(CASE WHEN o_fp IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_added,
         |        CAST(sum(CASE WHEN n_fp IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_removed
         |      FROM j GROUP BY source)
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin)),
     // keepBestPerCluster: near-dup clusters (recursive closure over the
     // exact-jaccard pairs, as dedup_clusters) + quality (as text_quality),
     // keep the argmax-quality member per cluster, ties to lower doc_id
-    "curation_keep_best" ->
+    QuerySpec("curation_keep_best", TextAnalysis.keepBestPerCluster(_, _), Oracle(
       """WITH RECURSIVE pairs AS (
         |  WITH w AS (SELECT doc_id,
         |               list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
@@ -2069,13 +1806,13 @@ object SparkEntry {
         |SELECT doc_id, cluster_id, quality,
         |  (row_number() OVER (PARTITION BY cluster_id
         |                      ORDER BY quality DESC, doc_id ASC)) = 1 AS kept
-        |FROM withc ORDER BY doc_id""".stripMargin,
+        |FROM withc ORDER BY doc_id""".stripMargin)),
     // keepBestPerClusterWinnow: same retention tail as curation_keep_best
     // (recursive closure -> min-label clusters -> argmax quality), but
     // the pairs are the CHAR-LEVEL winnowing pairs (as the green
     // dedup_winnowing oracle: rolling 8-gram hash, window-min sketch,
     // >64-doc fingerprint guard, sketch-Jaccard >= 0.5)
-    "curation_keep_best_winnow" ->
+    QuerySpec("curation_keep_best_winnow", TextAnalysis.keepBestPerClusterWinnow(_, _), Oracle(
       """WITH RECURSIVE pairs AS (
         |  WITH t AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t FROM documents),
         |  h AS (
@@ -2123,8 +1860,8 @@ object SparkEntry {
         |SELECT doc_id, cluster_id, quality,
         |  (row_number() OVER (PARTITION BY cluster_id
         |                      ORDER BY quality DESC, doc_id ASC)) = 1 AS kept
-        |FROM withc ORDER BY doc_id""".stripMargin,
-    "text_lang_id" ->
+        |FROM withc ORDER BY doc_id""".stripMargin)),
+    QuerySpec("text_lang_id", TextAnalysis.langId(_, _), Oracle(
       """SELECT doc_id, lang AS lang_label,
         |  CASE WHEN hd > greatest(he, hs, hf) THEN 'de'
         |       WHEN hf > greatest(he, hs) THEN 'fr'
@@ -2138,10 +1875,10 @@ object SparkEntry {
         |        len(regexp_extract_all(text, '\b(le|la|les|de|et|est|une)\b')) AS hf,
         |        len(regexp_extract_all(text, '\b(der|die|das|und|ist|nicht)\b')) AS hd
         |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
     // mixedLanguage: the langid CASE per LINE, doc pred from the same
     // CASE over the whole text; detected = any profile hit
-    "text_mixed_language" ->
+    QuerySpec("text_mixed_language", TextAnalysis.mixedLanguage(_, _), Oracle(
       """WITH dp AS (SELECT doc_id,
         |    CASE WHEN hd > greatest(he, hs, hf) THEN 'de'
         |         WHEN hf > greatest(he, hs) THEN 'fr'
@@ -2179,17 +1916,18 @@ object SparkEntry {
         |        * 1e4 + 0.5) / 1e4 AS mixed_frac
         |FROM ll l JOIN dp d ON d.doc_id = l.doc_id
         |GROUP BY l.doc_id, d.doc_lang
-        |ORDER BY l.doc_id""".stripMargin,
-    "text_fingerprint" ->
+        |ORDER BY l.doc_id""".stripMargin)),
+    QuerySpec("text_fingerprint", TextAnalysis.fingerprint(_, _), Oracle(
       """SELECT doc_id,
         |  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint,
         |  sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint_sha256
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "dedup_exact" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    // --- deduplication ---
+    QuerySpec("dedup_exact", Dedup.exact(_, _), Oracle(
       """SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint,
         |  min(doc_id) AS canonical_id, count(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY canonical_id""".stripMargin,
-    "text_fingerprint_rolling" ->
+        |FROM documents GROUP BY 1 ORDER BY canonical_id""".stripMargin)),
+    QuerySpec("text_fingerprint_rolling", TextAnalysis.rollingFingerprint(_, _), Oracle(
       """SELECT doc_id,
         |  CASE WHEN length(text) = 0 THEN 0 ELSE
         |    list_reduce(list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT)),
@@ -2198,11 +1936,11 @@ object SparkEntry {
         |    list_reduce(list_transform(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ''),
         |                               c -> CAST(ord(c) AS BIGINT)),
         |                (acc, x) -> (acc * 131 + x) % 2147483647) END AS rhash_norm
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // winnowingSketch(k=8, w=8): per-position Karp-Rabin k-gram hashes
     // (same base-131 mod 2^31-1 recurrence as text_fingerprint_rolling),
     // window-min selection, distinct per doc
-    "text_winnowing" ->
+    QuerySpec("text_winnowing", TextAnalysis.winnowingSketch(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
         |  FROM documents),
@@ -2220,27 +1958,27 @@ object SparkEntry {
         |  FROM h)
         |SELECT doc_id, u.fp AS fp, CAST(min(u.win) AS INT) AS first_win,
         |  count(*) AS n_windows
-        |FROM m GROUP BY doc_id, u.fp ORDER BY doc_id, fp""".stripMargin,
-    "events_pivot" ->
+        |FROM m GROUP BY doc_id, u.fp ORDER BY doc_id, fp""".stripMargin)),
+    QuerySpec("events_pivot", Events.userTypePivot(_, _), Oracle(
       """SELECT user_id,
         |  count(*) FILTER (WHERE event_type = 'click') AS click,
         |  count(*) FILTER (WHERE event_type = 'error') AS error,
         |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
         |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
         |  count(*) FILTER (WHERE event_type = 'view') AS view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "quantity_percentiles" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    QuerySpec("quantity_percentiles", Events.quantityPercentiles(_, _), Oracle(
       """SELECT l_returnflag,
         |  quantile_cont(l_quantity, 0.5) AS p50_qty,
         |  quantile_cont(l_quantity, 0.25) AS p25_qty,
         |  quantile_cont(l_quantity, 0.75) AS p75_qty,
         |  min(l_quantity) AS min_qty, max(l_quantity) AS max_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
     // ANALYZE-style per-column stats: one UNION branch per lineitem
     // column; numeric min/max rounded 4 dp like the engine, non-numeric
     // min/max NULL; distinct counts are exact (NULLs excluded by both
     // engines' count(DISTINCT ...))
-    "stats_lineitem_columns" -> {
+    QuerySpec("stats_lineitem_columns", Stats.lineitemColumnStats(_, _), Oracle({
       val numeric = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
         "l_quantity", "l_extendedprice", "l_discount", "l_tax")
       val other = Seq("l_returnflag", "l_linestatus", "l_shipdate")
@@ -2258,11 +1996,13 @@ object SparkEntry {
              |FROM lineitem""".stripMargin
         }
       branches.mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
-    },
+    })),
+    QuerySpec("stats_lineitem_columns_approx", Stats.lineitemColumnStatsApprox(_, _),
+      Bound(SketchBounds.lineitemColumnsApprox)),
     // equi-depth histogram: 4-dp-rounded quantile_cont boundaries (the
     // same percentile<->quantile_cont equivalence quantity_percentiles
     // relies on), bucket = number of boundaries strictly below the value
-    "stats_equidepth_histogram" ->
+    QuerySpec("stats_equidepth_histogram", Stats.orderValueEquidepth(_, _), Oracle(
       """WITH b AS (SELECT list_transform(
         |    quantile_cont(o_totalprice, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
         |    q -> floor(q * 1e4 + 0.5) / 1e4) AS bs FROM orders),
@@ -2271,8 +2011,12 @@ object SparkEntry {
         |      FROM orders, b)
         |SELECT CAST(bucket AS INT) AS bucket, count(*) AS n_orders,
         |  min(v) AS lo, max(v) AS hi
-        |FROM a GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "curation_pipeline" ->
+        |FROM a GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    // no oracle: GK-sketch boundaries are engine-specific; StatsSpec
+    // bounds the bucket depths against the exact form
+    QuerySpec("stats_equidepth_histogram_approx", Stats.orderValueEquidepthApprox(_, _),
+      Bound(SketchBounds.equidepthApprox)),
+    QuerySpec("curation_pipeline", TextAnalysis.curationPipeline(_, _), Oracle(
       (curationCtes + "\n" +
        """SELECT d.doc_id, q.quality, t.n_tokens
         |FROM documents d
@@ -2281,10 +2025,10 @@ object SparkEntry {
         |  JOIN t ON t.doc_id = d.doc_id
         |WHERE q.quality >= 0.4 AND l.lang_pred = 'en'
         |  AND NOT EXISTS (SELECT 1 FROM losers x WHERE x.doc_id = d.doc_id)
-        |ORDER BY d.doc_id""".stripMargin),
+        |ORDER BY d.doc_id""".stripMargin))),
     // splitBudget: the manifest CTEs rolled to split grain; share over
     // the manifest total
-    "corpus_split_budget" ->
+    QuerySpec("corpus_split_budget", TextAnalysis.splitBudget(_, _), Oracle(
       (curationCtes + ",\n" +
        """sp AS (SELECT doc_id,
         |         CASE WHEN bucket < 90 THEN 'train'
@@ -2306,10 +2050,10 @@ object SparkEntry {
         |SELECT split, count(*) AS n_docs,
         |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
         |  floor((CAST(sum(n_tokens) AS DOUBLE) / (SELECT t FROM tot)) * 1e4 + 0.5) / 1e4 AS token_share
-        |FROM m GROUP BY split ORDER BY split""".stripMargin),
+        |FROM m GROUP BY split ORDER BY split""".stripMargin))),
     // boilerplateBySource(minDf=2): the line-dedup hash currency at
     // source grain
-    "text_boilerplate_by_source" ->
+    QuerySpec("text_boilerplate_by_source", TextAnalysis.boilerplateBySource(_, _), Oracle(
       """WITH pl AS (SELECT source, doc_id, md5(trim(l)) AS h
         |            FROM (SELECT source, doc_id, unnest(string_split(text, chr(10))) AS l
         |                  FROM documents)
@@ -2322,10 +2066,10 @@ object SparkEntry {
         |SELECT nl.source, nl.n_lines, coalesce(nb.n_boiler, 0) AS n_boiler,
         |  floor((CAST(coalesce(nb.n_boiler, 0) AS DOUBLE) / nl.n_lines) * 1e4 + 0.5) / 1e4 AS boilerplate_frac
         |FROM nl LEFT JOIN nb ON nb.source = nl.source
-        |ORDER BY nl.source""".stripMargin,
+        |ORDER BY nl.source""".stripMargin)),
     // hashClassifier(dim=1024): md5-bucket features, md5-derived weight
     // table (range join), qavg mean, flag on the ROUNDED score
-    "text_hash_classifier" ->
+    QuerySpec("text_hash_classifier", TextAnalysis.hashClassifier(_, _), Oracle(
       """WITH toks AS (SELECT doc_id,
         |    unnest(list_filter(string_split_regex(text, '[ \n]'), t -> t != '')) AS tok
         |  FROM documents),
@@ -2344,16 +2088,18 @@ object SparkEntry {
         |                / (count(*) * 1e6)) * 1e4 + 0.5) / 1e4 AS score
         |       FROM f JOIN wt USING (bucket) GROUP BY doc_id)
         |SELECT doc_id, n_tokens, score, score > 0 AS flagged
-        |FROM sc ORDER BY doc_id""".stripMargin,
+        |FROM sc ORDER BY doc_id""".stripMargin)),
+    // the trained quality classifier: k-step deterministic logistic
+    // regression over hashed features, gate-labeled; weights stored
     // classifierTrain: the full k-step gradient-descent replay lives in
     // classifierCtes; the query is the final weight table
-    "text_classifier_train" ->
+    QuerySpec("text_classifier_train", TextAnalysis.classifierTrain(_, _), Oracle(
       (classifierCtes + "\n" +
-       """SELECT bucket, w FROM w8 ORDER BY bucket""".stripMargin),
+       """SELECT bucket, w FROM w8 ORDER BY bucket""".stripMargin))),
     // classifierScore: margins against the replayed final-step (w8)
     // weights, rational
     // sigmoid, prediction, and the gate label the trainer learned from
-    "text_classifier_score" ->
+    QuerySpec("text_classifier_score", TextAnalysis.classifierScore(_, _), Oracle(
       (classifierCtes + "\n" +
        """SELECT doc_id,
         |  floor((0.5 + 0.5 * m / (1.0 + abs(m))) * 1e6 + 0.5) / 1e6 AS score,
@@ -2362,11 +2108,12 @@ object SparkEntry {
         |        CAST(sum(CAST(floor(b.x * pw.w * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6 AS m,
         |        min(b.y) AS y
         |      FROM cbase b JOIN w8 pw ON b.bucket = pw.bucket GROUP BY b.doc_id)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin))),
+    // generalization evidence: train on even docs, score the unseen odd
     // classifierHoldout: even-half gradient replay (classifierHoldoutCtes
     // trains on doc_id % 2 = 0), scored over the UNSEEN odd-half feature
     // set (prefix s)
-    "text_classifier_holdout" ->
+    QuerySpec("text_classifier_holdout", TextAnalysis.classifierHoldout(_, _), Oracle(
       (classifierHoldoutCtes + "\n" +
        """SELECT doc_id,
         |  floor((0.5 + 0.5 * m / (1.0 + abs(m))) * 1e6 + 0.5) / 1e6 AS score,
@@ -2375,15 +2122,18 @@ object SparkEntry {
         |        CAST(sum(CAST(floor(b.x * pw.w * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6 AS m,
         |        min(b.y) AS y
         |      FROM sbase b JOIN w8 pw ON b.bucket = pw.bucket GROUP BY b.doc_id)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin))),
+    // bounded-sample trainer (r16): k-doc deterministic sample, same
+    // 8-step replay — the flat-cold-cost posture of a 100 TB catalog
     // sampled trainer: sample selection (ORDER BY seeded md5 LIMIT k)
     // + the same 8 gradient steps, over the sampled docs only
-    "text_classifier_train_sampled" ->
+    QuerySpec("text_classifier_train_sampled", TextAnalysis.classifierTrainSampled(_, _), Oracle(
       (classifierSampledCtes + "\n" +
-       """SELECT bucket, w FROM w8 ORDER BY bucket""".stripMargin),
+       """SELECT bucket, w FROM w8 ORDER BY bucket""".stripMargin))),
+    // full-corpus inference under the sample-trained weights
     // sampled-train / full-corpus-score: margins of EVERY doc (feature
     // prefix s) against the sample-trained w8
-    "text_classifier_score_sampled" ->
+    QuerySpec("text_classifier_score_sampled", TextAnalysis.classifierScoreSampled(_, _), Oracle(
       (classifierSampledScoreCtes + "\n" +
        """SELECT doc_id,
         |  floor((0.5 + 0.5 * m / (1.0 + abs(m))) * 1e6 + 0.5) / 1e6 AS score,
@@ -2392,11 +2142,13 @@ object SparkEntry {
         |        CAST(sum(CAST(floor(b.x * pw.w * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6 AS m,
         |        min(b.y) AS y
         |      FROM sbase b JOIN w8 pw ON b.bucket = pw.bucket GROUP BY b.doc_id)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin))),
+    // streaming classifier inference (r16): stream-static scoring
+    // against the stored weight artifact, rollup in foreachBatch
     // streaming inference twin: same stored full-corpus weights, same
     // scorer code path, restricted to the arriving odd half — the
     // batch oracle with the arrival filter
-    "stream_classifier_score" ->
+    QuerySpec("stream_classifier_score", EventStream.classifierScoreViaStream(_, _), Oracle(
       (classifierCtes + "\n" +
        """SELECT doc_id,
         |  floor((0.5 + 0.5 * m / (1.0 + abs(m))) * 1e6 + 0.5) / 1e6 AS score,
@@ -2406,11 +2158,13 @@ object SparkEntry {
         |        min(b.y) AS y
         |      FROM cbase b JOIN w8 pw ON b.bucket = pw.bucket GROUP BY b.doc_id)
         |WHERE doc_id % 2 = 1
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)), drain = true),
+    // the LEARNED curation gate (r16): classifier prediction replaces
+    // the heuristic quality threshold in the pipeline keep set
     // the LEARNED curation gate: classifier replay (cbase/w8) chained
     // in front of the curation CTEs; keep = predicted ∧ lang gate ∧
     // not a near-dup loser, with the heuristic quality riding along
-    "curation_classifier" ->
+    QuerySpec("curation_classifier", TextAnalysis.curationClassifier(_, _), Oracle(
       (classifierCtes + ",\n" + curationCtesBody + "\n" +
        """SELECT s.doc_id,
         |  floor((0.5 + 0.5 * s.m / (1.0 + abs(s.m))) * 1e6 + 0.5) / 1e6 AS score,
@@ -2423,10 +2177,10 @@ object SparkEntry {
         |JOIN t ON t.doc_id = s.doc_id
         |WHERE s.m >= 0 AND l.lang_pred = 'en'
         |  AND s.doc_id NOT IN (SELECT doc_id FROM losers)
-        |ORDER BY s.doc_id""".stripMargin),
+        |ORDER BY s.doc_id""".stripMargin))),
     // exportManifest: the curation_pipeline survivors × split hash ×
     // epoch-shuffle key — every piece replays an already-green oracle
-    "corpus_export_manifest" ->
+    QuerySpec("corpus_export_manifest", TextAnalysis.exportManifest(_, _), Oracle(
       (curationCtes + ",\n" +
        """sp AS (SELECT doc_id,
         |         CASE WHEN bucket < 90 THEN 'train'
@@ -2446,8 +2200,8 @@ object SparkEntry {
         |  JOIN sp ON sp.doc_id = d.doc_id
         |WHERE q.quality >= 0.4 AND l.lang_pred = 'en'
         |  AND NOT EXISTS (SELECT 1 FROM losers x WHERE x.doc_id = d.doc_id)
-        |ORDER BY sp.split, shuffle_key, d.doc_id""".stripMargin),
-    "curation_gated" ->
+        |ORDER BY sp.split, shuffle_key, d.doc_id""".stripMargin))),
+    QuerySpec("curation_gated", TextAnalysis.curationGated(_, _), Oracle(
       (curationCtes + ",\n" +
        """rb AS (SELECT doc_id,
         |  list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS toks FROM documents),
@@ -2483,19 +2237,22 @@ object SparkEntry {
         |  AND NOT EXISTS (SELECT 1 FROM losers x WHERE x.doc_id = d.doc_id)
         |  AND r.dup_gram_frac <= 0.12 AND r.top_token_frac <= 0.14
         |  AND r.distinct_ratio >= 0.35
-        |ORDER BY d.doc_id""".stripMargin),
-    "events_range_join" ->
+        |ORDER BY d.doc_id""".stripMargin))),
+    QuerySpec("events_range_join", Events.nearbyEventPairs(_, _), Oracle(
       """SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
         |  epoch_us(b.ts) - epoch_us(a.ts) AS diff_us
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
         |  AND abs(epoch_us(b.ts) - epoch_us(a.ts)) <= 300000000
-        |ORDER BY a.user_id, event_a, event_b""".stripMargin,
+        |ORDER BY a.user_id, event_a, event_b""".stripMargin)),
+    // bounded sibling (r14): per-event top-m nearest-in-time neighbors
+    // — ≤ N·m output at any skew, the interface the range-join guard's
+    // refusal points skewed corpora at
     // nearbyEventTopM(gap=5m, m=3): candidates are the 3 positional
     // predecessors/successors in per-user (us, event_id) order (the
     // seq-distance join replays Spark's lag/lead window exactly),
     // filtered to the gap, ranked by (|Δt|, event_b), top 3 kept
-    "events_nearby_topm" ->
+    QuerySpec("events_nearby_topm", Events.nearbyEventTopM(_, _), Oracle(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us,
         |    row_number() OVER (PARTITION BY user_id
@@ -2512,8 +2269,8 @@ object SparkEntry {
         |                               ORDER BY adiff, event_b) AS rn
         |  FROM c)
         |SELECT user_id, event_a, event_b, diff_us
-        |FROM r WHERE rn <= 3 ORDER BY user_id, event_a, event_b""".stripMargin,
-    "lineitem_unpivot" ->
+        |FROM r WHERE rn <= 3 ORDER BY user_id, event_a, event_b""".stripMargin)),
+    QuerySpec("lineitem_unpivot", Events.lineitemUnpivot(_, _), Oracle(
       """SELECT l_returnflag, 'mean_discount' AS metric, floor((CAST(sum(CAST(floor((l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / (count(l_discount) * 1e6)) * 1e4 + 0.5) / 1e4 AS value
         |FROM lineitem GROUP BY l_returnflag
         |UNION ALL
@@ -2522,11 +2279,11 @@ object SparkEntry {
         |UNION ALL
         |SELECT l_returnflag, 'total_qty' AS metric, sum(l_quantity) AS value
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag, metric""".stripMargin,
+        |ORDER BY l_returnflag, metric""".stripMargin)),
     // stratifiedSample(seed=ss0): the seeded-md5 uniform (digit fold,
     // exact in a double) against each stratum's fraction * 2^32 — the
     // qualitySample device, so membership replays exactly
-    "stratified_sample" ->
+    QuerySpec("stratified_sample", Events.stratifiedSample(_, _), Oracle(
       """WITH u AS (SELECT event_id, list_sum(list_transform(range(1, 9),
         |        i -> (strpos('0123456789abcdef',
         |                substr(md5('ss0|' || CAST(event_id AS VARCHAR)), i, 1)) - 1)
@@ -2538,26 +2295,40 @@ object SparkEntry {
         |                  WHEN 'click' THEN 0.5 WHEN 'view' THEN 0.25
         |                  WHEN 'purchase' THEN 1.0 WHEN 'error' THEN 0.1
         |                  ELSE 0.0 END) * 4294967296.0
-        |ORDER BY e.event_id""".stripMargin,
-    "ann_topk_ivf" -> ivfTrainedOracle(2),
-    "ann_knn_join" -> knnJoinOracle(2, 3),
+        |ORDER BY e.event_id""".stripMargin)),
+    QuerySpec("ann_topk_ivf", Similarity.ivfTopK(_, _), Oracle(ivfTrainedOracle(2))),
+    QuerySpec("ann_knn_join", Similarity.knnJoin(_, _), Oracle(knnJoinOracle(2, 3))),
+    // the heap form: top-k as a mergeable bounded aggregation, so the
+    // exchange carries ≤k rows per vector instead of the full
+    // nprobe·N·√N candidate relation the window form sorts — the
+    // measured 100× bottleneck (same scoring, same oracle as the
+    // window form)
     // identical semantics to the window form — only the physical top-k
     // strategy differs, so the SAME oracle pins both
-    "ann_knn_join_heap" -> knnJoinOracle(2, 3),
-    "ann_knn_join_pq" -> knnJoinPqOracle(2, 3, 6, 96),
+    QuerySpec("ann_knn_join_heap", Similarity.knnJoinHeap(_, _), Oracle(knnJoinOracle(2, 3))),
+    QuerySpec("events_distinct_rollup", Events.distinctUsersViaSketchRollup(_, _),
+      Bound(SketchBounds.distinctRollup)),
+    // the code-currency form: candidates scored via symmetric PQ (SDC
+    // table lookups over the stored code index, ~6× less join payload
+    // than float vectors), exact rerank on each vector's shortlist only
+    QuerySpec("ann_knn_join_pq", Similarity.knnJoinPq(_, _), Oracle(knnJoinPqOracle(2, 3, 6, 96))),
     // events_distinct_rollup: HLL sketch estimates differ per engine ->
     // rows-only check; AsOfJoinSpec bounds error <5% and asserts the
     // union-of-daily-sketches estimate equals the direct sketch (the
     // mergeability contract)
-    "ann_incremental_assign" -> ivfIncrementalOracle(2),
+    QuerySpec("ann_incremental_assign", Similarity.incrementalAssign(_, _),
+      Oracle(ivfIncrementalOracle(2))),
+    // quantizer drift trigger (r16): arrival-batch quantization error
+    // vs the training-time profile — the retrain signal completing
+    // ANN continuous-ingest
     // drift trigger: the incremental chain extended by the two
     // error-profile aggregations and the relative-excess verdict
-    "ann_index_drift" -> annDriftOracle(2, 0.2),
-    "ann_index_health" -> indexHealthOracle(2),
-    "ann_recall_curve" -> recallCurveOracle(2),
+    QuerySpec("ann_index_drift", Similarity.indexDrift(_, _), Oracle(annDriftOracle(2, 0.2))),
+    QuerySpec("ann_index_health", Similarity.indexHealth(_, _), Oracle(indexHealthOracle(2))),
+    QuerySpec("ann_recall_curve", Similarity.recallCurve(_, _), Oracle(recallCurveOracle(2))),
     // Q15: correlated max decorrelated onto ONE supplier agg; the cut
     // compares 2-dp quantized revenues
-    "q15_top_supplier" ->
+    QuerySpec("q15_top_supplier", Relational.q15TopSupplier(_, _), Oracle(
       """WITH rev AS (SELECT l_suppkey,
         |    floor((CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
         |          * 1e2 + 0.5) / 1e2 AS total_revenue
@@ -2565,9 +2336,9 @@ object SparkEntry {
         |SELECT s.s_suppkey, s.s_name, r.total_revenue
         |FROM rev r JOIN supplier s ON s.s_suppkey = r.l_suppkey
         |WHERE r.total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s.s_suppkey""".stripMargin,
+        |ORDER BY s.s_suppkey""".stripMargin)),
     // brandSupplierHhi: share² at 8 dp, integer-unit sums, 4-dp display
-    "brand_supplier_hhi" ->
+    QuerySpec("brand_supplier_hhi", Relational.brandSupplierHhi(_, _), Oracle(
       """WITH bs AS (SELECT p.p_brand, l.l_suppkey,
         |    CAST(sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6 AS supp_rev
         |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -2579,10 +2350,10 @@ object SparkEntry {
         |  floor((CAST(sum(CAST(floor((floor(pow(b.supp_rev / t.brand_rev, 2) * 1e8 + 0.5) / 1e8) * 1e8 + 0.5) AS BIGINT)) AS DOUBLE) / 1e8)
         |        * 1e4 + 0.5) / 1e4 AS hhi
         |FROM bs b JOIN tot t ON t.p_brand = b.p_brand
-        |GROUP BY b.p_brand ORDER BY b.p_brand""".stripMargin,
+        |GROUP BY b.p_brand ORDER BY b.p_brand""".stripMargin)),
     // stickiness: the rolling_active correlated-count oracle at 30 days
     // plus the 4-dp ratio
-    "events_stickiness" ->
+    QuerySpec("events_stickiness", Events.stickiness(_, _), Oracle(
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |days AS (SELECT DISTINCT day FROM ud),
         |r AS (SELECT d.day,
@@ -2592,9 +2363,9 @@ object SparkEntry {
         |      FROM days d)
         |SELECT day, dau, mau,
         |  floor((CAST(dau AS DOUBLE) / mau) * 1e4 + 0.5) / 1e4 AS stickiness
-        |FROM r ORDER BY day""".stripMargin,
+        |FROM r ORDER BY day""".stripMargin)),
     // effectiveSize: soft-weight CTEs + 4-dp integer-unit sums
-    "corpus_effective_size" ->
+    QuerySpec("corpus_effective_size", Dedup.effectiveSize(_, _), Oracle(
       """WITH RECURSIVE pairs AS (
         |  WITH w AS (SELECT doc_id,
         |               list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
@@ -2633,10 +2404,10 @@ object SparkEntry {
         |  floor((CAST(sum(CAST(floor(wt.weight * tk.n_tokens * 1e4 + 0.5) AS BIGINT)) AS DOUBLE) / 1e4) * 1e2 + 0.5) / 1e2 AS effective_tokens,
         |  floor((1.0 - (CAST(sum(CAST(floor(wt.weight * tk.n_tokens * 1e4 + 0.5) AS BIGINT)) AS DOUBLE) / 1e4)
         |        / CAST(sum(tk.n_tokens) AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS dedup_savings_frac
-        |FROM wt JOIN tk USING (doc_id)""".stripMargin,
+        |FROM wt JOIN tk USING (doc_id)""".stripMargin)),
     // valueOutliers: Tukey fence from quantile_cont quartiles (the
     // percentile-parity device); mass via the quantized sum
-    "events_value_outliers" ->
+    QuerySpec("events_value_outliers", Events.valueOutliers(_, _), Oracle(
       """WITH f AS (SELECT event_type,
         |    quantile_cont(value, 0.25) AS p25, quantile_cont(value, 0.75) AS p75
         |  FROM events GROUP BY event_type),
@@ -2649,50 +2420,63 @@ object SparkEntry {
         |  floor((CAST(sum(CAST(floor((CASE WHEN e.value < fe.lo OR e.value > fe.hi THEN e.value ELSE 0.0 END) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6)
         |        * 1e2 + 0.5) / 1e2 AS outlier_mass
         |FROM events e JOIN fe ON fe.event_type = e.event_type
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
+        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin)),
     // orderStatusAging: ages vs the max-order-date anchor; integer-day
     // percentiles interpolate identically
-    "orders_status_aging" ->
+    QuerySpec("orders_status_aging", Relational.orderStatusAging(_, _), Oracle(
       """WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS as_of FROM orders)
         |SELECT o_orderstatus, count(*) AS n_orders,
         |  floor((CAST(sum(CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT)) AS DOUBLE) / 1e2) * 1e2 + 0.5) / 1e2 AS total_value,
         |  quantile_cont(datediff('day', CAST(o_orderdate AS DATE), (SELECT as_of FROM mx)), 0.5) AS p50_age,
         |  quantile_cont(datediff('day', CAST(o_orderdate AS DATE), (SELECT as_of FROM mx)), 0.9) AS p90_age,
         |  max(datediff('day', CAST(o_orderdate AS DATE), (SELECT as_of FROM mx))) AS max_age
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
     // dedupRateBySource: the exact-dedup fingerprint currency per source
-    "dedup_rate_by_source" ->
+    QuerySpec("dedup_rate_by_source", Dedup.dedupRateBySource(_, _), Oracle(
       """SELECT source, count(*) AS n_docs,
         |  count(DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))) AS n_unique,
         |  floor((CAST(count(*) - count(DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))) AS DOUBLE)
         |        / count(*)) * 1e4 + 0.5) / 1e4 AS dup_rate
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "dedup_semantic" -> semanticDedupOracle(2, 0.3),
-    "dedup_semantic_keepers" -> semanticKeepersOracle(2, 0.3),
-    "dedup_semantic_topm" -> semanticTopMOracle(2, 0.3, 5),
-    "embedding_prototypicality" -> prototypicalityOracle(2),
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
+    QuerySpec("dedup_semantic", Dedup.semanticDedupPairs(_, _),
+      Oracle(semanticDedupOracle(2, 0.3))),
+    // the prune-list form: one keeper verdict per vector, output LINEAR
+    // in the corpus at any duplication level (the all-pairs view above
+    // owes k²/2 rows per k-clone group — both contracts ship)
+    QuerySpec("dedup_semantic_keepers", Dedup.semanticDedupKeepers(_, _),
+      Oracle(semanticKeepersOracle(2, 0.3))),
+    // the BOUNDED pair form: top-m same-cell neighbors per vector —
+    // ≤ N·m output rows at any duplication, so 100×+ corpora get pairs
+    // without raising the budget (candidates cut to m+1 lowest ids per
+    // partner group at canonical level; never expands member pairs)
+    QuerySpec("dedup_semantic_topm", Dedup.semanticDedupTopM(_, _),
+      Oracle(semanticTopMOracle(2, 0.3, 5))),
+    QuerySpec("embedding_prototypicality", Similarity.prototypicality(_, _),
+      Oracle(prototypicalityOracle(2))),
     // PQ: per-subspace k-means + encoding + ADC replayed end-to-end;
     // every subspace-ordered double sum is list_sum(list(x ORDER BY m))
-    "ann_topk_pq_adc" -> pqAdcOracle(2, 10),
-    "ann_topk_pq" -> pqRerankOracle(2, 50, 10),
-    "ann_topk_ivfpq" -> ivfPqOracle(2, 10),
-    "ann_topk_ivfpq_rerank" -> ivfPqRerankOracle(2, 50, 10),
+    QuerySpec("ann_topk_pq_adc", Similarity.pqTopK(_, _), Oracle(pqAdcOracle(2, 10))),
+    QuerySpec("ann_topk_pq", Similarity.pqRerankTopK(_, _), Oracle(pqRerankOracle(2, 50, 10))),
+    QuerySpec("ann_topk_ivfpq", Similarity.ivfPqTopK(_, _), Oracle(ivfPqOracle(2, 10))),
+    QuerySpec("ann_topk_ivfpq_rerank", Similarity.ivfPqRerankTopK(_, _),
+      Oracle(ivfPqRerankOracle(2, 50, 10))),
     // cluster-balanced sample: replay IVF training+assignment, then the
     // same seeded-md5 draw as corpus_sample_per_group, per cell
-    "corpus_cluster_sample" -> clusterSampleOracle(2, 20),
+    QuerySpec("corpus_cluster_sample", Similarity.clusterBalancedSample(_, _),
+      Oracle(clusterSampleOracle(2, 20))),
     // samplePerGroup(k=10, seed=smp0): same seeded-md5 device as
     // corpus_mixture; row_number ties broken by doc_id in both engines
-    "corpus_sample_per_group" ->
+    QuerySpec("corpus_sample_per_group", TextAnalysis.samplePerGroup(_, _), Oracle(
       """SELECT source, doc_id, sample_key, CAST(rk AS INT) AS rk
         |FROM (SELECT source, doc_id,
         |        md5('smp0|' || CAST(doc_id AS VARCHAR)) AS sample_key,
         |        row_number() OVER (PARTITION BY source
         |          ORDER BY md5('smp0|' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
         |      FROM documents)
-        |WHERE rk <= 10 ORDER BY source, rk""".stripMargin,
+        |WHERE rk <= 10 ORDER BY source, rk""".stripMargin)),
     // incrementalDedup: odd-id batch vs even-id prior; md5-of-normalized
     // fingerprints; within-batch copies resolve to the batch-min doc_id
-    "dedup_incremental" ->
+    QuerySpec("dedup_incremental", Dedup.incrementalDedup(_, _), Oracle(
       """WITH f AS (SELECT doc_id,
         |             md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
         |           FROM documents),
@@ -2707,12 +2491,12 @@ object SparkEntry {
         |FROM f b JOIN bm ON b.fingerprint = bm.fingerprint
         |  LEFT JOIN prior p ON b.fingerprint = p.fingerprint
         |WHERE b.doc_id % 2 = 1
-        |ORDER BY b.doc_id""".stripMargin,
+        |ORDER BY b.doc_id""".stripMargin)),
     // editDistancePairs(sim=0.8, cand=0.3, n=3): replay the 0.3-threshold
     // shingle blocker (as the green jaccard oracle at 0.8), union the
     // exact-match fallback for sub-3-token docs, verify with DuckDB's
     // built-in levenshtein over the same normalized text
-    "dedup_edit_distance" ->
+    QuerySpec("dedup_edit_distance", Dedup.editDistancePairs(_, _), Oracle(
       """WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -2744,10 +2528,10 @@ object SparkEntry {
         |  FROM allc c JOIN t ta ON ta.doc_id = c.doc_a
         |    JOIN t tb ON tb.doc_id = c.doc_b)
         |WHERE edit_sim >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin)),
     // rangeSearch(tau=0.3, numQueries=20): identical cosine arithmetic to
     // the green ann_topk_brute oracle, membership filter instead of rank
-    "ann_range_search" ->
+    QuerySpec("ann_range_search", Similarity.rangeSearch(_, _), Oracle(
       """WITH n AS (SELECT vec_id, embedding,
         |             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS nrm
         |           FROM embeddings)
@@ -2759,19 +2543,19 @@ object SparkEntry {
         |      / (q.nrm * c.nrm)) * 1e4 + 0.5) / 1e4 AS cosine
         |  FROM n q JOIN n c ON q.vec_id != c.vec_id
         |  WHERE q.vec_id < 20)
-        |WHERE cosine >= 0.3 ORDER BY query_id, neighbor_id""".stripMargin,
+        |WHERE cosine >= 0.3 ORDER BY query_id, neighbor_id""".stripMargin)),
     // bucketed-layout join: the oracle is the PLAIN join+agg — bucketing
     // (like salting) must be invisible in the result; the driver
     // hash-check proves the exchange-free plan returns the same rows
-    "layout_bucketed_join" ->
+    QuerySpec("layout_bucketed_join", Layout.bucketedOrderRevenue(_, _), Oracle(
       """SELECT o_orderpriority, count(*) AS n_items,
         |  count(DISTINCT o.o_orderkey) AS n_orders,
         |  CAST(sum(CAST(floor((l.l_extendedprice * (1 - l.l_discount)) * 1e2 + 0.5) AS BIGINT)) AS DOUBLE) / 1e2 AS revenue
         |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
     // zorderLayout(bits=16, bucketBits=8): pure `& << >>` bit arithmetic
     // replayed exactly (bit positions are disjoint, so sum == bitwise OR)
-    "layout_zorder" ->
+    QuerySpec("layout_zorder", Layout.zorderLayout(_, _), Oracle(
       """WITH z AS (SELECT l_orderkey, l_partkey,
         |  CAST(list_sum(list_transform(range(0, 16), i ->
         |      (((l_orderkey & 65535) >> i) & 1) * (CAST(1 AS BIGINT) << CAST(2 * i + 1 AS INT))
@@ -2780,7 +2564,9 @@ object SparkEntry {
         |SELECT zval >> 24 AS bucket, count(*) AS n_rows,
         |  min(l_orderkey) AS min_orderkey, max(l_orderkey) AS max_orderkey,
         |  min(l_partkey) AS min_partkey, max(l_partkey) AS max_partkey
-        |FROM z GROUP BY bucket ORDER BY bucket""".stripMargin,
+        |FROM z GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    // chunk-grain dedup (r13): the linear interface the DP guard's
+    // refusal names for book-length near-duplicate editions
     // dupSpans(n=5): positional 5-grams joined as STRINGS where Spark
     // joins xxhash64 keys — same accepted-collision equivalence as the
     // decontamination oracle
@@ -2788,7 +2574,7 @@ object SparkEntry {
     // (overlap 0 → every start below n is kept; an empty doc still
     // yields its start-0 chunk), md5 chunk fingerprints, one row per
     // DISTINCT chunk with occurrence count / doc spread / keeper
-    "dedup_chunk_keepers" ->
+    QuerySpec("dedup_chunk_keepers", Dedup.chunkDedupKeepers(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -2801,11 +2587,14 @@ object SparkEntry {
         |        FROM t))
         |SELECT chunk_fp, count(*) AS n_copies,
         |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS keeper_doc
-        |FROM c GROUP BY chunk_fp ORDER BY chunk_fp""".stripMargin,
+        |FROM c GROUP BY chunk_fp ORDER BY chunk_fp""".stripMargin)),
+    // catalog refresh closing the continuous-ingest loop: merge the
+    // odd-id batch into the stored even-id keeper index (mergeable
+    // aggregates; must equal the from-scratch index over the corpus)
     // chunkIndexRefresh: merge-equals-recompute — absorbing the odd batch
     // into the stored even index must equal the from-scratch keeper
     // table over the WHOLE corpus, so the oracle is exactly that
-    "dedup_chunk_index_refresh" ->
+    QuerySpec("dedup_chunk_index_refresh", Dedup.chunkIndexRefresh(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -2818,14 +2607,17 @@ object SparkEntry {
         |        FROM t))
         |SELECT chunk_fp, count(*) AS n_copies,
         |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS keeper_doc
-        |FROM c GROUP BY chunk_fp ORDER BY chunk_fp""".stripMargin,
+        |FROM c GROUP BY chunk_fp ORDER BY chunk_fp""".stripMargin)),
+    // content-defined chunking: boundaries declared by token content
+    // (md5 suffix rule), so insertions REALIGN instead of shifting
+    // every boundary — the shift-robust sibling of text_chunks
     // cdcChunksOf(hexSuffix='0', maxChunkTokens=128): a token whose md5
     // ends in '0' closes the chunk; an oversized content-defined range
     // splits at stride 128 (the LBFS forced break, r14). starts/ends
     // arithmetic replayed with list HOFs + parallel unnest; the split
     // replays as per-range range(s, e+1, 128) with en=min(st+127, e0),
     // and chunk_id as the per-doc rank of st (st strictly increases).
-    "text_cdc_chunks" ->
+    QuerySpec("text_cdc_chunks", TextAnalysis.cdcChunkDocs(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -2857,10 +2649,10 @@ object SparkEntry {
         |  CAST(st AS INT) AS start_tok,
         |  CAST(len(list_slice(toks, st + 1, en + 1)) AS INT) AS n_chunk_tokens,
         |  array_to_string(list_slice(toks, st + 1, en + 1), ' ') AS chunk_text
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
     // cdcDedupKeepers: keeper agg over the CDC chunk stream (same
     // boundary + forced-split rule as text_cdc_chunks)
-    "dedup_cdc_keepers" ->
+    QuerySpec("dedup_cdc_keepers", Dedup.cdcDedupKeepers(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -2892,11 +2684,13 @@ object SparkEntry {
         |  FROM sp)
         |SELECT chunk_fp, count(*) AS n_copies,
         |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS keeper_doc
-        |FROM c GROUP BY chunk_fp ORDER BY chunk_fp""".stripMargin,
+        |FROM c GROUP BY chunk_fp ORDER BY chunk_fp""".stripMargin)),
+    // CDC-grain writeback (r14): the same first-occurrence scrub over
+    // content-defined chunks — completes the CDC family symmetrically
     // cdcDedupScrub: CDC chunking (boundary + forced-split rule above),
     // first-occurrence election per fingerprint, per-doc re-concat of
     // surviving chunks in chunk order — same tail as dedup_chunk_scrub
-    "dedup_cdc_scrub" ->
+    QuerySpec("dedup_cdc_scrub", Dedup.cdcDedupScrub(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -2936,11 +2730,13 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         |  coalesce(string_agg(CASE WHEN rn = 1 THEN chunk_text END, ' '
         |                      ORDER BY chunk_id), '') AS clean_text
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    // chunk-dedup writeback: every duplicated chunk survives ONCE, at
+    // its first occurrence; per-doc cleaned text in chunk order
     // chunkDedupScrub: first-occurrence election per chunk fingerprint
     // (row_number over (fp; doc_id, chunk_id)), per-doc re-concat of
     // surviving chunks in chunk order
-    "dedup_chunk_scrub" ->
+    QuerySpec("dedup_chunk_scrub", Dedup.chunkDedupScrub(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -2960,10 +2756,12 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         |  coalesce(string_agg(CASE WHEN rn = 1 THEN chunk_text END, ' '
         |                      ORDER BY chunk_id), '') AS clean_text
-        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    // chunk-grain incremental dedup (r14): arrivals' per-doc novelty
+    // vs the prior corpus's distinct-chunk index
     // chunkDedupIncremental: odd-id arrivals' chunks probed against the
     // even-id prior's DISTINCT chunk fingerprints; per-arrival novelty
-    "dedup_chunk_incremental" ->
+    QuerySpec("dedup_chunk_incremental", Dedup.chunkDedupIncremental(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -2984,11 +2782,11 @@ object SparkEntry {
         |  sum(CASE WHEN p.chunk_fp IS NOT NULL THEN 1 ELSE 0 END) = count(*)
         |    AS fully_covered
         |FROM b LEFT JOIN p ON b.chunk_fp = p.chunk_fp
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
+        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin)),
     // chunkDedupRate: per-doc fraction of chunks shared with >= 1 OTHER
     // doc (distinct-doc df, same semantics as text_dup_spans at chunk
     // grain)
-    "dedup_chunk_rate" ->
+    QuerySpec("dedup_chunk_rate", Dedup.chunkDedupRate(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -3008,8 +2806,8 @@ object SparkEntry {
         |  CAST(coalesce(d.n_shared_chunks, 0) AS BIGINT) AS n_shared_chunks,
         |  floor((CAST(coalesce(d.n_shared_chunks, 0) AS DOUBLE) / tot.n_chunks) * 1e4 + 0.5) / 1e4 AS shared_frac
         |FROM tot LEFT JOIN dup d ON tot.doc_id = d.doc_id
-        |ORDER BY tot.doc_id""".stripMargin,
-    "text_dup_spans" ->
+        |ORDER BY tot.doc_id""".stripMargin)),
+    QuerySpec("text_dup_spans", Dedup.dupSpans(_, _), Oracle(
       """WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -3026,11 +2824,11 @@ object SparkEntry {
         |  CAST(coalesce(d.n_dup_grams, 0) AS BIGINT) AS n_dup_grams,
         |  floor((CAST(coalesce(d.n_dup_grams, 0) AS DOUBLE) / s.n_grams) * 1e4 + 0.5) / 1e4 AS dup_frac
         |FROM sizes s LEFT JOIN dup d ON s.doc_id = d.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
+        |ORDER BY s.doc_id""".stripMargin)),
     // line dedup: df counts DISTINCT docs per trimmed-line hash; lines
     // at df >= 2 are dropped from every doc; clean_text re-concatenates
     // the surviving non-blank lines in position order
-    "text_line_dedup" ->
+    QuerySpec("text_line_dedup", Dedup.lineDedup(_, _), Oracle(
       """WITH base AS (SELECT doc_id, string_split(text, chr(10)) AS arr FROM documents),
         |pl AS (SELECT doc_id, u.pos AS pos, u.line AS line
         |       FROM (SELECT doc_id,
@@ -3057,12 +2855,12 @@ object SparkEntry {
         |  LEFT JOIN nl ON nl.doc_id = b.doc_id
         |  LEFT JOIN nd ON nd.doc_id = b.doc_id
         |  LEFT JOIN clean c ON c.doc_id = b.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
+        |ORDER BY b.doc_id""".stripMargin)),
     // dupSpanMerge(n=5): same cross-doc gram currency as text_dup_spans
     // (grams joined as STRINGS where Spark joins xxhash64 keys), then the
     // interval merge replayed as the standard window cumsum: a gram
     // starts a new span iff pos > max(prior ends) + 1
-    "text_dup_span_merge" ->
+    QuerySpec("text_dup_span_merge", Dedup.dupSpanMerge(_, _), Oracle(
       """WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -3097,12 +2895,12 @@ object SparkEntry {
         |  floor((CAST(coalesce(p.dup_tok, 0) AS DOUBLE)
         |        / greatest(len(w.words), 1)) * 1e4 + 0.5) / 1e4 AS dup_tok_frac
         |FROM w LEFT JOIN perdoc p ON w.doc_id = p.doc_id
-        |ORDER BY w.doc_id""".stripMargin,
+        |ORDER BY w.doc_id""".stripMargin)),
     // dupSpanScrub(n=5): same span CTEs as text_dup_span_merge, then the
     // covered positions expand (spans are disjoint by construction) and
     // survivors re-join on single spaces; Spark's row-local filter HOF
     // must reproduce the position-set subtraction exactly
-    "text_scrub_dup_spans" ->
+    QuerySpec("text_scrub_dup_spans", Dedup.dupSpanScrub(_, _), Oracle(
       ("""WITH w AS (SELECT doc_id,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -3112,11 +2910,11 @@ object SparkEntry {
         |  coalesce(c.clean_text, '') AS clean_text
         |FROM w LEFT JOIN perdoc p ON w.doc_id = p.doc_id
         |  LEFT JOIN clean c ON w.doc_id = c.doc_id
-        |ORDER BY w.doc_id""".stripMargin),
+        |ORDER BY w.doc_id""".stripMargin))),
     // curationScrubbed: the pipeline's keep set (quality + langid +
     // dup-loser anti-join CTEs) intersected with the scrub CTEs — both
     // families read the same w words CTE, so the statement shares it
-    "curation_scrubbed" ->
+    QuerySpec("curation_scrubbed", TextAnalysis.curationScrubbed(_, _), Oracle(
       (curationCtes + ",\n" + scrubSpanCtes + "\n" +
        """SELECT d.doc_id, q.quality,
         |  CAST(coalesce(p.dup_tok, 0) AS INT) AS n_removed,
@@ -3130,13 +2928,13 @@ object SparkEntry {
         |  LEFT JOIN clean c ON c.doc_id = d.doc_id
         |WHERE q.quality >= 0.4 AND l.lang_pred = 'en'
         |  AND NOT EXISTS (SELECT 1 FROM losers x WHERE x.doc_id = d.doc_id)
-        |ORDER BY d.doc_id""".stripMargin),
+        |ORDER BY d.doc_id""".stripMargin))),
     // repetitionSignals(n=5): Spark computes every signal row-locally
     // with sorted-array HOFs; the oracle replays each as the equivalent
     // unnest + GROUP BY multiplicity query (top-token multiplicity = the
     // longest equal run in the sorted token array; duplicated-gram
     // occupancy = occurrences of grams with within-doc multiplicity > 1)
-    "text_repetition" ->
+    QuerySpec("text_repetition", TextAnalysis.repetitionSignals(_, _), Oracle(
       """WITH base AS (SELECT doc_id,
         |                list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS toks
         |              FROM documents),
@@ -3163,8 +2961,8 @@ object SparkEntry {
         |        / greatest(greatest(len(b.toks) - 4, 0), 1)) * 1e4 + 0.5) / 1e4 AS dup_gram_frac
         |FROM base b LEFT JOIN toptok t ON b.doc_id = t.doc_id
         |  LEFT JOIN dupg d ON b.doc_id = d.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-    "parts_left_revenue" ->
+        |ORDER BY b.doc_id""".stripMargin)),
+    QuerySpec("parts_left_revenue", Relational.partsLeftRevenue(_, _), Oracle(
       """SELECT p_partkey, p_brand, coalesce(rev, 0.0) AS revenue_1996,
         |  rev IS NULL AS unsold_1996
         |FROM part LEFT JOIN (
@@ -3173,8 +2971,8 @@ object SparkEntry {
         |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |    AND l_shipdate < TIMESTAMP '1997-01-01'
         |  GROUP BY l_partkey) r ON p_partkey = l_partkey
-        |ORDER BY p_partkey""".stripMargin,
-    "customer_activity_transition" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    QuerySpec("customer_activity_transition", Relational.customerActivityTransition(_, _), Oracle(
       """WITH a AS (SELECT DISTINCT o_custkey AS c96 FROM orders
         |           WHERE o_orderdate >= TIMESTAMP '1996-01-01'
         |             AND o_orderdate < TIMESTAMP '1997-01-01'),
@@ -3185,22 +2983,24 @@ object SparkEntry {
         |  CASE WHEN c97 IS NOT NULL THEN 'active' ELSE 'inactive' END AS y1997,
         |  count(*) AS n_customers
         |FROM a FULL OUTER JOIN b ON c96 = c97
-        |GROUP BY y1996, y1997 ORDER BY y1996, y1997""".stripMargin,
-    "sql_brand_floor_parts" ->
+        |GROUP BY y1996, y1997 ORDER BY y1996, y1997""".stripMargin)),
+    // --- SQL front door (correlated subqueries, decorrelated by Catalyst) ---
+    QuerySpec("sql_brand_floor_parts", Relational.sqlBrandFloorParts(_, _), Oracle(
       """SELECT p_partkey, p_brand, p_retailprice
         |FROM part p
         |WHERE p_retailprice = (SELECT min(p_retailprice) FROM part
         |                       WHERE p_brand = p.p_brand)
-        |ORDER BY p_brand, p_partkey""".stripMargin,
-    "sql_priority_customers" ->
+        |ORDER BY p_brand, p_partkey""".stripMargin)),
+    QuerySpec("sql_priority_customers", Relational.sqlPriorityCustomers(_, _), Oracle(
       """SELECT c_custkey, c_mktsegment
         |FROM customer
         |WHERE c_custkey IN (SELECT o_custkey FROM orders
         |                    WHERE o_orderpriority = '1-URGENT')
         |  AND c_custkey NOT IN (SELECT o_custkey FROM orders
         |                        WHERE o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
-    "curation_token_budget" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    // --- analytics: running-total caps, second moments, binning ---
+    QuerySpec("curation_token_budget", TextAnalysis.tokenBudgetSample(_, _), Oracle(
       """SELECT source, doc_id, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
         |FROM (SELECT source, doc_id, n_tokens,
         |        sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
@@ -3210,8 +3010,8 @@ object SparkEntry {
 ]'), t -> t != '')) AS INT) AS n_tokens
         |            FROM documents d))
         |WHERE cum_tokens <= 800
-        |ORDER BY source, doc_id""".stripMargin,
-    "events_hourly_anomaly" ->
+        |ORDER BY source, doc_id""".stripMargin)),
+    QuerySpec("events_hourly_anomaly", Events.hourlyAnomalies(_, _), Oracle(
       """WITH hourly AS (
         |  SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS n
         |  FROM events GROUP BY 1, 2),
@@ -3226,12 +3026,12 @@ object SparkEntry {
         |  floor(((h.n - m.mean_n) / m.std_n) * 1e4 + 0.5) / 1e4 AS z
         |FROM hourly h JOIN m ON h.event_type = m.event_type
         |WHERE abs(floor(((h.n - m.mean_n) / m.std_n) * 1e4 + 0.5) / 1e4) >= 2.0
-        |ORDER BY h.event_type, h.hour""".stripMargin,
-    "order_value_histogram" ->
+        |ORDER BY h.event_type, h.hour""".stripMargin)),
+    QuerySpec("order_value_histogram", Events.orderValueHistogram(_, _), Oracle(
       """SELECT bin, bin * 25000.0 AS bin_low, count(*) AS n
         |FROM (SELECT CAST(floor(o_totalprice / 25000.0) AS BIGINT) AS bin FROM orders)
-        |GROUP BY bin ORDER BY bin""".stripMargin,
-    "events_dense_hourly" ->
+        |GROUP BY bin ORDER BY bin""".stripMargin)),
+    QuerySpec("events_dense_hourly", Events.denseHourlyCounts(_, _), Oracle(
       """WITH ev AS (SELECT event_type, date_trunc('hour', ts) AS hour FROM events),
         |b AS (SELECT min(hour) AS mn, max(hour) AS mx FROM ev),
         |hours AS (SELECT unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS hour FROM b),
@@ -3240,8 +3040,8 @@ object SparkEntry {
         |SELECT t.event_type, h.hour, coalesce(c.cnt, 0) AS n
         |FROM hours h CROSS JOIN types t
         |  LEFT JOIN counts c ON c.event_type = t.event_type AND c.hour = h.hour
-        |ORDER BY t.event_type, h.hour""".stripMargin,
-    "dedup_clusters" ->
+        |ORDER BY t.event_type, h.hour""".stripMargin)),
+    QuerySpec("dedup_clusters", Dedup.nearDupClusters(_, _), Oracle(
       """WITH RECURSIVE pairs AS (
         |  WITH w AS (SELECT doc_id,
         |               list_filter(string_split_regex(text, '[ 
@@ -3265,13 +3065,14 @@ object SparkEntry {
         |  SELECT src, src FROM edges
         |  UNION
         |  SELECT rt.a, e.dst FROM rt JOIN edges e ON rt.b = e.src)
-        |SELECT a AS doc_id, min(b) AS cluster_id FROM rt GROUP BY a ORDER BY doc_id""".stripMargin,
-    "dedup_ngram_jaccard" -> ngramJaccardOracle,
+        |SELECT a AS doc_id, min(b) AS cluster_id FROM rt GROUP BY a ORDER BY doc_id""".stripMargin)),
+    QuerySpec("dedup_ngram_jaccard", Dedup.ngramJaccardPairsMaterialized(_, _),
+      Oracle(ngramJaccardOracle)),
     // decontaminate(n=3, evalSource=src9, threshold=0.2): the oracle
     // joins on shingle STRINGS where Spark joins 64-bit xxhash64 keys —
     // same set barring astronomically unlikely collisions (the same
     // equivalence the jaccard oracle relies on)
-    "text_decontamination" ->
+    QuerySpec("text_decontamination", Dedup.decontaminate(_, _), Oracle(
       """WITH w AS (SELECT doc_id, source,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -3290,11 +3091,11 @@ object SparkEntry {
         |  floor((CAST(coalesce(h.n_overlap, 0) AS DOUBLE) / s.n_shingles) * 1e4 + 0.5) / 1e4 AS contamination,
         |  floor((CAST(coalesce(h.n_overlap, 0) AS DOUBLE) / s.n_shingles) * 1e4 + 0.5) / 1e4 >= 0.2 AS contaminated
         |FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
+        |ORDER BY s.doc_id""".stripMargin)),
     // bloomDecontaminate(n=4, threshold=0.15): the Bloom guard is
     // semantics-free (no false negatives; verify join kills false
     // positives), so the oracle is the exact 4-gram overlap
-    "text_bloom_decontamination" ->
+    QuerySpec("text_bloom_decontamination", Dedup.bloomDecontaminate(_, _), Oracle(
       """WITH w AS (SELECT doc_id, source,
         |             list_filter(string_split_regex(text, '[ \n]'), t -> t != '') AS words
         |           FROM documents),
@@ -3313,19 +3114,25 @@ object SparkEntry {
         |  floor((CAST(coalesce(h.n_overlap, 0) AS DOUBLE) / s.n_shingles) * 1e4 + 0.5) / 1e4 AS contamination,
         |  floor((CAST(coalesce(h.n_overlap, 0) AS DOUBLE) / s.n_shingles) * 1e4 + 0.5) / 1e4 >= 0.15 AS contaminated
         |FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
+        |ORDER BY s.doc_id""".stripMargin)),
     // minhash+LSH verifies candidates with exact Jaccard; at 16 bands x 4
     // rows recall at j>=0.8 is ~0.9998 (and 1.0 measured on this corpus),
     // so the exact-Jaccard oracle applies
-    "dedup_minhash_lsh" -> ngramJaccardOracle,
+    QuerySpec("dedup_minhash_lsh", Dedup.minhashLshPairs(_, _), Oracle(ngramJaccardOracle)),
     // merge-refreshed shingle+minhash indexes, asserted END-TO-END:
     // the LSH pair query served from the refreshed artifacts must
     // equal the from-scratch exact-Jaccard pairs — shared oracle
-    "dedup_minhash_index_refresh" -> ngramJaccardOracle,
+    QuerySpec("dedup_minhash_index_refresh", Dedup.minhashLshPairsRefreshed(_, _),
+      Oracle(ngramJaccardOracle)),
+    // sketch-index refresh by merge (r16): the shingle/minhash/simhash
+    // indexes absorb the odd-id arrivals against the stored even-id
+    // artifacts; shingle emits the SQL-replayable canonical profile,
+    // the signature families are asserted END-TO-END (pair queries
+    // served from the refreshed indexes share the from-scratch oracles)
     // merge-refreshed shingle index, canonical profile: full-corpus
     // exact-dup groups (min doc_id, group size) + distinct 3-gram
     // shingle counts of each canonical text
-    "dedup_shingle_index_refresh" ->
+    QuerySpec("dedup_shingle_index_refresh", Dedup.shingleIndexRefresh(_, _), Oracle(
       """WITH grp AS (SELECT min(doc_id) AS doc_id, count(*) AS w
         |             FROM documents GROUP BY text),
         |w AS (SELECT doc_id,
@@ -3339,27 +3146,41 @@ object SparkEntry {
         |cnt AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY doc_id)
         |SELECT g.doc_id, g.w, c.n_shingles
         |FROM grp g JOIN cnt c ON c.doc_id = g.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
+        |ORDER BY g.doc_id""".stripMargin)),
     // dedup_simhash: md5-derived signature bits replayed vote-for-vote;
     // the oracle blocks by the same 16-bit chunks (pigeonhole-lossless,
     // so candidates = exact hd<=3 pairs) and expands canonical groups
-    "dedup_simhash" -> simhashOracle,
+    QuerySpec("dedup_simhash", Dedup.simhashPairs(_, _), Oracle(simhashOracle)),
     // merge-refreshed simhash index, asserted END-TO-END: the hamming
     // pair query served from the refreshed index must equal the
     // from-scratch query — shared oracle
-    "dedup_simhash_index_refresh" -> simhashOracle,
-    "dedup_embedding" -> embeddingPairsOracleSql,
+    QuerySpec("dedup_simhash_index_refresh", Dedup.simhashPairsRefreshed(_, _),
+      Oracle(simhashOracle)),
+    // ROUTING: this is the EXACT cosine threshold join — inherently
+    // Ω(N²) compares (measured p=1.96 to 25×; the θ=0.35 continuum on
+    // this corpus defeats banding, see the operator scaladoc). The r10
+    // centroid+residual block-pair bound prunes provably-empty block
+    // pairs without changing a row, but on near-uniform data the right
+    // tool is a different operator: θ high / top-k → the ANN paths
+    // (ann_topk_lsh / ann_topk_ivf / ann_knn_join); bounded compare
+    // budget with accepted recall → dedup_semantic (within-cell
+    // SemDeDup). Keep this query for when exactness is the contract.
+    QuerySpec("dedup_embedding", Dedup.embeddingNearDupPairsBlocked(_, _),
+      Oracle(embeddingPairsOracleSql)),
+    // the guard's pricing made observable: exact would-be expansion of
+    // both all-pairs views, no expansion executed (oracle counts the
+    // replayed member-level pair tables independently)
     // the guard's pricing formula hash-verified: DuckDB counts BOTH
     // replayed member-level pair tables independently; the Spark side
     // prices them from canonical survivors x group histogram without
     // expanding a single pair
-    "dedup_pair_budgets" ->
+    QuerySpec("dedup_pair_budgets", Dedup.pairExpansionReport(_, _), Oracle(
       (s"""SELECT 'embedding' AS view, CAST(count(*) AS BIGINT) AS expanded_pairs
          |FROM ($embeddingPairsOracleSql)
          |UNION ALL
          |SELECT 'semantic' AS view, CAST(count(*) AS BIGINT) AS expanded_pairs
          |FROM (${semanticDedupOracle(2, 0.3)})
-         |ORDER BY view""".stripMargin),
+         |ORDER BY view""".stripMargin))),
     // lshTopK: full replay of the SRP signature path — plane entries
     // are the seeded-md5 uniform shifted to [-0.5, 0.5) (exact multiples
     // of 2^-32), each signature bit the sign of the QUANTIZED integer
@@ -3368,7 +3189,7 @@ object SparkEntry {
     // exact cosine ranking over the DISTINCT band-collision candidates.
     // Approximate vs brute force by construction (recall spec in
     // SimilaritySpec), but exactly reproducible engine-to-engine.
-    "ann_topk_lsh" ->
+    QuerySpec("ann_topk_lsh", Similarity.lshTopK(_, _), Oracle(
       """WITH pl AS (SELECT pi.plane_id, dj.dim_id,
         |        list_sum(list_transform(range(1, 9),
         |          k -> (strpos('0123456789abcdef',
@@ -3403,8 +3224,9 @@ object SparkEntry {
         |    CAST(row_number() OVER (PARTITION BY query_id
         |                            ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
         |  FROM p)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "ann_topk_brute" ->
+        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+    // --- similarity search ---
+    QuerySpec("ann_topk_brute", Similarity.bruteForceTopK(_, _), Oracle(
       """WITH n AS (SELECT vec_id, embedding,
         |             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS nrm
         |           FROM embeddings),
@@ -3420,34 +3242,35 @@ object SparkEntry {
         |    CAST(row_number() OVER (PARTITION BY query_id
         |                            ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
         |  FROM p)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "events_json_stats" ->
+        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin)),
+    // --- events: JSON, event-time windows, sessionization ---
+    QuerySpec("events_json_stats", Events.jsonStats(_, _), Oracle(
       """SELECT event_type, count(*) AS n, floor((CAST(sum(CAST(floor((value) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / (count(value) * 1e6)) * 1e4 + 0.5) / 1e4 AS avg_value,
         |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
         |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "events_tumbling" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QuerySpec("events_tumbling", Events.tumblingHourly(_, _), Oracle(
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
         |  count(*) AS n, floor((CAST(sum(CAST(floor((value) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) * 1e4 + 0.5) / 1e4 AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
     // identical to events_tumbling BY DESIGN: the streaming path must
     // reproduce the batch aggregation exactly
     // stream-static enrichment: the static side is a batch agg over the
     // same events table, so the batch join+agg replays it exactly
-    "stream_static_enrich" ->
+    QuerySpec("stream_static_enrich", EventStream.staticEnrichViaStream(_, _), Oracle(
       """WITH dim AS (SELECT user_id, count(*) AS user_events FROM events GROUP BY user_id)
         |SELECT e.event_type,
         |  CASE WHEN d.user_events >= 70 THEN 'heavy' ELSE 'light' END AS band,
         |  count(*) AS n,
         |  floor((CAST(sum(CAST(floor((e.value) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) * 1e4 + 0.5) / 1e4 AS sum_value
         |FROM events e JOIN dim d ON e.user_id = d.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin), drain = true),
     // stream-static doc dedup is STATELESS by design: each arriving odd
     // doc is scored only against the even-id prior index, so the oracle
     // is the plain probe (within-batch resolution is dedup_incremental's
     // batch concern, deliberately excluded)
-    "stream_doc_dedup" ->
+    QuerySpec("stream_doc_dedup", EventStream.docDedupViaStream(_, _), Oracle(
       """WITH prior AS (SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint,
         |                      min(doc_id) AS dup_of
         |               FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
@@ -3456,11 +3279,13 @@ object SparkEntry {
         |          FROM documents WHERE doc_id % 2 = 1)
         |SELECT b.doc_id, b.fingerprint, p.dup_of, p.dup_of IS NULL AS is_new
         |FROM batch b LEFT JOIN prior p USING (fingerprint)
-        |ORDER BY b.doc_id""".stripMargin,
+        |ORDER BY b.doc_id""".stripMargin), drain = true),
+    // chunk-grain continuous-ingest twin: stateless chunk+probe against
+    // the STORED chunk-keeper index, per-doc rollup in foreachBatch
     // stream-static chunk dedup mirrors the batch probe exactly (same
     // stored index, same rollup, docs never span micro-batches), so it
     // SHARES dedup_chunk_incremental's oracle
-    "stream_chunk_dedup" ->
+    QuerySpec("stream_chunk_dedup", EventStream.chunkDedupViaStream(_, _), Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(text, '[ \n]'), x -> x != '') AS toks
@@ -3481,23 +3306,27 @@ object SparkEntry {
         |  sum(CASE WHEN p.chunk_fp IS NOT NULL THEN 1 ELSE 0 END) = count(*)
         |    AS fully_covered
         |FROM b LEFT JOIN p ON b.chunk_fp = p.chunk_fp
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
+        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin), drain = true),
     // streaming dedup emits each distinct key once on first arrival —
     // the key SET equals the batch DISTINCT, independent of arrival order
-    "stream_dedup" ->
+    QuerySpec("stream_dedup", EventStream.dedupViaStream(_, _), Oracle(
       """SELECT DISTINCT user_id, event_type,
         |  date_trunc('hour', ts) AS hour_start
-        |FROM events ORDER BY user_id, event_type, hour_start""".stripMargin,
-    "stream_tumbling" ->
+        |FROM events ORDER BY user_id, event_type, hour_start""".stripMargin), drain = true),
+    // the file-source Structured Streaming path, run to completion —
+    // shares events_tumbling's oracle, so stream/batch parity is a
+    // driver-checked fact, not only an sbt-test one
+    QuerySpec("stream_tumbling", EventStream.tumblingViaStream(_, _), Oracle(
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
         |  count(*) AS n, floor((CAST(sum(CAST(floor((value) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / 1e6) * 1e4 + 0.5) / 1e4 AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "events_sliding" -> slidingOracle,
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin), drain = true),
+    QuerySpec("events_sliding", Events.slidingHourly(_, _), Oracle(slidingOracle)),
     // identical to events_sliding BY DESIGN: the streaming sliding
     // window must reproduce the batch overlap exactly
-    "stream_sliding" -> slidingOracle,
+    QuerySpec("stream_sliding", EventStream.slidingViaStream(_, _),
+      Oracle(slidingOracle), drain = true),
     // compactionPlan(target=2 MiB): pure integer ceil arithmetic
-    "layout_compaction_plan" ->
+    QuerySpec("layout_compaction_plan", Layout.compactionPlan(_, _), Oracle(
       """WITH s AS (SELECT source, count(*) AS n_docs,
         |             CAST(sum(n_chars) AS BIGINT) AS total_bytes
         |           FROM documents GROUP BY source)
@@ -3505,15 +3334,16 @@ object SparkEntry {
         |  greatest(1, (total_bytes + 2097151) // 2097152) AS n_files,
         |  (n_docs + greatest(1, (total_bytes + 2097151) // 2097152) - 1)
         |    // greatest(1, (total_bytes + 2097151) // 2097152) AS rows_per_file
-        |FROM s ORDER BY source""".stripMargin,
-    "events_sessionize" -> sessionizeOracle,
+        |FROM s ORDER BY source""".stripMargin)),
+    QuerySpec("events_sessionize", Events.sessionize(_, _), Oracle(sessionizeOracle)),
     // identical to events_sessionize BY DESIGN: the stateful streaming
     // session_window must reproduce the batch sessionization exactly
-    "stream_sessionize" -> sessionizeOracle,
+    QuerySpec("stream_sessionize", EventStream.sessionizeViaStream(_, _),
+      Oracle(sessionizeOracle), drain = true),
     // stream-stream inner join: every purchase within the hour BEFORE
     // each click by the same user — the batch join the streaming
     // two-sided state must reproduce exactly
-    "stream_click_attribution" ->
+    QuerySpec("stream_click_attribution", EventStream.clickAttributionViaStream(_, _), Oracle(
       """SELECT c.event_id AS click_id, c.user_id, c.ts AS click_ts,
         |  p.event_id AS purchase_id, p.ts AS purchase_ts,
         |  floor((p.value) * 1e4 + 0.5) / 1e4 AS purchase_value
@@ -3521,11 +3351,14 @@ object SparkEntry {
         |JOIN (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id
         |  AND p.ts >= c.ts - INTERVAL 1 HOUR AND p.ts <= c.ts
-        |ORDER BY click_id, purchase_id""".stripMargin,
+        |ORDER BY click_id, purchase_id""".stripMargin), drain = true),
+    // the LINEAR attribution interface: one latest-click state row per
+    // user, one output row per attributed purchase — skew-safe where
+    // the all-pairs join above is quadratic on a hot user
     // last-click attribution: each purchase's LATEST click at-or-before
     // it within the hour (ts ties -> largest click_id) — the linear
     // batch answer the streaming one-click-per-user state reproduces
-    "stream_last_click" ->
+    QuerySpec("stream_last_click", EventStream.lastClickViaStream(_, _), Oracle(
       """WITH j AS (
         |  SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
         |    floor((p.value) * 1e4 + 0.5) / 1e4 AS purchase_value,
@@ -3541,21 +3374,21 @@ object SparkEntry {
         |SELECT purchase_id, user_id, purchase_ts, purchase_value,
         |       click_id, click_ts
         |FROM j WHERE rn = 1
-        |ORDER BY purchase_id""".stripMargin,
-    "events_user_stats" ->
+        |ORDER BY purchase_id""".stripMargin), drain = true),
+    QuerySpec("events_user_stats", Events.userStats(_, _), Oracle(
       """SELECT user_id, count(*) AS n_events,
         |  count(DISTINCT event_type) AS n_types,
         |  min(ts) AS first_ts, max(ts) AS last_ts,
         |  floor((CAST(sum(CAST(floor((value) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE) / (count(value) * 1e6)) * 1e4 + 0.5) / 1e4 AS avg_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "events_top_user_hours" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    QuerySpec("events_top_user_hours", Events.topUserHours(_, _), Oracle(
       """SELECT user_id, date_trunc('hour', ts) AS hour, count(*) AS n
         |FROM events GROUP BY 1, 2
-        |ORDER BY n DESC, user_id ASC, hour ASC LIMIT 50""".stripMargin,
+        |ORDER BY n DESC, user_id ASC, hour ASC LIMIT 50""".stripMargin)),
     // funnel(windowHours=1): stage minima chain through strict-after /
     // within-window joins; timestamps are exact microseconds in both
     // engines so the window comparisons agree bit-for-bit
-    "events_funnel" ->
+    QuerySpec("events_funnel", Events.funnel(_, _), Oracle(
       """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
         |           WHERE event_type = 'view' GROUP BY 1),
         |c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN v USING (user_id)
@@ -3567,23 +3400,23 @@ object SparkEntry {
         |SELECT 1 AS stage, 'view' AS event_type, count(*) AS n_users FROM v
         |UNION ALL SELECT 2, 'click', count(*) FROM c
         |UNION ALL SELECT 3, 'purchase', count(*) FROM p
-        |ORDER BY stage""".stripMargin,
+        |ORDER BY stage""".stripMargin)),
     // rollingActiveUsers(windowDays=7): the oracle states the rolling
     // distinct directly as a correlated range count over the distinct
     // (user, day) table — the engine's bounded-replication rewrite must
     // reproduce it exactly
-    "events_rolling_active" ->
+    QuerySpec("events_rolling_active", Events.rollingActiveUsers(_, _), Oracle(
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |days AS (SELECT DISTINCT day FROM ud)
         |SELECT d.day,
         |  (SELECT count(*) FROM ud WHERE ud.day = d.day) AS dau,
         |  (SELECT count(DISTINCT user_id) FROM ud
         |   WHERE ud.day BETWEEN d.day - 6 AND d.day) AS rolling_users
-        |FROM days d ORDER BY day""".stripMargin,
+        |FROM days d ORDER BY day""".stripMargin)),
     // rfmSegments: medians over the per-user frame (quantile_cont =
     // Spark exact percentile over quantized inputs, the
     // quantity_percentiles parity); boundary users land in the − half
-    "events_rfm_segments" ->
+    QuerySpec("events_rfm_segments", Events.rfmSegments(_, _), Oracle(
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day, value FROM events),
         |mx AS (SELECT max(day) AS max_day FROM ev),
         |u AS (SELECT user_id,
@@ -3599,10 +3432,10 @@ object SparkEntry {
         |              CASE WHEN frequency > fm THEN 'F+' ELSE 'F-' END,
         |              CASE WHEN monetary > mm THEN 'M+' ELSE 'M-' END) AS segment,
         |  count(*) AS n_users
-        |FROM u, med GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM u, med GROUP BY 1 ORDER BY 1""".stripMargin)),
     // retentionCohorts(maxOffset=7): cohort = per-user min active day;
     // (user, day) is distinct so count(*) per (cohort, offset) counts users
-    "events_retention_cohorts" ->
+    QuerySpec("events_retention_cohorts", Events.retentionCohorts(_, _), Oracle(
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |co AS (SELECT user_id, min(day) AS cohort_day FROM ud GROUP BY user_id),
         |sz AS (SELECT cohort_day, count(*) AS n_cohort FROM co GROUP BY cohort_day),
@@ -3615,12 +3448,12 @@ object SparkEntry {
         |SELECT a.cohort_day, a.day_offset, a.n_active, s.n_cohort,
         |  floor((CAST(a.n_active AS DOUBLE) / s.n_cohort) * 1e4 + 0.5) / 1e4 AS retention
         |FROM act a JOIN sz s USING (cohort_day)
-        |ORDER BY a.cohort_day, a.day_offset""".stripMargin,
+        |ORDER BY a.cohort_day, a.day_offset""".stripMargin)),
     // containerAudit: the Spark side parses payload length and magic from
     // the GRFT container BYTES; the oracle replays the accounting from the
     // source text (payload = utf8 bytes, container = payload + 26B header
     // + 16B md5 trailer, magic always valid by construction)
-    "multimodal_container_audit" ->
+    QuerySpec("multimodal_container_audit", Multimodal.containerAudit(_, _), Oracle(
       """WITH b AS (SELECT
         |             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
         |                  WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
@@ -3632,10 +3465,10 @@ object SparkEntry {
         |  CAST(count(*) * 42 AS BIGINT) AS total_overhead_bytes,
         |  count(*) AS n_valid_magic,
         |  max(pbytes) AS max_payload_bytes
-        |FROM b GROUP BY modality ORDER BY modality""".stripMargin,
+        |FROM b GROUP BY modality ORDER BY modality""".stripMargin)),
     // dataQualityReport: every constraint is exact arithmetic over the
     // tables, so the oracle is a UNION ALL of scalar-subquery rows
-    "data_quality_report" ->
+    QuerySpec("data_quality_report", Stats.dataQualityReport(_, _), Oracle(
       """WITH c AS (
         |  SELECT 'enum_lineitem_returnflag' AS check_name, 'lineitem' AS table_name,
         |    (SELECT count(*) FROM lineitem) AS n_rows,
@@ -3666,10 +3499,10 @@ object SparkEntry {
         |    (SELECT count(*) FROM lineitem WHERE l_quantity < 1 OR l_quantity > 50))
         |SELECT check_name, table_name, n_rows, n_violations,
         |  n_violations = 0 AS pass
-        |FROM c ORDER BY check_name""".stripMargin,
+        |FROM c ORDER BY check_name""".stripMargin)),
     // blobDedup: checksum groups over the encoded payload; Spark md5 of
     // the UTF-8 blob = DuckDB md5 of the string's bytes
-    "multimodal_dedup" ->
+    QuerySpec("multimodal_dedup", Multimodal.blobDedup(_, _), Oracle(
       """WITH b AS (SELECT doc_id,
         |             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
         |                  WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
@@ -3678,10 +3511,10 @@ object SparkEntry {
         |SELECT checksum, min(doc_id) AS canonical_id, count(*) AS n_copies,
         |  count(DISTINCT modality) AS n_modalities
         |FROM b GROUP BY checksum
-        |ORDER BY canonical_id""".stripMargin,
+        |ORDER BY canonical_id""".stripMargin)),
     // cumulativeUsers: cumulative distinct = running sum of first-seen
     // cohort sizes over the |days|-bounded frame
-    "events_cumulative_users" ->
+    QuerySpec("events_cumulative_users", Events.cumulativeUsers(_, _), Oracle(
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |fs AS (SELECT day, count(*) AS new_users
         |       FROM (SELECT user_id, min(day) AS day FROM ud GROUP BY user_id)
@@ -3691,8 +3524,9 @@ object SparkEntry {
         |  CAST(sum(coalesce(f.new_users, 0)) OVER (ORDER BY d.day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumulative_users
         |FROM dau d LEFT JOIN fs f ON f.day = d.day
-        |ORDER BY d.day""".stripMargin,
-    "multimodal_features" ->
+        |ORDER BY d.day""".stripMargin)),
+    // --- multimodal binary columns (decode stubbed, plumbing real) ---
+    QuerySpec("multimodal_features", Multimodal.features(_, _), Oracle(
       """WITH b AS (SELECT doc_id,
         |             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
         |                  WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
@@ -3710,11 +3544,11 @@ object SparkEntry {
         |  CASE WHEN modality = 'audio'
         |       THEN CAST(8000 + (first % 8) * 4000 AS INT) ELSE 0 END AS sample_rate,
         |  checksum
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin)),
     // frameSamplePlan(target=8, maxDim=224, fps=24): pure integer
     // arithmetic over the replayed stub features — uniform indices
     // floor(k·n/ns), aspect-preserving resize by exact integer division
-    "multimodal_frame_plan" ->
+    QuerySpec("multimodal_frame_plan", Multimodal.frameSamplePlan(_, _), Oracle(
       """WITH b AS (SELECT doc_id,
         |             CAST(octet_length(encode(text)) AS INT) AS n_bytes,
         |             ord(substr(text, 1, 1)) AS first
@@ -3738,7 +3572,7 @@ object SparkEntry {
         |  CAST(CASE WHEN width <= 224 AND height <= 224 THEN height
         |       WHEN width >= height THEN (height * 224) // width
         |       ELSE 224 END AS INT) AS out_h
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin)),
     // frameSampleExec: the Spark side slices actual GRFT payload BYTES
     // (dynamic substr over the binary column) and md5s each frame; the
     // oracle replays the same slices over the source VARCHAR. The two
@@ -3747,7 +3581,7 @@ object SparkEntry {
     // 1.0 has no BLOB substring, so the VARCHAR replay is the only
     // oracle form available. Frame k of n owns payload bytes
     // [k*plen/n, (k+1)*plen/n) — exact integer tiling, no gaps.
-    "multimodal_frame_exec" ->
+    QuerySpec("multimodal_frame_exec", Multimodal.frameSampleExec(_, _), Oracle(
       """WITH b AS (SELECT doc_id, text,
         |             CAST(octet_length(encode(text)) AS INT) AS plen,
         |             ord(substr(text, 1, 1)) AS first
@@ -3778,8 +3612,8 @@ object SparkEntry {
         |      CAST((frame_idx * plen) // n_frames + 1 AS BIGINT),
         |      CAST(((frame_idx + 1) * plen) // n_frames
         |           - (frame_idx * plen) // n_frames AS BIGINT))) AS frame_md5
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-    "multimodal_summary" ->
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin)),
+    QuerySpec("multimodal_summary", Multimodal.modalitySummary(_, _), Oracle(
       """WITH f AS (SELECT doc_id,
         |             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
         |                  WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
@@ -3794,31 +3628,32 @@ object SparkEntry {
         |                 THEN 64 + ((n_bytes * 5 + first) % 1016) ELSE 0 END)) * 1e4 + 0.5) / 1e4 AS avg_height,
         |  max(CASE modality WHEN 'video' THEN CAST(1 + (n_bytes % 240) AS INT)
         |      WHEN 'image' THEN 1 ELSE 0 END) AS max_frames
-        |FROM f GROUP BY modality ORDER BY modality""".stripMargin,
+        |FROM f GROUP BY modality ORDER BY modality""".stripMargin)),
+    // --- custom operators ---
     // events_approx_distinct: HLL sketch values differ per engine -> rows-only check
     // stats_lineitem_columns_approx: same justification — the distinct column is
     // an HLL++ sketch value; StatsSpec bounds it to <10% of the exact form
-    "events_asof_purchase" ->
+    QuerySpec("events_asof_purchase", AsOfJoin.clickAttribution(_, _), Oracle(
       """SELECT c.event_id, c.user_id, c.ts AS click_ts,
         |  p.ts AS last_purchase_ts, floor((p.value) * 1e4 + 0.5) / 1e4 AS last_purchase_value
         |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
         |ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id AND p.ts <= c.ts
-        |ORDER BY c.event_id""".stripMargin,
+        |ORDER BY c.event_id""".stripMargin)),
     // native whole-operator as-of join: SAME oracle as the composition
     // form — the hash compare proves the custom SparkPlan's merge pass
     // equals DuckDB's ASOF JOIN
-    "events_asof_purchase_native" ->
+    QuerySpec("events_asof_purchase_native", AsOfJoin.clickAttributionNative(_, _), Oracle(
       """SELECT c.event_id, c.user_id, c.ts AS click_ts,
         |  p.ts AS last_purchase_ts, floor((p.value) * 1e4 + 0.5) / 1e4 AS last_purchase_value
         |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
         |ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id AND p.ts <= c.ts
-        |ORDER BY c.event_id""".stripMargin,
+        |ORDER BY c.event_id""".stripMargin)),
     // tolerance = pandas semantics: latest match first, THEN the window
     // test — so the oracle is the plain ASOF with a post-hoc CASE, not a
     // windowed join condition
-    "events_asof_purchase_recent" ->
+    QuerySpec("events_asof_purchase_recent", AsOfJoin.clickAttributionRecent(_, _), Oracle(
       """SELECT c.event_id, c.user_id, c.ts AS click_ts,
         |  CASE WHEN p.ts IS NOT NULL AND c.ts - p.ts <= INTERVAL 6 HOUR
         |       THEN p.ts END AS last_purchase_ts,
@@ -3827,10 +3662,10 @@ object SparkEntry {
         |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
         |ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id AND p.ts <= c.ts
-        |ORDER BY c.event_id""".stripMargin,
+        |ORDER BY c.event_id""".stripMargin)),
     // forward as-of: DuckDB flips the ASOF inequality; window CASE as
     // in the backward form
-    "events_asof_conversion" ->
+    QuerySpec("events_asof_conversion", AsOfJoin.clickConversion(_, _), Oracle(
       """SELECT c.event_id, c.user_id, c.ts AS click_ts,
         |  CASE WHEN p.ts IS NOT NULL AND p.ts - c.ts <= INTERVAL 6 HOUR
         |       THEN p.ts END AS conversion_ts,
@@ -3839,10 +3674,10 @@ object SparkEntry {
         |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
         |ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id AND p.ts >= c.ts
-        |ORDER BY c.event_id""".stripMargin,
+        |ORDER BY c.event_id""".stripMargin)),
     // nearest = closer of the two directions, ties backward (pandas);
     // distances compared in exact integer microseconds
-    "events_asof_nearest" ->
+    QuerySpec("events_asof_nearest", AsOfJoin.clickNearestPurchase(_, _), Oracle(
       """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
         |p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')
         |SELECT c.event_id, c.user_id, c.ts AS click_ts,
@@ -3855,7 +3690,9 @@ object SparkEntry {
         |FROM c
         |ASOF LEFT JOIN p b ON c.user_id = b.user_id AND b.ts <= c.ts
         |ASOF LEFT JOIN p f ON c.user_id = f.user_id AND f.ts >= c.ts
-        |ORDER BY c.event_id""".stripMargin,
+        |ORDER BY c.event_id""".stripMargin)),
+    QuerySpec("events_approx_distinct", Events.approxDistinctUsers(_, _),
+      Bound(SketchBounds.approxDistinct)),
   )
 
   private val windowTopOrdersOracle: String =

@@ -23,11 +23,16 @@ object Status {
       val df = Tables.load(spark, sfDir, t)
       println(f"  $t%-12s ${df.count()}%9d rows  ${df.columns.length}%2d cols")
     }
-    val oracled = SparkEntry.oracleSql.keySet
-    println(s"\nqueries (${SparkEntry.queries.size} registered, ${oracled.size} oracle-checked):")
-    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
-      val mark = if (oracled(q)) "oracle" else "rows-only"
-      println(f"  $q%-28s $mark")
+    val specs = SparkEntry.specs
+    println(s"\nqueries (${specs.size} registered, " +
+      s"${SparkEntry.oracleSql.size} oracle-checked, ${specs.count(_.drain)} drains):")
+    specs.sortBy(_.name).foreach { s =>
+      val check = s.check match {
+        case _: QuerySpec.Oracle => "oracle"
+        case _: QuerySpec.Bound => "bound"
+      }
+      val drain = if (s.drain) " drain" else ""
+      println(f"  ${s.name}%-34s $check$drain")
     }
     0
   }

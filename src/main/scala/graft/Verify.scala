@@ -1,15 +1,17 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registered query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional dev filter: comma-separated query names (args 2) — the
     // driver always invokes with exactly two args, so the full dump is
-    // unchanged; this only narrows local iteration runs.
+    // unchanged; this only narrows local iteration runs, and the
+    // narrowed oracle_sql.json holds only the queries that ran.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val selected = SparkEntry.specs.filter(s => only.forall(_.contains(s.name)))
     val spark = GraftSession.local(GraftSession.cpus(4), "graft-verify")
     new java.io.File(outDir).mkdirs()
     // machine-readable per-run record (r15 verdict #1): dumped row count
@@ -18,11 +20,9 @@ object Verify {
     // driver-side in one file read instead of resting on a prose claim
     val rowCounts = scala.collection.mutable.LinkedHashMap[String, Long]()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case QuerySpec(name, build, _, _) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         rowCounts(name) = spark.read.parquet(s"$outDir/$name").count()
       } catch { case e: Throwable =>
@@ -42,17 +42,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .collect { case QuerySpec(k, _, QuerySpec.Oracle(v), _) => s"${q(k)}: ${q(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val oracled = SparkEntry.oracleSql.keySet
+    val noOracle = SparkEntry.specs
+      .collect { case QuerySpec(name, _, _: QuerySpec.Bound, _) => name }
     val summary =
-      s"""{"registered": ${SparkEntry.queries.size},
+      s"""{"registered": ${SparkEntry.specs.size},
          |"dumped": ${rowCounts.size},
          |"failed": ${failures.size},
-         |"oracled": ${SparkEntry.queries.keySet.count(oracled)},
-         |"no_oracle": ${q(SparkEntry.queries.keySet.filterNot(oracled)
-             .toSeq.sorted.mkString(","))},
+         |"oracled": ${SparkEntry.specs.size - noOracle.size},
+         |"no_oracle": ${q(noOracle.sorted.mkString(","))},
          |"failures": ${failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }
              .mkString("{", ",", "}")},
          |"row_counts": ${rowCounts.map { case (k, v) => s"${q(k)}: $v" }

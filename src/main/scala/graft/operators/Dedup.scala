@@ -1687,11 +1687,8 @@ object Dedup {
     * oracle's levenshtein returned NULL and filtered them — ADVICE r9). */
   private def editDistanceVerify(docs: DataFrame, members: DataFrame,
       canonCands: DataFrame, eligible: DataFrame,
-      simThreshold: Double, n: Int,
-      dedupBlocks: Boolean = true,
-      maxDpCells: Long = defaultDpBudget,
-      dpMemoKey: Option[String] = None,
-      maxExpandedPairs: Long = defaultPairBudget): DataFrame = {
+      simThreshold: Double, n: Int, dedupBlocks: Boolean, maxDpCells: Long,
+      dpMemoKey: Option[String] = None, maxExpandedPairs: Long): DataFrame = {
     val kOf = dpBand(simThreshold) _
     // canonical attribute frame: one row per DISTINCT raw text; the
     // normalized text is consumed by both join sides of either scoring

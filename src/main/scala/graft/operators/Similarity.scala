@@ -142,8 +142,8 @@ object Similarity {
     * and probe sides without replaying the training lineage. */
   def trainedCentroids(spark: SparkSession, sfDir: String,
       numCentroids: Int = 16, iters: Int = 2): DataFrame =
-    lloydTrain(normalizedEmbeddings(spark, sfDir),
-      numCentroids, iters, _.filter(col("vec_id") < numCentroids))
+    lloydTrain(normalizedEmbeddings(spark, sfDir), iters,
+      _.filter(col("vec_id") < numCentroids))
 
   /** Test seam for the hand-computed golden (the oracle REPLAYS this
     * loop, so a shared algorithmic bug would pass the replay — the
@@ -151,21 +151,20 @@ object Similarity {
     * first-C-vectors seed over an arbitrary (vec_id, e, nrm) frame. */
   private[graft] def lloydTrainOf(emb: DataFrame, numCentroids: Int,
       iters: Int): DataFrame =
-    lloydTrain(emb, numCentroids, iters, _.filter(col("vec_id") < numCentroids))
+    lloydTrain(emb, iters, _.filter(col("vec_id") < numCentroids))
 
   /** Prior-snapshot seeding rule (lowest `numCentroids` ids of the
     * frame) over an arbitrary frame — the [[incrementalAssign]] /
     * drift-trigger trainer exposed for the specs. */
   private[graft] def lloydTrainPrior(emb: DataFrame, numCentroids: Int,
       iters: Int): DataFrame =
-    lloydTrain(emb, numCentroids, iters,
-      _.orderBy("vec_id").limit(numCentroids))
+    lloydTrain(emb, iters, _.orderBy("vec_id").limit(numCentroids))
 
   /** The Lloyd loop itself, parameterized by the centroid seeding rule
     * (full-corpus training seeds `vec_id < C`; incremental training
     * seeds the C lowest ids of its snapshot — identical when ids are
     * dense from 0). */
-  private def lloydTrain(emb: DataFrame, numCentroids: Int, iters: Int,
+  private def lloydTrain(emb: DataFrame, iters: Int,
       seed: DataFrame => DataFrame): DataFrame = {
     var cent = seed(emb)
       .select(col("vec_id").as("cent_id"), col("e").as("e_cent"), col("nrm").as("n_cent"))
@@ -224,7 +223,7 @@ object Similarity {
     graft.sources.ArtifactCache.readOrWrite(spark, "ivf-centroids-prior",
       s"$sfDir|$numCentroids|$iters", s"$sfDir/embeddings.parquet")(
       lloydTrain(normalizedEmbeddings(spark, sfDir)
-          .filter(col("vec_id") % 2 === 0), numCentroids, iters,
+          .filter(col("vec_id") % 2 === 0), iters,
         _.orderBy("vec_id").limit(numCentroids)))
 
   /** Nearest-centroid assignment similarity per vector — the ranking

@@ -442,14 +442,35 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("every query's plan builds and has output columns") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty, s"$name has no output columns")
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // onQueryStarted runs synchronously inside start(), so the count
+    // read right after a build is that build's own streaming queries
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet(): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
+    spark.streams.addListener(listener)
+    try SparkEntry.specs.foreach { s =>
+      started.set(0)
+      val df = s.build(spark, sf)
+      assert(df.columns.nonEmpty, s"${s.name} has no output columns")
+      assert((started.get() > 0) == s.drain,
+        s"${s.name}: drain = ${s.drain} but started ${started.get()} streaming queries")
+    } finally spark.streams.removeListener(listener)
   }
 
-  test("every oracle key has a matching query key") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
+  test("spec names are unique; queries and oracleSql project the specs") {
+    val names = SparkEntry.specs.map(_.name)
+    val duplicates = names.diff(names.distinct)
+    assert(duplicates.isEmpty, s"duplicate spec names: $duplicates")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    SparkEntry.specs.foreach(s => assert(SparkEntry.queries(s.name) eq s.build, s.name))
+    val oracles = SparkEntry.specs.collect {
+      case QuerySpec(name, _, QuerySpec.Oracle(sql), _) => name -> sql
+    }
+    assert(SparkEntry.oracleSql == oracles.toMap && SparkEntry.oracleSql.size == oracles.size)
   }
 }
