@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every registered query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds,
+  * the core count (`cpus`) and the effective `shuffle_partitions`.
   *
   * Two phases: an untimed PRE-WARM pass over every query (pay-once
   * artifact writes — bucketed tables, ANN indexes, pair tables — and
@@ -208,8 +209,12 @@ object Bench {
     val passSumsJson = passSums.map(s => String.format(java.util.Locale.ROOT, "%.2f", Double.box(s))).mkString("[", ",", "]")
     val spreadJson = String.format(java.util.Locale.ROOT, "%.2f",
       Double.box(cleanSpread))
+    // what produced the numbers: the core count and the shuffle width
+    // the timed passes ran with (read back, not assumed)
+    val producedBy =
+      s""""cpus":$cpus,"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","warm_sec":$warmSec,"pass_sums":$passSumsJson,"pass_spread_pct":$spreadJson,"queries":$fullQs,"failed":$failedJson$warmFailedJson,"bounds":$boundsJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","warm_sec":$warmSec,"pass_sums":$passSumsJson,"pass_spread_pct":$spreadJson,"queries":$fullQs,"failed":$failedJson$warmFailedJson,"bounds":$boundsJson,$producedBy,"sf":"$sfDir"}"""
     // the side file is best-effort: a missing target/ (jar run, clean
     // dir) must not throw AFTER all queries ran and suppress the primary
     // stdout line below — that would lose the whole run's results
@@ -240,7 +245,7 @@ object Bench {
         .map { case (k, v) => "\"" + k + "\":" + round2(v) }
         .mkString("{", ",", "}")
       val el = if (elided > 0) s""","elided":$elided""" else ""
-      s"""{"metric":"total","value":${round2(total)},"unit":"sec","warm_sec":${round2(warmSec)},"pass_sums":$passSumsJson,"pass_spread_pct":$spreadJson,"queries":$qs$el,"failed":$failedJson$warmFailedJson,"bounds":$boundsJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${round2(total)},"unit":"sec","warm_sec":${round2(warmSec)},"pass_sums":$passSumsJson,"pass_spread_pct":$spreadJson,"queries":$qs$el,"failed":$failedJson$warmFailedJson,"bounds":$boundsJson,$producedBy,"sf":"$sfDir"}"""
     }
     var keep = byCost.length
     while (keep > 0 && lineFor(byCost.take(keep), byCost.length - keep).length > budget)

@@ -20,7 +20,7 @@ object Tool {
 
   private val commands: Seq[Command] = Seq(
     Command("status", "[sfDir]", 4, Status.run),
-    Command("explain", "<sfDir> <query>[,<query>...]|all [tree]", 4, Explain.run),
+    Command("explain", "<sfDir> <query>[,<query>...]|all [tree|metrics]", 4, Explain.run),
     Command("probe", "<sfDir> <query> [reps]", 32, Probe.run),
     Command("prune-rate", "<dataDir> [threshold] [numBlocks]", 32, PruneRate.run),
     Command("bpe-probe", "<sfDir> [scans] [batch] [window]", 32, BpeProbe.run),

@@ -50,6 +50,30 @@ case class AzTokens(child: Expression) extends UnaryExpression {
 
 object AzTokens {
 
+  /** The one tokenizer rule, shared by [[compute]] and the fused
+    * counter [[graft.plans.TokenCountExec]]: the next kept token of the
+    * `n` UTF-8 bytes at (`base`, `off`) that starts at or after byte
+    * `from`. Tokens are the maximal runs of bytes other than `0x20` and
+    * `0x0A`; a token is kept when its first byte is in `a`–`z`. Returns
+    * `start << 32 | end` (end exclusive), or -1 when no kept token
+    * remains. The caller resumes at `end`, a delimiter or `n`. */
+  def nextToken(base: AnyRef, off: Long, n: Int, from: Int): Long = {
+    var i = from
+    while (i < n) {
+      val first = Platform.getByte(base, off + i)
+      if (isDelimiter(first)) i += 1
+      else {
+        val start = i
+        i += 1
+        while (i < n && !isDelimiter(Platform.getByte(base, off + i))) i += 1
+        if (first >= 'a' && first <= 'z') return (start.toLong << 32) | i
+      }
+    }
+    -1L
+  }
+
+  @inline private def isDelimiter(b: Byte): Boolean = b == ' ' || b == '\n'
+
   /** Static worker shared by interpreted eval and generated code. */
   def compute(text: UTF8String): ArrayData = {
     val base = text.getBaseObject
@@ -57,24 +81,16 @@ object AzTokens {
     val n = text.numBytes
     var out = new Array[AnyRef](16)
     var count = 0
-    var start = 0 // first byte of the current token
-    var i = 0
-    while (i <= n) {
-      val b = if (i < n) Platform.getByte(base, off + i) else '\n'.toByte
-      if (b == ' ' || b == '\n') {
-        if (i > start) {
-          val first = Platform.getByte(base, off + start)
-          if (first >= 'a' && first <= 'z') {
-            val word = new Array[Byte](i - start)
-            Platform.copyMemory(base, off + start, word, Platform.BYTE_ARRAY_OFFSET, word.length)
-            if (count == out.length) out = java.util.Arrays.copyOf(out, count * 2)
-            out(count) = UTF8String.fromBytes(word)
-            count += 1
-          }
-        }
-        start = i + 1
-      }
-      i += 1
+    var t = nextToken(base, off, n, 0)
+    while (t >= 0) {
+      val start = (t >>> 32).toInt
+      val end = t.toInt
+      val word = new Array[Byte](end - start)
+      Platform.copyMemory(base, off + start, word, Platform.BYTE_ARRAY_OFFSET, word.length)
+      if (count == out.length) out = java.util.Arrays.copyOf(out, count * 2)
+      out(count) = UTF8String.fromBytes(word)
+      count += 1
+      t = nextToken(base, off, n, end)
     }
     new GenericArrayData(
       (if (count == out.length) out else java.util.Arrays.copyOf(out, count)).asInstanceOf[Array[Any]])

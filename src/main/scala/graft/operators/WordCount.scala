@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.functions.AzTokens
+import graft.plans.{GraftExtensions, TokenCount}
 import graft.sources.Tables
 
 /** The reference's entire query surface, Spark-first.
@@ -20,8 +22,12 @@ import graft.sources.Tables
   * physical plan fixes the reference's two structural scale killers:
   *   - the reference has NO map-side combine — every reducer re-reads ALL
   *     map outputs (`slave.cc:177-210`), so shuffle volume is
-  *     R × total-tokens. `HashAggregateExec` does partial aggregation
-  *     before the shuffle, so shuffle volume is O(distinct words).
+  *     R × total-tokens. The fused [[graft.plans.TokenCountExec]] is
+  *     that combine: per partition it counts the a-z byte slices of
+  *     each row in one open-addressing table (no per-token object or
+  *     row) and emits one partial row per distinct word, which a final
+  *     `HashAggregateExec` merges after the shuffle — so shuffle volume
+  *     is O(distinct words per partition).
   *   - the reference's driver reads every (word,count) to pick top-K
   *     (`master.cc:406-452`). Spark plans `orderBy(...).limit(k)` as
   *     `TakeOrderedAndProject` — per-partition heaps of size k, only
@@ -45,7 +51,9 @@ object WordCount {
     * them into rows inside the same codegen'd stage. Not `split` +
     * `rlike`: those decode every row to a Java String, compile the
     * `[ \n]` pattern per row, re-encode every token, then decode each
-    * token again for the regex. */
+    * token again for the regex. The counting queries do not explode:
+    * they go through the fused [[countsOf]]; this one-row-per-token
+    * form is the reference that [[countsOf]] is checked against. */
   def wordsOf(texts: DataFrame, textCol: String = "text"): DataFrame =
     texts.select(explode(AzTokens.az_tokens(col(textCol))).as("word"))
 
@@ -54,9 +62,32 @@ object WordCount {
   def words(spark: SparkSession, sfDir: String): DataFrame =
     wordsOf(Tables.documents(spark, sfDir))
 
-  /** O8 — hash-aggregated word counts (partial + final agg). */
+  /** O4 + O7 + O8 fused — `(word, cnt)` for every word of [[wordsOf]]
+    * over `texts`, as one [[graft.plans.TokenCount]] node: a per-
+    * partition byte-slice counter under a final hash aggregate, with no
+    * per-token row. Arms the planner strategy on the session
+    * (idempotently): the caller may have built a plain session. */
+  def countsOf(texts: DataFrame, textCol: String = "text"): DataFrame =
+    countsOf(texts, textCol, TokenCount.MaxKeys)
+
+  /** [[countsOf]] with an explicit per-partition table cap, so a spec
+    * can force the early-flush path. */
+  private[graft] def countsOf(texts: DataFrame, textCol: String, maxKeys: Int): DataFrame = {
+    // the final aggregate is planned without state, so a stream would
+    // count each micro-batch alone
+    require(!texts.isStreaming, "word count needs a batch DataFrame, got a stream")
+    val spark = texts.sparkSession
+    GraftExtensions.registerRuntime(spark)
+    val plan = texts.select(col(textCol)).queryExecution.analyzed
+    val text = plan.output.head
+    require(text.dataType == StringType,
+      s"word count needs a string column, '$textCol' is ${text.dataType.catalogString}")
+    GraftColumnBridge.ofRows(spark, TokenCount(text, plan, maxKeys))
+  }
+
+  /** O8 — word counts of the `documents` corpus ([[countsOf]]). */
   def counts(spark: SparkSession, sfDir: String): DataFrame =
-    words(spark, sfDir).groupBy("word").agg(count(lit(1)).as("cnt"))
+    countsOf(Tables.documents(spark, sfDir))
 
   /** O11 — top-K by count desc, ties by word asc (deterministic;
     * diverges intentionally from the reference's tie-dropping bug). */
@@ -81,28 +112,6 @@ object WordCount {
       .agg(sum("cnt").as("n_words"), count(lit(1)).as("n_distinct"))
       .orderBy("letter")
 
-  /** The reference's pipeline in its literal MapReduce shape — RDD
-    * `flatMap` (Map, `slave.cc:101-116`) → `reduceByKey` (combiner +
-    * Reduce, `slave.cc:159-210`) → `takeOrdered` (top-K,
-    * `master.cc:395-453`). Kept as documentation-by-code of the
-    * reference↔Spark mapping and as a differential check against the
-    * DataFrame plan (which remains the primary path: codegen +
-    * Tungsten beat RDD lambdas). `reduceByKey` IS the map-side combine
-    * the reference lacks; `takeOrdered` IS the per-partition top-K heap
-    * its driver loop lacks. */
-  def topKviaRDD(spark: SparkSession, sfDir: String, k: Int): Seq[(String, Long)] = {
-    implicit val ord: Ordering[(String, Long)] =
-      Ordering.by { case (w, c) => (-c, w) } // count desc, word asc
-    Tables.documents(spark, sfDir)
-      .select("text").rdd.map(_.getString(0))
-      .flatMap(_.split("[ \n]"))                      // Map     (O4)
-      .filter(w => w.nonEmpty && w.head >= 'a' && w.head <= 'z') // O7
-      .map((_, 1L))
-      .reduceByKey(_ + _)                             // Reduce  (O8, with combiner)
-      .takeOrdered(k)                                 // top-K   (O11)
-      .toSeq
-  }
-
   /** Full word counts over the corpus via the reference's LITERAL input
     * modality (O2/O3 end to end): `documents.text` is spooled once per
     * corpus fingerprint to a newline-delimited `.txt` artifact (one doc
@@ -119,9 +128,7 @@ object WordCount {
     val corpus = graft.sources.ArtifactCache.readOrWriteText(
       spark, "wordcount-txt", "v1", s"$sfDir/documents.parquet")(
       Tables.documents(spark, sfDir).select("text"))
-    wordsOf(corpus, "value")
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .orderBy(asc("word"))
+    countsOf(corpus, "value").orderBy(asc("word"))
   }
 
   /** Word counts over an arbitrary newline-delimited text file — the exact
@@ -130,8 +137,7 @@ object WordCount {
     * `slave.cc:76-134`). Library form behind [[fullFromTextFile]]'s
     * oracle-wired corpus entry; exercised directly by unit tests. */
   def countsFromTextFile(spark: SparkSession, path: String, k: Int): DataFrame =
-    wordsOf(spark.read.text(path), "value")
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    countsOf(spark.read.text(path), "value")
       .orderBy(desc("cnt"), asc("word"))
       .limit(k)
 }

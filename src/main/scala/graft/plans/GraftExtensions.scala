@@ -42,7 +42,8 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions: the optimizer rule above plus SQL-callable
+/** Session extensions: the optimizer rule above, the planner strategies
+  * of the native as-of join and the fused word count, plus SQL-callable
   * registrations of the engine's native expressions
   * (`graft_dot(a, b)`, `graft_rolling_hash(s)`).
   *
@@ -52,6 +53,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => DotProductRewrite)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => TokenCountStrategy)
     e.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
@@ -67,17 +69,19 @@ object GraftExtensions {
   /** Runtime opt-in for an ALREADY-BUILT session (build-time extensions
     * only apply to new sessions — `getOrCreate` on an existing one
     * silently ignores `withExtensions`). Uses the public experimental
-    * rule hook and the temp function registry. Idempotent: a rule,
-    * strategy or function already in place is left as it is, so the
-    * per-construction calls of the native as-of join replace nothing. */
+    * rule and strategy hooks and the temp function registry.
+    * Idempotent: a rule, strategy or function already in place is left
+    * as it is, so the per-construction calls of the native as-of join
+    * and of the word-count builders replace nothing. */
   def registerRuntime(spark: org.apache.spark.sql.SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(DotProductRewrite)) {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ DotProductRewrite
     }
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    val missing = Seq(AsOfJoinStrategy, TokenCountStrategy)
+      .filterNot(spark.experimental.extraStrategies.contains)
+    if (missing.nonEmpty) {
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
     }
     val registry = spark.sessionState.functionRegistry
     def register(name: String, builder: Seq[Expression] => Expression): Unit =

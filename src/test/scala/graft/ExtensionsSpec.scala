@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import graft.plans.GraftExtensions
+import graft.plans.{AsOfJoinStrategy, GraftExtensions, TokenCountStrategy}
 
 /** Drives the SparkSessionExtensions surface: the DotProduct optimizer
   * rewrite and the SQL-registered native functions. Uses its own session
@@ -27,6 +27,7 @@ class ExtensionsSpec extends SparkSpec {
       .flatMap(id => Seq(registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get))
     val (rules, strategies, before) = (extSpark.experimental.extraOptimizations,
       extSpark.experimental.extraStrategies, entries)
+    assert(Seq(AsOfJoinStrategy, TokenCountStrategy).forall(strategies.contains))
     GraftExtensions.registerRuntime(extSpark)
     assert(extSpark.experimental.extraOptimizations eq rules)
     assert(extSpark.experimental.extraStrategies eq strategies)

@@ -419,19 +419,47 @@ class PlanLintSpec extends SparkSpec {
 
   test("word-count queries tokenize with the byte kernel: no regex split or filter") {
     // a fallback to split([ \n]) + rlike(^[a-z]) would bring back a
-    // per-row String decode, Pattern compile and per-token regex
+    // per-row String decode, Pattern compile and per-token regex; a
+    // fallback to explode + groupBy would bring back a Generate row and
+    // a partial-aggregate key probe per token
     import org.apache.spark.sql.catalyst.expressions.{RLike, StringSplit}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Partial}
     import org.apache.spark.sql.catalyst.plans.logical.Expand
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.plans.{TokenCount, TokenCountExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+      case other => other.children
+    }).flatMap(nodes)
+    def isPartialAgg(p: SparkPlan): Boolean = p match {
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+      case _ => false
+    }
     Seq("wordcount_topk", "wordcount_full", "wordcount_textfile", "letter_buckets").foreach { q =>
-      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
-      val exprs = plan.collect { case p => p.expressions }.flatten
+      val qe = SparkEntry.queries(q)(spark, sf).queryExecution
+      val plan = qe.optimizedPlan
+      val exec = nodes(qe.executedPlan)
+      val exprs = plan.collect { case p => p.expressions }.flatten ++ exec.flatMap(_.expressions)
       val regex = exprs.flatMap(_.collect {
         case e @ (_: RLike | _: StringSplit) => e.prettyName
       })
       assert(regex.isEmpty, s"$q plans regex tokenization: ${regex.distinct}")
-      assert(exprs.exists(_.exists(_.isInstanceOf[graft.functions.AzTokens])),
-        s"$q does not tokenize with az_tokens")
+      assert(plan.collect { case t: TokenCount => t }.size == 1,
+        s"$q does not count with one TokenCount node:\n$plan")
+      assert(exec.collect { case t: TokenCountExec => t }.size == 1,
+        s"$q does not execute one TokenCountExec:\n${qe.executedPlan}")
+      assert(!exec.exists(_.isInstanceOf[GenerateExec]), s"$q explodes tokens into rows")
+      // the word exchange sits right on the fused counter, with no
+      // partial aggregate below it
+      val wordShuffle = exec.collect {
+        case e: ShuffleExchangeExec if e.child.isInstanceOf[TokenCountExec] => e
+      }
+      assert(wordShuffle.size == 1, s"$q: no exchange directly over TokenCountExec")
+      assert(!nodes(wordShuffle.head).exists(isPartialAgg),
+        s"$q plans a partial aggregate under the word exchange")
     }
     val buckets = SparkEntry.queries("letter_buckets")(spark, sf).queryExecution.optimizedPlan
     val distinct = buckets.collect { case p => p.expressions }.flatten.flatMap(_.collect {

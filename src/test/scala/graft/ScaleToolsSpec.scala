@@ -7,8 +7,30 @@ import graft.functions.TopKAggregate
 class ScaleToolsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The reference's pipeline in its literal MapReduce shape — RDD
+    * `flatMap` (Map, `slave.cc:101-116`) → `reduceByKey` (combiner +
+    * Reduce, `slave.cc:159-210`) → `takeOrdered` (top-K,
+    * `master.cc:395-453`): documentation-by-code of the
+    * reference↔Spark mapping, and a differential check of the
+    * DataFrame plan with an independent tokenizer (`String.split`).
+    * `reduceByKey` IS the map-side combine the reference lacks;
+    * `takeOrdered` IS the per-partition top-K heap its driver loop
+    * lacks. */
+  private def topKviaRDD(k: Int): Seq[(String, Long)] = {
+    implicit val ord: Ordering[(String, Long)] =
+      Ordering.by { case (w, c) => (-c, w) } // count desc, word asc
+    graft.sources.Tables.documents(spark, sf)
+      .select("text").rdd.map(_.getString(0))
+      .flatMap(_.split("[ \n]"))                      // Map     (O4)
+      .filter(w => w.nonEmpty && w.head >= 'a' && w.head <= 'z') // O7
+      .map((_, 1L))
+      .reduceByKey(_ + _)                             // Reduce  (O8, with combiner)
+      .takeOrdered(k)                                 // top-K   (O11)
+      .toSeq
+  }
+
   test("RDD reduceByKey formulation equals the DataFrame plan (reference MapReduce mapping)") {
-    val viaRdd = WordCount.topKviaRDD(spark, sf, 50)
+    val viaRdd = topKviaRDD(50)
     val viaDf = WordCount.topK(spark, sf, 50).as[(String, Long)].collect().toSeq
     assert(viaRdd === viaDf)
   }

@@ -4,6 +4,7 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.apache.spark.sql.functions._
 import graft.functions.AzTokens
 import graft.operators.WordCount
+import graft.plans.TokenCount
 
 /** ScalaCheck property tests (SURVEY.md §5.3) — invariants of the
   * word-count pipeline over generated corpora, evaluated through the
@@ -60,6 +61,28 @@ object WordCountProps extends Properties("WordCount") {
     spark.sparkContext.parallelize(ts.zipWithIndex, 2).toDF("text", "i")
       .select(col("i"), AzTokens.az_tokens(col("text")))
       .as[(Int, Seq[String])].collect().sortBy(_._1).map(_._2).toSeq
+
+  // the fused counter against the one-row-per-token form, over several
+  // partitions and a null text; a 2-word cap flushes the per-partition
+  // table mid-row, so every repeated word crosses the exchange as
+  // several partial rows that the final aggregate must merge
+  private def textFrame(ts: Seq[String]) =
+    spark.sparkContext.parallelize(ts, 3).toDF("text")
+  private def fusedCounts(ts: Seq[String], maxKeys: Int): Seq[(String, Long)] =
+    WordCount.countsOf(textFrame(ts), "text", maxKeys)
+      .as[(String, Long)].collect().toSeq.sorted
+  private def explodedCounts(ts: Seq[String]): Seq[(String, Long)] =
+    WordCount.wordsOf(textFrame(ts)).groupBy("word").count()
+      .as[(String, Long)].collect().toSeq.sorted
+  private val textsWithNull: Gen[List[String]] = texts.map(null :: _)
+
+  property("TokenCount counts equal wordsOf + groupBy counts") =
+    Prop.forAll(textsWithNull) { ts =>
+      fusedCounts(ts, TokenCount.MaxKeys) == explodedCounts(ts)
+    }
+
+  property("TokenCount counts equal wordsOf + groupBy counts when the table flushes early") =
+    Prop.forAll(textsWithNull) { ts => fusedCounts(ts, 2) == explodedCounts(ts) }
 
   property("az_tokens kernel equals the split + regex reference") =
     Prop.forAll(texts) { ts => kernelTokens(ts) == ts.map(refTokens) }

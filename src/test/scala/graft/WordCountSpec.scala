@@ -8,8 +8,7 @@ class WordCountSpec extends SparkSpec {
   import spark.implicits._
 
   private def countsOf(lines: String*): Seq[(String, Long)] =
-    WordCount.wordsOf(lines.toDF("text"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    WordCount.countsOf(lines.toDF("text"))
       .orderBy(desc("cnt"), asc("word"))
       .as[(String, Long)].collect().toSeq
 
@@ -36,6 +35,61 @@ class WordCountSpec extends SparkSpec {
   test("non-[a-z]-initial tokens dropped; punctuation retained inside") {
     assert(countsOf("Zebra 9lives _foo ébc").isEmpty)
     assert(countsOf("don't stop, don't") === Seq("don't" -> 2L, "stop," -> 1L))
+  }
+
+  test("TokenCountExec metrics: tokens seen, rows out and flushes at the cap") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import graft.plans.TokenCountExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case other => other.children
+    }).flatMap(nodes)
+    // 8 kept tokens, 5 distinct words, one partition
+    val texts = spark.sparkContext.parallelize(Seq("a b a c", "b d e a Zed"), 1).toDF("text")
+    def run(maxKeys: Int): (Map[String, Long], Map[String, Long]) = {
+      val ds = WordCount.countsOf(texts, "text", maxKeys).as[(String, Long)]
+      val got = ds.collect().toMap
+      val exec = nodes(ds.queryExecution.executedPlan).collect { case t: TokenCountExec => t }
+      assert(exec.size == 1)
+      (got, exec.head.metrics.map { case (k, m) => k -> m.value })
+    }
+    val expected = Map("a" -> 3L, "b" -> 2L, "c" -> 1L, "d" -> 1L, "e" -> 1L)
+    val (whole, m) = run(graft.plans.TokenCount.MaxKeys)
+    assert(whole === expected)
+    assert(m === Map("numTokens" -> 8L, "numOutputRows" -> 5L, "numFlushes" -> 0L))
+    // a 2-word table fills every second token: (a b) (a c) (b d) (e a)
+    val (flushed, mf) = run(2)
+    assert(flushed === expected)
+    assert(mf === Map("numTokens" -> 8L, "numOutputRows" -> 8L, "numFlushes" -> 4L))
+  }
+
+  test("fused counter: keys of 1 to 40 bytes, mid-row and at a row's end, equal wordsOf counts") {
+    // the table packs keys of up to 16 bytes into its slots, from whole
+    // longs where 16 bytes of the row remain and byte by byte near its
+    // end; longer keys live in its arena. Each word appears in both
+    // positions, so both packings must agree.
+    val words = (1 to 40).map(n => ("abcdefghijklmnopqrstuvwxyz" * 2).take(n)) ++
+      Seq("a\u0000", "a\u0000\u0000", "é" * 9, "x中😀y")
+    val lines = words.map(w => s"$w ${"filler " * 3}$w") ++ words.map(w => s"filler $w")
+    val texts = spark.sparkContext.parallelize(lines, 2).toDF("text")
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.as[(String, Long)].collect().toSeq.sorted
+    val reference = sorted(WordCount.wordsOf(texts).groupBy("word").count())
+    assert(reference.size == words.size)
+    assert(sorted(WordCount.countsOf(texts)) === reference)
+    assert(sorted(WordCount.countsOf(texts, "text", 3)) === reference)
+  }
+
+  test("the count builders arm the TokenCount strategy on a plain session") {
+    // a session built without the graft extensions (graftbench builds
+    // its own) plans the TokenCount node only if the builder arms it
+    val plain = spark.newSession()
+    assert(!plain.experimental.extraStrategies.contains(graft.plans.TokenCountStrategy))
+    val texts = plain.createDataFrame(Seq(Tuple1("b a b"))).toDF("text")
+    assert(WordCount.countsOf(texts).as[(String, Long)].collect().toMap ===
+      Map("a" -> 1L, "b" -> 2L))
+    assert(plain.experimental.extraStrategies.contains(graft.plans.TokenCountStrategy))
   }
 
   test("flagship entry returns rows on sf0.001") {
