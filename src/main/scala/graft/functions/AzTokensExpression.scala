@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -98,4 +98,60 @@ object AzTokens {
 
   def az_tokens(c: Column): Column =
     GraftColumnBridge.column(AzTokens(GraftColumnBridge.expression(c)))
+}
+
+/** The reducer of a word in an ordered word count: the reference's
+  * first-letter key ranges (`master.cc:312-325`, `slave.cc:149-157`) as
+  * a partition id in `[0, numPartitions)`, monotone in UTF-8 byte order
+  * (`x ≤ y` ⇒ `id(x) ≤ id(y)`). Each partition then holds one contiguous
+  * range of words, so sorting each one sorts them all, with no sampled
+  * range bounds.
+  *
+  * The key spans the first two bytes, so up to [[AzRangeId.Keys]]
+  * partitions each get some keys: `(b0 − 'a') × 28 + c(b1)`, where `c`
+  * maps a missing second byte or one below `a` to 0, `a`–`z` to 1–26
+  * and one above `z` (a UTF-8 lead byte among them) to 27; a first byte
+  * below `a` keys to 0 and one above `z` to the last key. Key `k` goes
+  * to partition `k × numPartitions / Keys`. Each partition gets an
+  * equal share of keys, not of words: text whose first letters are
+  * skewed, as English is, gives unequal partitions.
+  * Internal to the word-count planner, which applies it to the string
+  * `word` column only.
+  */
+case class AzRangeId(child: Expression, numPartitions: Int) extends UnaryExpression {
+
+  override def dataType: DataType = IntegerType
+
+  override def prettyName: String = "az_range_id"
+
+  override def nullSafeEval(input: Any): Any =
+    AzRangeId.of(input.asInstanceOf[UTF8String], numPartitions)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.AzRangeId.of($c, $numPartitions)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object AzRangeId {
+  /** Number of keys: 26 first letters × 28 second-byte classes. */
+  val Keys: Int = 26 * 28
+
+  /** The key of `word`, in `[0, Keys)`. */
+  def key(word: UTF8String): Int = {
+    val n = word.numBytes
+    val b0 = if (n > 0) word.getByte(0) & 0xFF else 0
+    if (b0 < 'a') 0
+    else if (b0 > 'z') Keys - 1
+    else {
+      val b1 = if (n > 1) word.getByte(1) & 0xFF else 0
+      val c = if (b1 < 'a') 0 else if (b1 > 'z') 27 else b1 - 'a' + 1
+      (b0 - 'a') * 28 + c
+    }
+  }
+
+  /** Static worker shared by interpreted eval and generated code. */
+  def of(word: UTF8String, numPartitions: Int): Int =
+    (key(word).toLong * numPartitions / Keys).toInt
 }

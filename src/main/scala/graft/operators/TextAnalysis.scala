@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.functions.Deterministic.{qavg, qsum, rd}
 import graft.sources.{ArtifactCache, Tables}
@@ -1755,12 +1756,12 @@ object TextAnalysis {
 
   /** Apply an ordered merge list to a delimited corpus state in chunks
     * of ≤`chunk` rewrites per projection, materializing between chunks
-    * (persist → count → release predecessor, the trainer-loop
-    * discipline) so expression depth — and therefore codegen method
-    * size — stays bounded no matter how long the vocabulary is. A
-    * single-chunk list stays one lazy map-only projection (the k≈5
-    * path, unchanged); a multi-chunk result is handed back as a
-    * self-contained localCheckpoint with the loop caches released. */
+    * (checkpoint → release predecessor, the trainer-loop discipline) so
+    * expression depth — and therefore codegen method size — stays
+    * bounded no matter how long the vocabulary is. A single-chunk list
+    * stays one lazy map-only projection (the k≈5 path, unchanged); a
+    * multi-chunk result is handed back as a self-contained
+    * localCheckpoint, the only level still holding blocks. */
   private def applyMergesChunked(df: DataFrame,
       merges: Seq[(String, String)], chunk: Int): DataFrame = {
     require(chunk >= 1, s"chunk must be >= 1, got $chunk")
@@ -1781,9 +1782,19 @@ object TextAnalysis {
       // an 8 GB heap. Checkpointing truncates the plan itself: every
       // level re-plans from a leaf, O(1) planning and plan-string cost
       // per chunk regardless of vocabulary depth. Blocks are
-      // MEMORY_AND_DISK and freed by the ContextCleaner as levels drop
-      // out of scope; the returned frame is self-contained, as before.
-      groups.foldLeft(df)((d, grp) => project(d, grp).localCheckpoint())
+      // MEMORY_AND_DISK; each level's are freed as soon as the next
+      // level has materialized (its lineage starts at its own blocks,
+      // so nothing reads the predecessor again) rather than whenever
+      // the ContextCleaner gets to them. The returned frame is
+      // self-contained.
+      groups.foldLeft(df) { (d, grp) =>
+        val next = project(d, grp).localCheckpoint()
+        if (d ne df) d.queryExecution.logical match {
+          case level: LogicalRDD => level.rdd.unpersist(blocking = false)
+          case _ =>
+        }
+        next
+      }
     }
   }
 

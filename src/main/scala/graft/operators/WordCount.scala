@@ -18,7 +18,13 @@ import graft.sources.Tables
   *   → per-partition lexicographic sort (`slave.cc:219-226`)
   *   → driver merge + sort-by-count + top-K (`master.cc:395-453`).
   *
-  * Spark collapses all of that into one declarative plan. Crucially the
+  * Spark collapses all of that into one declarative plan. The ordered
+  * counts ([[full]], [[fullFromTextFile]]) keep the reference's range
+  * layout: [[graft.plans.TokenCountStrategy]] plans `orderBy(word)` over
+  * [[countsOf]] as one exchange by first-letter range
+  * ([[graft.functions.AzRangeId]]) under a sort-based final count, so
+  * each partition's sorted words are one slice of the global order — no
+  * sampling job, no second shuffle, no single-task sort. Crucially the
   * physical plan fixes the reference's two structural scale killers:
   *   - the reference has NO map-side combine — every reducer re-reads ALL
   *     map outputs (`slave.cc:177-210`), so shuffle volume is
@@ -26,7 +32,7 @@ import graft.sources.Tables
   *     that combine: per partition it counts the a-z byte slices of
   *     each row in one open-addressing table (no per-token object or
   *     row) and emits one partial row per distinct word, which a final
-  *     `HashAggregateExec` merges after the shuffle — so shuffle volume
+  *     aggregate merges after the shuffle — so shuffle volume
   *     is O(distinct words per partition).
   *   - the reference's driver reads every (word,count) to pick top-K
   *     (`master.cc:406-452`). Spark plans `orderBy(...).limit(k)` as
@@ -64,9 +70,11 @@ object WordCount {
 
   /** O4 + O7 + O8 fused — `(word, cnt)` for every word of [[wordsOf]]
     * over `texts`, as one [[graft.plans.TokenCount]] node: a per-
-    * partition byte-slice counter under a final hash aggregate, with no
-    * per-token row. Arms the planner strategy on the session
-    * (idempotently): the caller may have built a plain session. */
+    * partition byte-slice counter under a final aggregate, with no
+    * per-token row; a global `orderBy("word")` right over the result is
+    * planned as the first-letter range exchange (O6). Arms the planner
+    * strategy on the session (idempotently): the caller may have built
+    * a plain session. */
   def countsOf(texts: DataFrame, textCol: String = "text"): DataFrame =
     countsOf(texts, textCol, TokenCount.MaxKeys)
 
@@ -94,7 +102,9 @@ object WordCount {
   def topK(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     counts(spark, sfDir).orderBy(desc("cnt"), asc("word")).limit(k)
 
-  /** Full word counts with a total order (oracle-deterministic). */
+  /** Full word counts with a total order (oracle-deterministic): the
+    * reference's reducer layout, each partition one sorted first-letter
+    * range (O6 + O9). */
   def full(spark: SparkSession, sfDir: String): DataFrame =
     counts(spark, sfDir).orderBy(asc("word"))
 

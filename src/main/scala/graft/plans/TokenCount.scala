@@ -3,19 +3,23 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, Literal}
+  Alias, Ascending, Attribute, AttributeReference, AttributeSet, BindReferences,
+  DirectShufflePartitionID, Expression, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Final}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.AzTokens
+import graft.functions.{AzRangeId, AzTokens}
 
 /** Fused word count — the reference's Map + combine (`slave.cc:159-210`:
   * one hash map per worker, `wordcount[word]++` in place) as a Catalyst
@@ -23,11 +27,11 @@ import graft.functions.AzTokens
   * every `az_tokens(text)` word over the whole child, so its meaning
   * does not depend on partitioning. A null text yields no tokens.
   *
-  * [[TokenCountStrategy]] plans it as a Final-mode count
-  * `HashAggregateExec` over a [[TokenCountExec]], which counts each
-  * partition's tokens as byte slices and emits one partial row per
-  * distinct word; `EnsureRequirements` adds the one
-  * `Exchange hashpartitioning(word)` between them. Unlike
+  * [[TokenCountStrategy]] plans it as a Final-mode count over a
+  * [[TokenCountExec]], which counts each partition's tokens as byte
+  * slices and emits one partial row per distinct word, with one
+  * exchange between them: by hash of the word, or, under a global sort
+  * by word, by the word's first-letter range ([[AzRangeId]]). Unlike
   * `explode(az_tokens(text))` + `groupBy`, no token becomes its own
   * `UTF8String`, `Generate` row or `UnsafeRow` key probe.
   *
@@ -58,23 +62,75 @@ object TokenCount {
   * aggregate is built here because `AggUtils.createAggregate` is
   * private: it merges the exec's partial counts, which it binds through
   * the `Count` instance's `inputAggBufferAttributes` — so the exec's
-  * output carries that very attribute. */
+  * output carries that very attribute.
+  *
+  * Two shapes, both with one exchange straight over [[TokenCountExec]]:
+  *   - unordered (`topK`, `letterBuckets`, `counts`): a Final count
+  *     `HashAggregateExec`, for which `EnsureRequirements` adds
+  *     `Exchange hashpartitioning(word)`;
+  *   - ordered, a global `Sort(word ASC)` right over the node (`full`,
+  *     `fullFromTextFile`): the reference's reducers (`master.cc:312-325`,
+  *     `slave.cc:149-157`, `slave.cc:219-226`). The exchange is planned
+  *     here, partitioned by [[AzRangeId]] through Spark's pass-through
+  *     partitioning, so each of `spark.sql.shuffle.partitions`
+  *     partitions, at most [[AzRangeId.Keys]], owns one contiguous
+  *     first-letter range; a Final count
+  *     `SortAggregateExec`, over the local sort `EnsureRequirements`
+  *     adds, then emits each partition in word order, and the
+  *     partitions in id order are the global order. No range bounds are
+  *     sampled (a job that re-runs the aggregate), no second exchange
+  *     and no single-task global sort is planned. AQE does not coalesce
+  *     this exchange: a coalesced pass-through read no longer reports
+  *     the partitioning the aggregate requires. So its width is the
+  *     plain shuffle width, not AQE's initial one (meant to be
+  *     coalesced), and no wider than the key count, past which
+  *     partitions could only be empty.
+  *     Partitions get equal shares of keys, not of words: their sizes
+  *     follow the words' first two letters.
+  *
+  * The ordered shape sorts rather than hashes: a hash aggregate under a
+  * local sort holds an aggregation map and sort pages at once in every
+  * reduce task. */
 object TokenCountStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TokenCount(text, word, cnt, child, maxKeys) =>
-      val count = AggregateExpression(Count(Literal(1)), Final, isDistinct = false)
-      val partial = count.aggregateFunction.inputAggBufferAttributes.head
+    case Sort(Seq(SortOrder(w: Attribute, Ascending, _, _)), true, tc: TokenCount, _)
+        if w.exprId == tc.word.exprId =>
+      finalCount(tc, ordered = true) :: Nil
+    case tc: TokenCount => finalCount(tc, ordered = false) :: Nil
+    case _ => Nil
+  }
+
+  private def finalCount(tc: TokenCount, ordered: Boolean): SparkPlan = {
+    val count = AggregateExpression(Count(Literal(1)), Final, isDistinct = false)
+    val partial = count.aggregateFunction.inputAggBufferAttributes.head
+    val counter = TokenCountExec(tc.text, tc.word, partial, planLater(tc.child), tc.maxKeys)
+    val result = Seq(tc.word, Alias(count.resultAttribute, tc.cnt.name)(tc.cnt.exprId))
+    if (!ordered)
       HashAggregateExec(
-        requiredChildDistributionExpressions = Some(Seq(word)),
+        requiredChildDistributionExpressions = Some(Seq(tc.word)),
         isStreaming = false,
         numShufflePartitions = None,
-        groupingExpressions = Seq(word),
+        groupingExpressions = Seq(tc.word),
         aggregateExpressions = Seq(count),
         aggregateAttributes = Seq(count.resultAttribute),
         initialInputBufferOffset = 1,
-        resultExpressions = Seq(word, Alias(count.resultAttribute, cnt.name)(cnt.exprId)),
-        child = TokenCountExec(text, word, partial, planLater(child), maxKeys)) :: Nil
-    case _ => Nil
+        resultExpressions = result,
+        child = counter)
+    else {
+      val n = math.min(SQLConf.get.defaultNumShufflePartitions, AzRangeId.Keys)
+      val id = AzRangeId(tc.word, n)
+      SortAggregateExec(
+        requiredChildDistributionExpressions = Some(Seq(id)),
+        isStreaming = false,
+        numShufflePartitions = None,
+        groupingExpressions = Seq(tc.word),
+        aggregateExpressions = Seq(count),
+        aggregateAttributes = Seq(count.resultAttribute),
+        initialInputBufferOffset = 1,
+        resultExpressions = result,
+        child = ShuffleExchangeExec(
+          ShufflePartitionIdPassThrough(DirectShufflePartitionID(id), n), counter))
+    }
   }
 }
 

@@ -23,16 +23,6 @@ class AzTokensSpec extends SparkSpec {
   private def textFrame(lines: Seq[String]): DataFrame =
     spark.sparkContext.parallelize(lines.zipWithIndex, 3).toDF("text", "i")
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("a null text row yields zero tokens") {
     val df = Seq[String](null, "a b", null).toDF("text")
     assert(df.select(AzTokens.az_tokens(col("text"))).as[Seq[String]].collect()
@@ -64,6 +54,34 @@ class AzTokensSpec extends SparkSpec {
     assert(codegenRows.map(_._2.size).sum > 0)
     assert(codegenRows === interpRows)
     assert(codegenCounts === interpCounts)
+  }
+
+  test("az_range_id: codegen and interpreted runs give the same ids") {
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.execution.ProjectExec
+    import graft.functions.AzRangeId
+    val docs = WordCount.wordsOf(graft.sources.Tables.documents(spark, sf)).distinct()
+      .as[String].collect().toSeq
+    val words = Seq("", "a", "z", "aa", "a\u0000", "aA", "a{", "aé", "z😀", "Zebra", "{x", "中") ++ docs
+    val widths = Seq(1, 2, 3, 4, 26, 27, 200, 1000)
+    def run(): (Seq[Seq[Int]], Boolean) = {
+      val ids = textFrame(words).select(col("i") +: widths.map(n =>
+        GraftColumnBridge.column(AzRangeId(GraftColumnBridge.expression(col("text")), n))): _*)
+      val fused = ids.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w.child.collect { case p: ProjectExec => p }
+      }.flatten.nonEmpty
+      (ids.collect().sortBy(_.getInt(0)).map(r => widths.indices.map(j => r.getInt(j + 1))).toSeq,
+        fused)
+    }
+    val (codegenIds, codegenFused) = run()
+    val (interpIds, interpFused) = withConf(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+    assert(codegenFused && !interpFused)
+    assert(codegenIds.size == words.size && docs.size > 26)
+    assert(codegenIds === interpIds)
+    assert(codegenIds === words.map(w =>
+      widths.map(n => AzRangeId.of(org.apache.spark.unsafe.types.UTF8String.fromString(w), n))))
   }
 
   test("a non-string input fails the type check, naming the type") {

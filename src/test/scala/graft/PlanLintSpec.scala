@@ -469,6 +469,50 @@ class PlanLintSpec extends SparkSpec {
       s"letter_buckets plans a distinct aggregate: $distinct")
   }
 
+  test("ordered word counts shuffle once, by first-letter range, in 2 jobs") {
+    // the reference's reducers own first-letter ranges, so the ordered
+    // counts need no sampled range bounds: one pass-through exchange and
+    // no RangePartitioning, a map job and a result job; the unordered
+    // queries keep the hash exchange
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.physical.{
+      HashPartitioning, RangePartitioning, ShufflePartitionIdPassThrough}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.plans.TokenCountExec
+    // plans are read before the write runs, so `flatten` sees the
+    // initial adaptive plan
+    def exchanges(q: String) = {
+      val df = SparkEntry.queries(q)(spark, sf)
+      (df, flatten(df.queryExecution.executedPlan).collect { case e: ShuffleExchangeExec => e })
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    Seq("wordcount_full", "wordcount_textfile").foreach { q =>
+      val (df, ex) = exchanges(q)
+      assert(ex.size == 1 && ex.head.child.isInstanceOf[TokenCountExec] &&
+        ex.head.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough],
+        s"$q: not one pass-through exchange over TokenCountExec:\n${df.queryExecution.executedPlan}")
+      val partitionings = flatten(df.queryExecution.executedPlan).map(_.outputPartitioning)
+      assert(!partitionings.exists(_.isInstanceOf[RangePartitioning]), s"$q plans a range partitioning")
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        jobs.set(0)
+        df.write.format("noop").mode("overwrite").save()
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        assert(jobs.get == 2, s"$q ran ${jobs.get} jobs")
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    Seq("wordcount_topk", "letter_buckets").foreach { q =>
+      val (_, ex) = exchanges(q)
+      val word = ex.filter(_.child.isInstanceOf[TokenCountExec])
+      assert(word.size == 1 && word.head.outputPartitioning.isInstanceOf[HashPartitioning],
+        s"$q: the word exchange is not a hash exchange: ${ex.map(_.outputPartitioning)}")
+    }
+  }
+
   test("every query's plan builds and has output columns") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener._

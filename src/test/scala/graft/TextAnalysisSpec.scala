@@ -768,6 +768,19 @@ class TextAnalysisSpec extends SparkSpec {
     assert(run(chunk = 1) === lazySingle, "merge-at-a-time replay")
   }
 
+  test("chunked merge replay keeps only its result level's checkpoint blocks") {
+    // a chunk = 1 replay checkpoints once per merge; each level is
+    // released once the next one has materialized
+    val run = () => TextAnalysis.bpeEncodeHoldoutBatched(spark, sf,
+      scans = 2, batch = 32, window = 128, chunk = 1)
+    run().collect() // builds the stored vocabulary outside the count
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val encoded = run()
+    assert(encoded.collect().nonEmpty)
+    val grown = spark.sparkContext.getPersistentRDDs.size - before
+    assert(grown <= 1, s"$grown RDDs stay persisted after a chunk = 1 replay")
+  }
+
   test("bpe codegen-depth regression: the 256-merge default encodes through bounded projections") {
     // defaults: 4 scans x 64-pair batches = up to 256 learned merges,
     // applied <= 64 per projection — the regime the k-deep foldLeft of

@@ -2,7 +2,8 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.apache.spark.sql.functions._
-import graft.functions.AzTokens
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{AzRangeId, AzTokens}
 import graft.operators.WordCount
 import graft.plans.TokenCount
 
@@ -83,6 +84,27 @@ object WordCountProps extends Properties("WordCount") {
 
   property("TokenCount counts equal wordsOf + groupBy counts when the table flushes early") =
     Prop.forAll(textsWithNull) { ts => fusedCounts(ts, 2) == explodedCounts(ts) }
+
+  // words for the range id: one-letter words, second bytes below 'a'
+  // and above 'z' (é and 😀 lead bytes among them), first bytes outside
+  // a-z, and the empty word
+  private val idByte: Gen[String] = Gen.frequency(
+    4 -> Gen.alphaLowerChar.map(_.toString),
+    1 -> Gen.oneOf("\u0000", " ", "'", "0", "A", "Z", "_", "`"),
+    1 -> Gen.oneOf("{", "~", "\u007f", "é", "中", "😀"))
+  private val idWord: Gen[UTF8String] =
+    Gen.frequency(1 -> Gen.const(0), 4 -> Gen.const(1), 6 -> Gen.choose(2, 6))
+      .flatMap(Gen.listOfN(_, idByte)).map(cs => UTF8String.fromString(cs.mkString))
+  private val idWidths = Seq(1, 2, 3, 4, 26, 27, 200, 1000)
+
+  property("az_range_id is monotone in byte order and lies in [0, n)") =
+    Prop.forAll(Gen.listOfN(200, idWord)) { ws =>
+      val sorted = ws.sortWith(_.compareTo(_) < 0)
+      idWidths.forall { n =>
+        val ids = sorted.map(AzRangeId.of(_, n))
+        ids.forall(i => i >= 0 && i < n) && ids.zip(ids.drop(1)).forall { case (a, b) => a <= b }
+      }
+    }
 
   property("az_tokens kernel equals the split + regex reference") =
     Prop.forAll(texts) { ts => kernelTokens(ts) == ts.map(refTokens) }

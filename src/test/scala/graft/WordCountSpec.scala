@@ -92,6 +92,56 @@ class WordCountSpec extends SparkSpec {
     assert(plain.experimental.extraStrategies.contains(graft.plans.TokenCountStrategy))
   }
 
+  test("ordered counts equal wordsOf + groupBy + orderBy row for row at any shuffle width") {
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+      case other => other.children
+    }).flatMap(nodes)
+    // one-letter words, second bytes below 'a' and above 'z', multi-byte
+    // UTF-8 after the first letter, a word for every two-letter prefix,
+    // and the sf corpus
+    val edge = Seq("a b z a", "aA a0 a' a{ a~ aé a中 a😀 zz z😀", "b\u0000 bZ by bz b{") ++
+      ('a' to 'z').map(b0 => ('a' to 'z').map(b1 => s"$b0${b1}x $b0$b1").mkString(" "))
+    val docs = graft.sources.Tables.documents(spark, sf).select("text").as[String].collect().toSeq
+    val texts = spark.sparkContext.parallelize(edge ++ docs, 3).toDF("text")
+    // AQE's initial width is meant for coalescing, which this exchange
+    // does not get: the width is the plain one, capped at the key count
+    for (aqe <- Seq("true", "false"); n <- Seq(1, 3, 4, 32, 1000)) withConf(
+        "spark.sql.adaptive.enabled" -> aqe, "spark.sql.shuffle.partitions" -> n.toString,
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "64") {
+      val ordered = WordCount.countsOf(texts).orderBy("word")
+      val got = ordered.as[(String, Long)].collect().toSeq
+      val want = WordCount.wordsOf(texts).groupBy("word").count().orderBy("word")
+        .as[(String, Long)].collect().toSeq
+      val firstDiff = got.zip(want).indexWhere { case (g, w) => g != w }
+      assert(got.size > 1000 && got.size == want.size && firstDiff < 0,
+        s"aqe=$aqe, $n partitions: ${got.size} vs ${want.size} rows, first difference at $firstDiff")
+      val exchanges = nodes(ordered.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+      assert(exchanges.size == 1 && (exchanges.head match {
+        case p: ShufflePartitionIdPassThrough =>
+          p.numPartitions == math.min(n, graft.functions.AzRangeId.Keys)
+        case _ => false
+      }), s"aqe=$aqe, $n partitions: $exchanges")
+    }
+  }
+
+  test("range ids reach every partition up to one per key") {
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.AzRangeId
+    // every key, in byte order: first letter, then no/low, a-z, high byte
+    val seconds = "" +: ('a' to 'z').map(_.toString) :+ "{"
+    val keys = for (b0 <- 'a' to 'z'; b1 <- seconds) yield UTF8String.fromString(s"$b0$b1")
+    assert(keys.map(AzRangeId.key) === (0 until AzRangeId.Keys))
+    for (n <- Seq(1, 4, 26, 27, 200, AzRangeId.Keys))
+      assert(keys.map(AzRangeId.of(_, n)).distinct === (0 until n), s"$n partitions")
+  }
+
   test("flagship entry returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
