@@ -12,11 +12,22 @@ sides, the revision first in even pairs and the working tree first in odd
 ones, so a drift in host load does not always fall on the same side.
 
 Prints, per metric: each side's median [q1, q3] over the pairs, the change
-of the medians, and the pairs the working tree won (ties count for
-neither); then how many runs were correct and how many operations failed
-out of those attempted. Metric directions come from BENCHMARK.json (lower
-is better unless it says otherwise). `--out FILE` also keeps every run's
-result line as JSON.
+of the medians, the pairs the working tree won (ties count for neither) and
+a verdict; then how many runs were correct and how many operations failed
+out of those attempted. Metric directions and bounds come from
+BENCHMARK.json (lower is better unless it says otherwise). The verdict,
+with the revision as the parent and the working tree as the change:
+
+- worse: the change's median is worse than the parent's by more than the
+  metric's bound (relative to the parent's median);
+- gain: the change won at least 9 of 10 pairs, and its median is better
+  than the parent's by more than the parent's interquartile range;
+- unresolved: the parent's interquartile range is more than the bound of
+  its median, and not every change run beats every parent run;
+- unchanged: any other case.
+
+Metrics without a bound read only gain or unchanged. `--out FILE` also
+keeps every run's result line as JSON.
 """
 import argparse
 import json
@@ -37,14 +48,39 @@ def quartiles(xs):
     return q1, med, q3
 
 
-def summarize(pairs, higher_better=()):
+def wins(rev, tree, higher=False):
+    """Pairs in which `tree` beat `rev` (values in pair order); ties count for neither."""
+    sign = -1 if higher else 1
+    return sum(1 for a, b in zip(rev, tree) if sign * (b - a) < 0)
+
+
+def verdict(rev, tree, higher=False, bound=None):
+    """gain, worse, unresolved or unchanged for one metric's runs: `rev`
+    (the parent) and `tree` (the change) are the values of the same pairs,
+    in pair order."""
+    sign = -1 if higher else 1
+    (q1, med, q3), t = quartiles(rev), quartiles(tree)[1]
+    if bound is not None and sign * (t - med) > bound * abs(med):
+        return "worse"
+    if 10 * wins(rev, tree, higher) >= 9 * len(rev) and sign * (med - t) > q3 - q1:
+        return "gain"
+    best_rev = min(rev) if sign > 0 else max(rev)
+    if (bound is not None and q3 - q1 > bound * abs(med)
+            and not all(sign * (b - best_rev) < 0 for b in tree)):
+        return "unresolved"
+    return "unchanged"
+
+
+def summarize(pairs, higher_better=(), bounds=None):
     """One row per metric of the pairs' runs.
 
     `pairs` is a list of {"rev": result, "tree": result}, where a result is
     a graftbench result line ({"correct", "attempted", "failed", "metrics":
     {name: {"value", "unit"}}}) or None for a run that produced none. A
     metric is summarized over the pairs in which both sides report it.
+    `bounds` maps a metric to its relative bound.
     """
+    bounds = bounds or {}
     names = []
     for p in pairs:
         for side in SIDES:
@@ -60,14 +96,13 @@ def summarize(pairs, higher_better=()):
             continue
         rev = [a["value"] for a, _ in both]
         tree = [b["value"] for _, b in both]
-        sign = -1 if k in higher_better else 1
-        won = sum(1 for a, b in zip(rev, tree) if sign * (b - a) < 0)
         r, t = quartiles(rev), quartiles(tree)
         rows.append({
             "metric": k, "unit": both[0][0].get("unit", ""), "pairs": len(both),
             "rev": r, "tree": t,
             "change": (t[1] - r[1]) / r[1] if r[1] else None,
-            "tree_won": won,
+            "tree_won": wins(rev, tree, k in higher_better),
+            "verdict": verdict(rev, tree, k in higher_better, bounds.get(k)),
         })
     return rows
 
@@ -86,13 +121,14 @@ def outcome(pairs):
 
 
 def render(rows, outcomes, rev_name):
-    lines = [f"{'metric':<24} {'rev ' + rev_name:>30} {'working tree':>30} {'change':>8} won"]
+    lines = [f"{'metric':<24} {'rev ' + rev_name:>30} {'working tree':>30} {'change':>8} "
+             f"{'won':>5}  verdict"]
     for r in rows:
         def cell(q):
             return f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
         ch = "n/a" if r["change"] is None else f"{100 * r['change']:+.1f}%"
         lines.append(f"{r['metric']:<24} {cell(r['rev']):>30} {cell(r['tree']):>30} "
-                     f"{ch:>8} {r['tree_won']}/{r['pairs']}")
+                     f"{ch:>8} {str(r['tree_won']) + '/' + str(r['pairs']):>5}  {r['verdict']}")
     for side in SIDES:
         o = outcomes[side]
         lines.append(f"{side}: {o['correct']}/{o['runs']} runs correct, "
@@ -102,13 +138,15 @@ def render(rows, outcomes, rev_name):
     return "\n".join(lines)
 
 
-def higher_better(root):
+def directions(root):
+    """(metrics where higher is better, {metric: bound}) from BENCHMARK.json."""
     try:
         bench = json.loads((root / "BENCHMARK.json").read_text())
     except (OSError, ValueError):
-        return set()
-    return {m["name"] for part in ("end_to_end", "per_layer") for m in bench.get(part, [])
-            if m.get("better") == "higher"}
+        return set(), {}
+    ms = [m for part in ("end_to_end", "per_layer") for m in bench.get(part, [])]
+    return ({m["name"] for m in ms if m.get("better") == "higher"},
+            {m["name"]: m["bound"] for m in ms if "bound" in m})
 
 
 def result_line(stdout):
@@ -161,7 +199,8 @@ def main():
             print(f"# pair {i + 1}/{a.pairs} seed {seed} done", file=sys.stderr, flush=True)
     if a.out:
         Path(a.out).write_text(json.dumps(pairs, indent=1))
-    print(render(summarize(pairs, higher_better(tree)), outcome(pairs), a.rev))
+    higher, bounds = directions(tree)
+    print(render(summarize(pairs, higher, bounds), outcome(pairs), a.rev))
     return 0
 
 

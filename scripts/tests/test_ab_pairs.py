@@ -1,5 +1,5 @@
 """The A/B summary: quartiles per side, pairs won, metric direction,
-runs without a result, and the correct/failed counts."""
+the verdict, runs without a result, and the correct/failed counts."""
 import sys
 import unittest
 from pathlib import Path
@@ -50,6 +50,55 @@ class SummaryTest(unittest.TestCase):
         text = ab_pairs.render([row], out, "HEAD")
         self.assertIn("1/1", text)
         self.assertIn("1 runs gave no result", text)
+
+    def test_gain_needs_nine_of_ten_and_a_gap_beyond_the_parent_iqr(self):
+        rev = [10.0, 10.2, 10.4, 10.6, 10.8, 11.0, 11.2, 11.4, 11.6, 11.8]
+        # every pair won, median 10.9 -> 9.9 against a parent IQR of 0.9
+        self.assertEqual(ab_pairs.verdict(rev, [r - 1.0 for r in rev], bound=0.25), "gain")
+        # the same gap with two pairs lost is not a gain
+        tree = [r - 1.0 for r in rev[:8]] + [12.0, 12.5]
+        self.assertEqual(ab_pairs.verdict(rev, tree, bound=0.25), "unchanged")
+        # all ten won, but by less than the parent's IQR
+        self.assertEqual(ab_pairs.verdict(rev, [r - 0.5 for r in rev], bound=0.25),
+                         "unchanged")
+        # no bound: a gain is still a gain
+        self.assertEqual(ab_pairs.verdict(rev, [r - 1.0 for r in rev]), "gain")
+
+    def test_worse_is_a_median_beyond_the_bound_in_the_bad_direction(self):
+        rev = [1.0] * 10
+        self.assertEqual(ab_pairs.verdict(rev, [1.3] * 10, bound=0.25), "worse")
+        self.assertEqual(ab_pairs.verdict(rev, [1.2] * 10, bound=0.25), "unchanged")
+        # higher is better: a fall is the bad direction
+        self.assertEqual(ab_pairs.verdict(rev, [0.7] * 10, higher=True, bound=0.25), "worse")
+        self.assertEqual(ab_pairs.verdict(rev, [1.3] * 10, higher=True, bound=0.25), "gain")
+        # no bound: never worse
+        self.assertEqual(ab_pairs.verdict(rev, [2.0] * 10), "unchanged")
+
+    def test_unresolved_is_a_parent_spread_beyond_the_bound(self):
+        rev = [1.0, 1.0, 1.0, 2.0, 2.0, 2.0, 2.0, 3.0, 3.0, 3.0]  # IQR 1.75 on 2.0
+        tree = [2.0] * 10
+        self.assertEqual(ab_pairs.verdict(rev, tree, bound=0.25), "unresolved")
+        self.assertEqual(ab_pairs.verdict(rev, tree), "unchanged")
+        # every change run beats every parent run: resolved despite the
+        # spread, and a gain only once the gap passes the IQR (1.5)
+        self.assertEqual(ab_pairs.verdict(rev, [0.9] * 10, bound=0.25), "unchanged")
+        self.assertEqual(ab_pairs.verdict(rev, [0.4] * 10, bound=0.25), "gain")
+        self.assertEqual(ab_pairs.verdict(rev, [0.5 * r for r in rev], bound=0.25),
+                         "unresolved")
+
+    def test_summary_rows_carry_the_verdict_and_bounds_come_from_the_benchmark(self):
+        pairs = [{"rev": res(pass_s=1.0, util=0.5), "tree": res(pass_s=1.5, util=0.5)}
+                 for _ in range(3)]
+        rows = {r["metric"]: r for r in ab_pairs.summarize(
+            pairs, higher_better={"util"}, bounds={"pass_s": 0.25})}
+        self.assertEqual(rows["pass_s"]["verdict"], "worse")
+        self.assertEqual(rows["util"]["verdict"], "unchanged")
+        self.assertIn("worse", ab_pairs.render(list(rows.values()),
+                                               ab_pairs.outcome(pairs), "HEAD"))
+        higher, bounds = ab_pairs.directions(Path(__file__).resolve().parents[2])
+        self.assertIn("exec.core_util", higher)
+        self.assertEqual(bounds["pass_s"], 0.25)
+        self.assertNotIn("exec.jobs", bounds)
 
     def test_result_line_is_the_last_json_line(self):
         out = '# env {"a": 1}\n{"correct": true, "metrics": {}}\n'

@@ -36,7 +36,7 @@ object BpeProbe {
     val perScan = scala.collection.mutable.ListBuffer
       .empty[(Int, Int, Int, Double)]
     var capped = 0
-    val (rows, _) = graft.operators.TextAnalysis.bpeTrainBatchedLoop(
+    val (rows, _, _) = graft.operators.TextAnalysis.bpeTrainBatchedLoop(
       spark, sfDir, scans, batch, window, keepFinal = false,
       onScan = (k, cands, keeps, sec) => {
         if (cands >= window && keeps < batch) capped += 1

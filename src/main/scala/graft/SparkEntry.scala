@@ -286,8 +286,9 @@ object SparkEntry {
 
   private def bpeReplayCtesOver(wWhere: String): String = {
     // fully-delimited state (chr(2)||sym||chr(2) per symbol, so inner
-    // boundaries are DOUBLE chr(2)) — mirrors bpeTrainLoop exactly,
-    // including the left-to-right non-overlapping replace() semantics.
+    // boundaries are DOUBLE chr(2)) — mirrors bpeTrainBatchedLoop at
+    // batch = window = 1, including the left-to-right non-overlapping
+    // replace() semantics.
     // Each round guards the exhausted case: an empty t_k replays the
     // identity instead of CROSS JOINing the state away to zero rows
     // (the Spark loop stops via its `done` flag and keeps the last

@@ -1316,13 +1316,7 @@ object TextAnalysis {
   def bigramStats(spark: SparkSession, sfDir: String, k: Int = 100): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(wsTokens(col("text")).as("toks"))
-    val pairs = toks.filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("p"))
-      .select(col("p.w1"), col("p.w2"))
-    val bg = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
+    val bg = pairCounts(toks, col("toks"))
     // corpus totals are 1-row scalar reductions, but NEITHER needs the
     // aggregated tables (r17, guide §1.2): Σ n_w is the total token
     // count and Σ n_pair the total bigram count — both pure arithmetic
@@ -1364,10 +1358,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), wsTokens(col("text")).as("toks"))
     val docBg = docs.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("p"))
+      .select(col("doc_id"), explode(adjacentPairs(col("toks"))).as("p"))
       .select(col("doc_id"), col("p.w1"), col("p.w2"))
     val bg = docBg.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
     // materialized once (vocabulary-sized, r17): `uni` feeds the scoring
@@ -1463,13 +1454,7 @@ object TextAnalysis {
   def bpeMergeStep(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-    val top = docs.filter(size(col("toks")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("p"))
-      .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n_pair"))
+    val top = pairCounts(docs, col("toks"))
       .orderBy(col("n_pair").desc, col("w1"), col("w2")).limit(1).head()
     applyMerge(docs, top.getString(0), top.getString(1))
   }
@@ -1525,8 +1510,10 @@ object TextAnalysis {
     * (an earlier leading-only spelling could merge w1 with a following
     * symbol that merely STARTED with w2 — e.g. winner (x, y) also
     * rewriting inside `x yz`); and each merge rewrites exactly one
-    * \u0002\u0002 into one \u0001, so merge counts fall out of \u0001 chars
-    * and symbol counts out of \u0002 chars / 2. DuckDB's `replace` has
+    * \u0002\u0002 into one \u0001, removing exactly one symbol, so symbol
+    * counts fall out of \u0002 chars / 2 and a round's merges out of the
+    * drop in symbol count (the oracle counts \u0001 chars instead, an
+    * independent spelling of the same number). DuckDB's `replace` has
     * the same scan semantics, so the oracle replays all k rounds
     * mechanically. The separators are outside the corpus alphabet
     * (ws-tokens of printable text); production would validate or
@@ -1544,11 +1531,17 @@ object TextAnalysis {
     * checkpointed, making the returned frame self-contained. */
   def bpeTrain(spark: SparkSession, sfDir: String, rounds: Int = 5): DataFrame = {
     import spark.implicits._
-    // keepFinal = false: the per-round stats are already collected, so
-    // checkpointing the final corpus state would pay a full scan + a
-    // block-manager corpus copy for a frame this caller never reads
-    val (rows, _) = bpeTrainLoop(spark, sfDir, rounds, keepFinal = false)
-    rows.toDF("round", "w1", "w2", "n_pair", "n_merges", "n_tokens_after")
+    // the batched loop at batch = window = 1 IS the one-merge-per-scan
+    // trainer. keepFinal = false: the per-round stats are already
+    // collected, so checkpointing the final corpus state would pay a
+    // full scan + a block-manager corpus copy for a frame never read
+    val (rows, symbols0, _) = bpeTrainBatchedLoop(spark, sfDir, rounds,
+      batch = 1, window = 1, keepFinal = false)
+    // a round's merges are its drop in the symbol count
+    val before = symbols0 :: rows.map(_._7)
+    rows.zip(before).map { case ((_, r, _, w1, w2, nPair, after), b) =>
+      (r, w1, w2, nPair, b - after, after)
+    }.toDF("round", "w1", "w2", "n_pair", "n_merges", "n_tokens_after")
       .orderBy("round")
   }
 
@@ -1566,10 +1559,10 @@ object TextAnalysis {
     * beyond the trainer's k scans; the projection is row-local
     * character counting plus a row-local re-join of the symbols. */
   def bpeEncode(spark: SparkSession, sfDir: String, rounds: Int = 5): DataFrame = {
-    // needStats = false: only the final state is consumed — the trainer
-    // skips the per-round stats metrics and the trailing aggregate
-    val (_, finOpt) = bpeTrainLoop(spark, sfDir, rounds, keepFinal = true,
-      needStats = false)
+    // stats = false: only the final state is consumed — the trainer
+    // skips the per-round observed metric and the trailing aggregate
+    val (_, _, finOpt) = bpeTrainBatchedLoop(spark, sfDir, rounds, batch = 1,
+      window = 1, keepFinal = true, stats = false)
     bpeEncodeProjection(finOpt.get)
   }
 
@@ -1585,17 +1578,16 @@ object TextAnalysis {
     * which is exactly why vocabularies are trained once and applied
     * everywhere. Same output shape as [[bpeEncode]]. */
   def bpeEncodeHoldout(spark: SparkSession, sfDir: String, rounds: Int = 5): DataFrame = {
-    // needStats = false: only the merge list's (w1, w2) is consumed —
-    // no per-round stats, and the final training-side rewrite is never
+    // stats = false: only the merge list's (w1, w2) is consumed — no
+    // per-round stats, and the final training-side rewrite is never
     // computed (the ENCODE below replays the merges on the odd half)
-    val (learned, _) = bpeTrainLoop(spark, sfDir, rounds, keepFinal = false,
-      docFilter = col("doc_id") % 2 === 0, needStats = false)
+    val (learned, _, _) = bpeTrainBatchedLoop(spark, sfDir, rounds,
+      batch = 1, window = 1, keepFinal = false,
+      docFilter = col("doc_id") % 2 === 0, stats = false)
     val hold = delimitedState(
       Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 1))
-    val applied = learned.foldLeft(hold) { case (df, (_, w1, w2, _, _, _)) =>
-      df.select(col("doc_id"), mergeRewrite(col("s"), w1, w2).as("s"))
-    }
-    bpeEncodeProjection(applied)
+    bpeEncodeProjection(applyMergesChunked(hold,
+      learned.map(m => (m._4, m._5)), chunk = 128))
   }
 
   /** BATCHED BPE trainer — the k≫5 regime the one-merge-per-scan loop
@@ -1633,16 +1625,16 @@ object TextAnalysis {
     *
     * vs sequential BPE: the merge SEQUENCE differs from one-at-a-time
     * training (which would recount between merges and could pick a
-    * just-created pair next); this is the accepted batched-BPE trade —
-    * [[bpeTrain]] remains the exact-sequential reference, and the
-    * batch=1 degenerate case of this trainer reproduces it merge for
-    * merge (spec-pinned).
+    * just-created pair next); this is the accepted batched-BPE trade.
+    * The exact-sequential trainer ([[bpeTrain]]) is this trainer's loop
+    * at batch = window = 1, checked against an independent driver-side
+    * BPE in the spec.
     *
     * Output: one row per learned merge — (merge_idx, scan, seq, w1,
     * w2, n_pair) with the scan-end corpus symbol count repeated on the
     * scan's rows. Scale: ⌈k/batch⌉ wordcount-currency pair aggs + one
     * ≤batch-deep map-only rewrite per scan, persist-per-scan with ≤2
-    * corpus copies live — the same discipline as [[bpeTrainLoop]].
+    * corpus copies live ([[bpeTrainBatchedLoop]]).
     *
     * WINDOW SIZING (r12, measured by `graft.BpeProbe`): the ranked
     * window is a driver-memory safety valve (a collected (w1, w2,
@@ -1677,7 +1669,7 @@ object TextAnalysis {
       s"$sfDir/documents.parquet") {
       import spark.implicits._
       val filter = if (evenSplit) col("doc_id") % 2 === 0 else lit(true)
-      val (rows, _) = bpeTrainBatchedLoop(spark, sfDir, scans, batch, window,
+      val (rows, _, _) = bpeTrainBatchedLoop(spark, sfDir, scans, batch, window,
         keepFinal = false, docFilter = filter)
       rows.toDF("merge_idx", "scan", "seq", "w1", "w2", "n_pair",
         "n_tokens_after")
@@ -1765,12 +1757,9 @@ object TextAnalysis {
   private def applyMergesChunked(df: DataFrame,
       merges: Seq[(String, String)], chunk: Int): DataFrame = {
     require(chunk >= 1, s"chunk must be >= 1, got $chunk")
-    def project(d: DataFrame, grp: Seq[(String, String)]): DataFrame =
-      d.select(col("doc_id"),
-        grp.foldLeft(col("s"))((c, m) => mergeRewrite(c, m._1, m._2)).as("s"))
     val groups = merges.grouped(chunk).toList
     if (groups.lengthCompare(1) <= 0)
-      groups.foldLeft(df)(project)
+      groups.foldLeft(df)(replayMerges)
     else {
       // EAGER localCheckpoint per chunk, not persist+count (r17): the
       // persist chain truncated lineage for EXECUTION but not for the
@@ -1788,7 +1777,7 @@ object TextAnalysis {
       // the ContextCleaner gets to them. The returned frame is
       // self-contained.
       groups.foldLeft(df) { (d, grp) =>
-        val next = project(d, grp).localCheckpoint()
+        val next = replayMerges(d, grp).localCheckpoint()
         if (d ne df) d.queryExecution.logical match {
           case level: LogicalRDD => level.rdd.unpersist(blocking = false)
           case _ =>
@@ -1798,21 +1787,44 @@ object TextAnalysis {
     }
   }
 
-  /** Shared scan loop of the batched trainer: per-merge stats rows plus
-    * (optionally) the final rewritten corpus state. Row tuple:
-    * (merge_idx, scan, seq, w1, w2, n_pair, n_tokens_after-of-scan). */
+  /** The one BPE trainer loop: per-merge stats rows, the symbol count
+    * of the initial state, and (optionally) the final rewritten corpus
+    * state. Row tuple: (merge_idx, scan, seq, w1, w2, n_pair,
+    * n_tokens_after-of-scan). At batch = window = 1 it is the
+    * one-merge-per-scan trainer behind [[bpeTrain]], [[bpeEncode]] and
+    * [[bpeEncodeHoldout]].
+    *
+    * ONE corpus scan per state (r16, guide §1.2): the separator total of
+    * a state rides that state's pair-count job as an observed metric
+    * (CollectMetrics over the cached state) instead of a dedicated
+    * aggregate per scan, so a scan's post-rewrite symbol count arrives
+    * one scan later and the last scan settles with a single trailing
+    * aggregate. A rewritten state materializes into its persist when
+    * the next scan (or the trailing aggregate / final checkpoint) first
+    * reads it, and its parent is released then — at most two corpus
+    * copies live.
+    *
+    * `stats = false` (callers that consume only the merge list or the
+    * final state): symbol counts are 0 placeholders, no metric is
+    * observed, no trailing aggregate runs, and — for keepFinal = false —
+    * the last scan's rewrite is never computed (nothing reads it). */
   private[graft] def bpeTrainBatchedLoop(spark: SparkSession, sfDir: String,
       scans: Int, batch: Int, window: Int, keepFinal: Boolean,
-      docFilter: Column = lit(true),
+      docFilter: Column = lit(true), stats: Boolean = true,
       // probe hook (dev tooling + the keeps-growth spec): called once
       // per completed scan with (scan, candidates-in-window, keeps,
       // scan-seconds) — candidates < window ⇔ the ranked window saw the
       // ENTIRE pair inventory, so keeps are genuinely disjointness- or
       // batch-limited, never window-truncated
       onScan: (Int, Int, Int, Double) => Unit = (_, _, _, _) => ())
-      : (List[(Long, Int, Int, String, String, Long, Long)], Option[DataFrame]) = {
+      : (List[(Long, Int, Int, String, String, Long, Long)], Long,
+        Option[DataFrame]) = {
     val sep = "\u0002"
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // the cached state inherits the source's floored parallelism
+    // (Tables.floored): without it a single-row-group corpus plans a
+    // 1-task scan and every scan's rewrite + pair aggregation
+    // serializes onto one core (measured r16: 0.44 s/round at sf0.1)
     var cur = delimitedState(
       Tables.floored(spark, sfDir, "documents").filter(docFilter))
       .persist(level)
@@ -1822,12 +1834,7 @@ object TextAnalysis {
       lit(0L)).as("seps")
     val out = scala.collection.mutable.ListBuffer
       .empty[(Long, Int, Int, String, String, Long, Long)]
-    // rows of the scan awaiting its post-rewrite symbol count — ONE
-    // corpus scan per state (r16, guide §1.2): the separator total of
-    // the rewritten state rides the NEXT scan's pair-count job as an
-    // observed metric (CollectMetrics over the cached state) instead of
-    // paying a dedicated aggregate per scan; the last scan settles with
-    // a single trailing aggregate. Same deferral as [[bpeTrainLoop]].
+    // rows of the scan awaiting its post-rewrite symbol count
     var pendingRows = List.empty[(Long, Int, Int, String, String, Long)]
     def close(symbols: Long): Unit = {
       pendingRows.foreach { case (mi, k, i, w1, w2, nPair) =>
@@ -1835,27 +1842,31 @@ object TextAnalysis {
       }
       pendingRows = Nil
     }
+    var symbols0 = 0L
     var mergeIdx = 0L
     var done = false
     for (k <- 1 to scans if !done) {
       val scanT0 = System.nanoTime()
       val obs = org.apache.spark.sql.Observation()
       // deterministic candidate window: TakeOrdered under the total
-      // order (n_pair DESC, w1, w2) — the same order the oracle ranks
-      val top = pairCounts(cur.observe(obs, sepSum))
+      // order (n_pair DESC, w1, w2) — the same order the oracle ranks.
+      // Splitting on a SINGLE sep yields boundary empties; the symbols
+      // are the non-empties (ws-tokens and glued merges never are)
+      val top = pairCounts(if (stats) cur.observe(obs, sepSum) else cur,
+          filter(split(col("s"), sep), x => x =!= lit("")))
         .orderBy(col("n_pair").desc, col("w1"), col("w2")).limit(window)
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
       // this scan materialized cur's cache; its parent can go now
       prev.foreach(_.unpersist(blocking = false)); prev = None
-      close(obs.get("seps").asInstanceOf[Long] / 2)
+      val symbols = if (stats) obs.get("seps").asInstanceOf[Long] / 2 else 0L
+      if (k == 1) symbols0 = symbols
+      close(symbols)
       if (top.isEmpty) done = true
       else {
         val kept = selectDisjointBatch(top, batch)
-        val rewritten = cur.select(col("doc_id"),
-          kept.foldLeft(col("s"))((c, m) => mergeRewrite(c, m._1, m._2))
-            .as("s"))
-          .persist(level)
+        val rewritten =
+          replayMerges(cur, kept.map(m => (m._1, m._2))).persist(level)
         pendingRows = kept.zipWithIndex.map { case ((w1, w2, nPair), i) =>
           (mergeIdx + i + 1, k, i + 1, w1, w2, nPair)
         }.toList
@@ -1867,16 +1878,23 @@ object TextAnalysis {
     }
     // the last scan's post-rewrite symbol count: one trailing aggregate
     // over the final state (which also materializes it)
-    if (pendingRows.nonEmpty) {
+    if (stats && pendingRows.nonEmpty) {
       val st = cur.agg(sepSum).head()
       prev.foreach(_.unpersist(blocking = false)); prev = None
       close(st.getLong(0) / 2)
     }
+    close(0L) // stats = false: the last scan's rows keep the placeholder
     val fin = if (keepFinal) Some(cur.localCheckpoint()) else None
     prev.foreach(_.unpersist(blocking = false))
     cur.unpersist(blocking = false)
-    (out.toList, fin)
+    (out.toList, symbols0, fin)
   }
+
+  /** One map-only projection applying `merges` in order to a
+    * delimited (doc_id, s) state. */
+  private def replayMerges(d: DataFrame, merges: Seq[(String, String)]): DataFrame =
+    d.select(col("doc_id"),
+      merges.foldLeft(col("s"))((c, m) => mergeRewrite(c, m._1, m._2)).as("s"))
 
   /** Per-doc counts + rendered string off a fully-delimited corpus
     * state: 2 seps per symbol, 1 glue per merge. */
@@ -1906,26 +1924,27 @@ object TextAnalysis {
       concat(lit(sep), lit(w1), lit(glue), lit(w2), lit(sep)))
   }
 
-  /** Adjacent-symbol pair counts over a fully-delimited corpus state —
-    * the per-scan aggregation shared by the one-merge-per-scan trainer
-    * loop and the batched trainer. Splitting on a SINGLE sep yields
-    * boundary empties ("", t1, "", t2, …, ""); the symbols are the
-    * non-empties (ws-tokens and glued merges are never empty).
-    * Wordcount currency: pair emission is row-local, the agg is a
-    * partial+final hash aggregate over the (vocab²-bounded, in practice
+  /** The adjacent (w1, w2) pairs of an array column, in order, as
+    * structs — the one pair spelling behind the bigram reports and the
+    * BPE pair counts. Pass a column REFERENCE (the array is read twice
+    * per element) with at least 2 elements: `sequence(1, 0)` counts
+    * down. */
+  private def adjacentPairs(arr: Column): Column =
+    transform(sequence(lit(1), size(arr) - 1),
+      i => struct(element_at(arr, i).as("w1"), element_at(arr, i + 1).as("w2")))
+
+  /** Adjacent-symbol pair counts (w1, w2, n_pair) over the symbol arrays
+    * `syms` of `df` — the per-scan aggregation of the BPE trainer, the
+    * merge step's winner and the bigram report's table. Wordcount
+    * currency: pair emission is row-local, the agg is a partial+final
+    * hash aggregate over the (vocab²-bounded, in practice
     * corpus-bigram-bounded) pair key space — no corpus strings shuffle. */
-  private def pairCounts(cur: DataFrame): DataFrame = {
-    val sep = "\u0002"
-    cur
-      .select(filter(split(col("s"), sep), x => x =!= lit("")).as("syms"))
+  private def pairCounts(df: DataFrame, syms: Column): DataFrame =
+    df.select(syms.as("syms"))
       .filter(size(col("syms")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(1, size(syms) - 1),
-          |  i -> struct(element_at(syms, i) AS w1, element_at(syms, i + 1) AS w2))""".stripMargin))
-        .as("p"))
+      .select(explode(adjacentPairs(col("syms"))).as("p"))
       .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .agg(count(lit(1)).as("n_pair"))
-  }
 
   /** Fully-delimited BPE state of a (doc_id, text) frame: every symbol
     * wrapped in its own leading+trailing separator. */
@@ -1935,106 +1954,6 @@ object TextAnalysis {
       .select(col("doc_id"), when(size(col("toks")) === 0, lit(""))
         .otherwise(concat(lit(sep), concat_ws(sep + sep, col("toks")),
           lit(sep))).as("s"))
-  }
-
-  /** Shared k-round trainer loop: per-round winner stats plus the
-    * final rewritten corpus state (doc_id, s) — [[bpeTrain]] reports
-    * the former, [[bpeEncode]] projects the latter.
-    *
-    * ONE corpus scan per round (r16, guide §1.2): the per-round
-    * glue/separator totals ride the winner-aggregation job as observed
-    * metrics (`Observation` — a CollectMetrics node over the cached
-    * state, computed in the pass the pair counts already make), so the
-    * old separate stats aggregate per round is gone. A scan of state r
-    * measures state r's totals, so each round's POST-merge stats
-    * arrive one scan later (in round r+1's job); the final round
-    * settles with a single trailing aggregate. Rewritten states
-    * materialize into their persist when the next round's scan (or
-    * the trailing aggregate / final checkpoint) first reads them —
-    * the ≤2-live-copies discipline is unchanged, shifted one round.
-    *
-    * `needStats = false` ([[bpeEncode]]/[[bpeEncodeHoldout]], which
-    * consume only the merge list / final state): the glued and symbol
-    * fields of the returned rows are 0 PLACEHOLDERS, the observe
-    * metrics and the trailing aggregate are skipped, and — for
-    * keepFinal = false — the last round's rewrite is never computed
-    * (nothing reads it). */
-  private def bpeTrainLoop(spark: SparkSession, sfDir: String, rounds: Int,
-      keepFinal: Boolean, docFilter: Column = lit(true),
-      needStats: Boolean = true)
-      : (List[(Int, String, String, Long, Long, Long)], Option[DataFrame]) = {
-    val sep = "\u0002"; val glue = "\u0001"
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the cached state inherits the source's floored parallelism
-    // (Tables.floored): without it a single-row-group corpus plans a
-    // 1-task scan and every round's rewrite + pair aggregation
-    // serializes onto one core (measured r16: 0.44 s/round at sf0.1)
-    var cur = delimitedState(
-      Tables.floored(spark, sfDir, "documents").filter(docFilter))
-      .persist(level)
-    var prev: Option[DataFrame] = None // cur's parent, released post-scan
-    def statsCols = Seq(
-      coalesce(sum(length(col("s")) - length(translate(col("s"), glue, ""))),
-        lit(0L)).as("glued"),
-      coalesce(sum(length(col("s")) - length(translate(col("s"), sep, ""))),
-        lit(0L)).as("seps"))
-    val perRound = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long, Long, Long)]
-    // round awaiting its post-merge totals: (round, w1, w2, nPair)
-    var pending: Option[(Int, String, String, Long)] = None
-    var prevGlued = 0L
-    // per-round merges = delta of CUMULATIVE glue chars (each merge
-    // writes exactly one \u0001, which persists inside merged symbols)
-    def close(glued: Long, symbols: Long): Unit = {
-      pending.foreach { case (r, w1, w2, nPair) =>
-        perRound += ((r, w1, w2, nPair, glued - prevGlued, symbols))
-        prevGlued = glued
-      }
-      pending = None
-    }
-    var done = false
-    for (r <- 1 to rounds if !done) {
-      val obs = org.apache.spark.sql.Observation()
-      val src =
-        if (needStats) cur.observe(obs, statsCols.head, statsCols(1)) else cur
-      val top = pairCounts(src)
-        .orderBy(col("n_pair").desc, col("w1"), col("w2")).limit(1)
-        .collect()
-      // this scan materialized cur's cache; its parent can go now
-      prev.foreach(_.unpersist(blocking = false)); prev = None
-      if (needStats) {
-        val m = obs.get
-        close(m("glued").asInstanceOf[Long], m("seps").asInstanceOf[Long] / 2)
-      }
-      if (top.isEmpty) done = true
-      else {
-        val (w1, w2, nPair) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        if (needStats) pending = Some((r, w1, w2, nPair))
-        else perRound += ((r, w1, w2, nPair, 0L, 0L))
-        // literal replace with COLUMN operands — no quoting hazard
-        // however regex-hostile the winning tokens are
-        val rewritten = cur
-          .select(col("doc_id"), mergeRewrite(col("s"), w1, w2).as("s"))
-          .persist(level)
-        prev = Some(cur)
-        cur = rewritten
-      }
-    }
-    // the final round's post-merge totals need one trailing aggregate
-    // over the final state (which also materializes it)
-    if (pending.isDefined) {
-      val st = cur.agg(statsCols.head, statsCols(1)).head()
-      prev.foreach(_.unpersist(blocking = false)); prev = None
-      close(st.getLong(0), st.getLong(1) / 2)
-    }
-    // only bpeEncode consumes the final state: hand IT back as a
-    // self-contained checkpoint (ContextCleaner-managed) and release
-    // the loop's cache so repeated trains don't accumulate corpus
-    // copies in the cache manager; the stats-only caller skips the
-    // checkpoint scan entirely
-    val fin = if (keepFinal) Some(cur.localCheckpoint()) else None
-    prev.foreach(_.unpersist(blocking = false))
-    cur.unpersist(blocking = false)
-    (perRound.toList, fin)
   }
 
   /** Document-frequency spectrum: how many vocabulary tokens appear in

@@ -711,6 +711,69 @@ class TextAnalysisSpec extends SparkSpec {
     assert(seq5.nonEmpty && b1.toSeq === seq5.toSeq)
   }
 
+  test("bpe trainer and encode match an independent driver-side sequential BPE") {
+    // plain symbol lists, no delimited strings: count adjacent pairs,
+    // take the (count desc, w1, w2) winner, merge greedily left to
+    // right without overlap, repeat on the merged symbols
+    val g = "\u0001"
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select("doc_id", "text").as[(Long, String)].collect()
+      .map { case (id, t) => id -> t.split("[ \n]").filter(_.nonEmpty).toSeq }.toMap
+    def merge(ts: Seq[String], w1: String, w2: String): Seq[String] = {
+      val out = Seq.newBuilder[String]; var i = 0
+      while (i < ts.length) {
+        if (i + 1 < ts.length && ts(i) == w1 && ts(i + 1) == w2) { out += w1 + g + w2; i += 2 }
+        else { out += ts(i); i += 1 }
+      }
+      out.result()
+    }
+    var state = docs
+    val expected = (1 to 5).map { r =>
+      val pairs = state.values.flatMap(ts => ts.zip(ts.drop(1)))
+        .groupBy(identity).map { case (p, ps) => p -> ps.size.toLong }
+      val ((w1, w2), n) = pairs.minBy { case ((a, b), c) => (-c, a, b) }
+      val before = state.values.map(_.size.toLong).sum
+      state = state.map { case (id, ts) => id -> merge(ts, w1, w2) }
+      val after = state.values.map(_.size.toLong).sum
+      (r, w1, w2, n, before - after, after)
+    }
+    val rows = TextAnalysis.bpeTrain(spark, sf, rounds = 5).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+        r.getLong(3), r.getLong(4), r.getLong(5)))
+    assert(rows.toSeq === expected)
+    val enc = TextAnalysis.bpeEncode(spark, sf, rounds = 5).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getString(4)))
+    val expectedEnc = docs.keys.toSeq.sorted.map { id =>
+      val (n, after) = (docs(id).size.toLong, state(id).size.toLong)
+      (id, n, n - after, after, state(id).mkString(" ").replace(g, "_"))
+    }
+    assert(enc.toSeq === expectedEnc)
+  }
+
+  test("bpe job counts: no per-round job added, no trailing aggregate without stats") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    def jobsOf(body: => Unit): Int = {
+      body // warm: the first call fills Tables.floored's partition memo
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        jobs.set(0)
+        body
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        jobs.get
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val train = jobsOf(TextAnalysis.bpeTrain(spark, sf, rounds = 3).collect(): Unit)
+    val holdout = jobsOf(TextAnalysis.bpeEncodeHoldout(spark, sf, rounds = 3).collect(): Unit)
+    // the sequential trainer's own counts: the one loop adds no job
+    assert((train, holdout) === ((17, 15)))
+  }
+
   test("batched bpe trainer invariants: contiguous indexes, per-scan footprint disjointness, shrinking corpus") {
     val g = "\u0001"
     val rows = TextAnalysis.bpeTrainBatched(spark, sf, scans = 3, batch = 8,
