@@ -115,11 +115,14 @@ object WordCount {
     * relational operator it becomes an auditable query. Built on the
     * per-word [[counts]]: each word is one distinct word of its letter
     * and adds its count to the letter's total, so no distinct aggregate
-    * is planned. */
+    * is planned. A word's first byte is `a`–`z`, so there are at most 26
+    * letter rows: they are sorted in one task (`coalesce(1)`), and the
+    * global sort needs no range exchange and no sampling job. */
   def letterBuckets(spark: SparkSession, sfDir: String): DataFrame =
     counts(spark, sfDir)
       .groupBy(substring(col("word"), 1, 1).as("letter"))
       .agg(sum("cnt").as("n_words"), count(lit(1)).as("n_distinct"))
+      .coalesce(1)
       .orderBy("letter")
 
   /** Full word counts over the corpus via the reference's LITERAL input

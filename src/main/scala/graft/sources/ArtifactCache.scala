@@ -22,6 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    stale fingerprints of the same key are deleted; a second session
   *    over an unchanged corpus reuses the on-disk artifact via the
   *    [[materialize]] read-if-exists check.
+  *
+  * Both read artifacts back through [[Tables.parquet]]: the footer
+  * schema is memoized per artifact path, keyed by the artifact's file
+  * [[fingerprint]] and the parquet confs, so a reused artifact is read
+  * without a schema-inference job. The key is the dir's own file
+  * listing, so a rewritten artifact is inferred again; the memo holds
+  * one small entry per artifact dir this JVM reads (one dir per name,
+  * params and corpus fingerprint).
   */
 object ArtifactCache {
 
@@ -29,11 +37,16 @@ object ArtifactCache {
     * already there; return a reader over the artifact. Row order is not
     * preserved by the parquet round-trip; consumers re-sort. */
   def materialize(spark: SparkSession, outPath: String)(df: => DataFrame): DataFrame = {
+    unlessDone(spark, outPath)(Sinks.writePartitionedParquet(df, outPath))
+    Tables.parquet(spark, outPath)
+  }
+
+  /** Run `write` unless `outPath` holds a completed artifact (the
+    * writer's `_SUCCESS` marker). */
+  private def unlessDone(spark: SparkSession, outPath: String)(write: => Unit): Unit = {
     val path = new org.apache.hadoop.fs.Path(outPath)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
-      Sinks.writePartitionedParquet(df, outPath)
-    spark.read.parquet(outPath)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) write
   }
 
   /** Cheap corpus fingerprint — name, length and mtime of every file of
@@ -70,9 +83,9 @@ object ArtifactCache {
     * computed at most once per JVM and reusable across sessions. */
   def readOrWrite(spark: SparkSession, name: String, params: String,
       tablePath: String)(df: => DataFrame): DataFrame =
-    readBack(name)(spark.read.parquet(
+    readBack(name)(Tables.parquet(spark,
       computeOnce(spark, name, params, tablePath) { out =>
-        materialize(spark, out)(df): Unit
+        unlessDone(spark, out)(Sinks.writePartitionedParquet(df, out))
       }))
 
   /** Two-output sibling of [[readOrWrite]] for artifacts cut from ONE
@@ -97,7 +110,7 @@ object ArtifactCache {
       }
     }
     readBack(name)(
-      (spark.read.parquet(s"$dir/a"), spark.read.parquet(s"$dir/b")))
+      (Tables.parquet(spark, s"$dir/a"), Tables.parquet(spark, s"$dir/b")))
   }
 
   /** ONE-JVM INVARIANT, made diagnosable: the session cache lives in a
@@ -148,10 +161,7 @@ object ArtifactCache {
       tablePath: String)(df: => DataFrame): DataFrame =
     readBack(name)(spark.read.text(
       computeOnce(spark, name, params, tablePath) { out =>
-        val path = new org.apache.hadoop.fs.Path(out)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
-          df.write.mode("overwrite").text(out)
+        unlessDone(spark, out)(df.write.mode("overwrite").text(out))
       }))
 
   /** The shared keyed-location + single-writer mechanics of the two

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Central table catalog over the driver-generated parquet star schema.
   *
@@ -15,6 +16,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and predicate pushdown reach the scan (verify via
   * `.explain("formatted")` → `ReadSchema` / `PushedFilters`); (c) nothing
   * here ever collects to the driver.
+  *
+  * Every read goes through [[parquet]], which memoizes each path's
+  * footer schema JVM-wide, keyed by the path's file fingerprint (names,
+  * lengths, mtimes) and the schema-relevant parquet confs: a query
+  * construction after the first read of its tables starts no Spark job.
+  * The memo holds one entry per path (bounded by the tables and
+  * artifacts the JVM reads), and a layout or conf change is a miss.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -100,8 +108,47 @@ object Tables {
       df.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*))
   }
 
+  /** Footer schema memo behind [[parquet]]: path → (key, schema), the
+    * key being the path's [[ArtifactCache.fingerprint]] plus
+    * [[parquetConfs]]; a miss replaces the path's entry. */
+  private[graft] val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  /** The session confs that can change the schema Spark infers from a
+    * parquet footer: every set `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` entry (e.g. `nanosAsLong`,
+    * `binaryAsString`), sorted, plus `spark.sql.caseSensitive`. */
+  private def parquetConfs(spark: SparkSession): String = {
+    val set = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    (set.toSeq.sorted :+ ("spark.sql.caseSensitive" -> spark.conf.get("spark.sql.caseSensitive")))
+      .map { case (k, v) => s"$k=$v" }.mkString(";")
+  }
+
+  /** Every parquet read of a catalog table or stored artifact. Spark's
+    * plain parquet read infers the footer schema with a 1-task Spark
+    * job on every call; the reference planned its input split once per
+    * job (`master.cc:190-217`), not per reducer. So the schema is
+    * inferred once per (file layout, parquet confs) and passed in on
+    * every later read, which then starts no job until execution. The
+    * key is taken before the read: a rewrite racing the read can only
+    * leave a stale key, which the next read misses. A missing path
+    * fingerprints as absent, misses, and fails in the inferring read
+    * as before (`PATH_NOT_FOUND`). */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = s"${ArtifactCache.fingerprint(spark, path)}|${parquetConfs(spark)}"
+    schemaMemo.get(path) match {
+      case (`key`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemaMemo.put(path, (key, df.schema))
+        df
+    }
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   /** Name-based loader honoring per-table quirks (events' NANOS ts). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =

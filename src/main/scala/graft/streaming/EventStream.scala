@@ -111,11 +111,11 @@ object EventStream {
     * (graft.sources.Tables.events) applies for that form, so both
     * paths see identical LTZ timestamps by construction (not merely
     * because the session zone is UTC). */
-  private def corpusEventsSource(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def corpusEventsSource(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
-    val tsType = spark.read.parquet(path).schema("ts").dataType
+    val tsType = graft.sources.Tables.parquet(spark, path).schema("ts").dataType
     val tsDecl = tsType match {
       case LongType => "BIGINT"
       case TimestampNTZType => "TIMESTAMP_NTZ"
@@ -575,7 +575,7 @@ object EventStream {
     // same glob + basePath device as corpusEventsSource: the table is a
     // bare parquet file, and the streaming file source wants a listing
     val arrivals = spark.readStream
-      .schema(spark.read.parquet(path).schema)
+      .schema(graft.sources.Tables.parquet(spark, path).schema)
       .option("basePath", sfDir)
       .parquet(path + "*")
       .filter(col("doc_id") % 2 === 1)
@@ -618,7 +618,7 @@ object EventStream {
     val priorFps = graft.operators.Dedup
       .chunkKeeperIndex(spark, sfDir, chunkSize).select("chunk_fp")
     val arrivals = spark.readStream
-      .schema(spark.read.parquet(path).schema)
+      .schema(graft.sources.Tables.parquet(spark, path).schema)
       .option("basePath", sfDir)
       .parquet(path + "*")
       .filter(col("doc_id") % 2 === 1)
@@ -661,7 +661,7 @@ object EventStream {
     val path = s"$sfDir/documents.parquet"
     val wtab = graft.operators.TextAnalysis.classifierWeights(spark, sfDir)
     val arrivals = spark.readStream
-      .schema(spark.read.parquet(path).schema)
+      .schema(graft.sources.Tables.parquet(spark, path).schema)
       .option("basePath", sfDir)
       .parquet(path + "*")
       .filter(col("doc_id") % 2 === 1)

@@ -474,7 +474,6 @@ class PlanLintSpec extends SparkSpec {
     // counts need no sampled range bounds: one pass-through exchange and
     // no RangePartitioning, a map job and a result job; the unordered
     // queries keep the hash exchange
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.plans.physical.{
       HashPartitioning, RangePartitioning, ShufflePartitionIdPassThrough}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -485,10 +484,8 @@ class PlanLintSpec extends SparkSpec {
       val df = SparkEntry.queries(q)(spark, sf)
       (df, flatten(df.queryExecution.executedPlan).collect { case e: ShuffleExchangeExec => e })
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
+    def jobsOfWrite(df: org.apache.spark.sql.DataFrame): Int =
+      jobsOf(df.write.format("noop").mode("overwrite").save())._2
     Seq("wordcount_full", "wordcount_textfile").foreach { q =>
       val (df, ex) = exchanges(q)
       assert(ex.size == 1 && ex.head.child.isInstanceOf[TokenCountExec] &&
@@ -496,14 +493,8 @@ class PlanLintSpec extends SparkSpec {
         s"$q: not one pass-through exchange over TokenCountExec:\n${df.queryExecution.executedPlan}")
       val partitionings = flatten(df.queryExecution.executedPlan).map(_.outputPartitioning)
       assert(!partitionings.exists(_.isInstanceOf[RangePartitioning]), s"$q plans a range partitioning")
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        jobs.set(0)
-        df.write.format("noop").mode("overwrite").save()
-        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-        assert(jobs.get == 2, s"$q ran ${jobs.get} jobs")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val jobs = jobsOfWrite(df)
+      assert(jobs == 2, s"$q ran $jobs jobs")
     }
     Seq("wordcount_topk", "letter_buckets").foreach { q =>
       val (_, ex) = exchanges(q)
@@ -511,6 +502,14 @@ class PlanLintSpec extends SparkSpec {
       assert(word.size == 1 && word.head.outputPartitioning.isInstanceOf[HashPartitioning],
         s"$q: the word exchange is not a hash exchange: ${ex.map(_.outputPartitioning)}")
     }
+    // letter_buckets sorts its at most 26 letter rows in one task: no
+    // range exchange and no sampling job, so the word map, the letter
+    // map and the result are its only jobs
+    val (buckets, bucketEx) = exchanges("letter_buckets")
+    assert(!bucketEx.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      s"letter_buckets plans a range exchange:\n${buckets.queryExecution.executedPlan}")
+    val bucketJobs = jobsOfWrite(buckets)
+    assert(bucketJobs == 3, s"letter_buckets ran $bucketJobs jobs")
   }
 
   test("every query's plan builds and has output columns") {

@@ -31,6 +31,22 @@ class SessionGuardSpec extends SparkSpec {
       Seq("Bench.scala" -> 1, "Tool.scala" -> 1, "Verify.scala" -> 1))
   }
 
+  test("engine parquet reads go through Tables.parquet and its schema memo") {
+    // split so that this file does not match itself
+    val read = ("spark" + """\.read\.parquet\(""").r
+    val engine = Seq("sources", "operators", "streaming")
+      .flatMap(d => hits(s"src/main/scala/graft/$d", read))
+    // Tables.parquet's inferring read; the classifier's fresh-temp-dir
+    // spool (a memo entry per spool would only grow it); Layout's
+    // compaction of a caller's directory, read once
+    assert(engine.sortBy(_._1) ===
+      Seq("Layout.scala" -> 1, "Tables.scala" -> 1, "TextAnalysis.scala" -> 1))
+    val spool = Files.readAllLines(
+      Paths.get("src/main/scala/graft/operators/TextAnalysis.scala")).asScala
+      .filter(l => read.findFirstIn(l).isDefined)
+    assert(spool.map(_.trim) === Seq("spark.read.parquet(dir.toString)"))
+  }
+
   test("the test session carries every conf GraftSession sets") {
     assert(spark.sparkContext.master === s"local[${TestSpark.cpus}]")
     GraftSession.confs(TestSpark.cpus).foreach { case (key, value) =>

@@ -14,6 +14,23 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
 
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * listener on a drained listener bus. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Runs `body` with the given session confs, then restores them. */
   def withConf[T](kv: (String, String)*)(body: => T): T = {
     val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
