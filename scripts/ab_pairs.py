@@ -26,8 +26,12 @@ with the revision as the parent and the working tree as the change:
   its median, and not every change run beats every parent run;
 - unchanged: any other case.
 
-Metrics without a bound read only gain or unchanged. `--out FILE` also
-keeps every run's result line as JSON.
+Metrics without a bound read only gain or unchanged. Then, per query, each
+side's median latency (the median over the pairs of each run's median timed
+latency, read from the run's full result file under
+`.bench_build/graft/results/`), so a move in `query_p50_s` or
+`query_tail_s` names its query. `--out FILE` also keeps every run's result
+line and query latencies as JSON.
 """
 import argparse
 import json
@@ -120,6 +124,36 @@ def outcome(pairs):
     return out
 
 
+def query_medians(pairs):
+    """One row per query: each side's median over the pairs of the run's
+    median latency, and the change. A pair's "queries" holds, per side,
+    {query: [timed latencies in s]} ({} for a run without them)."""
+    def per_run(side, q):
+        return [statistics.median(v) for p in pairs
+                for v in [((p.get("queries") or {}).get(side) or {}).get(q)] if v]
+    names = sorted({q for p in pairs for side in SIDES
+                    for q in ((p.get("queries") or {}).get(side) or {})})
+    rows = []
+    for q in names:
+        med = {side: (statistics.median(per_run(side, q)) if per_run(side, q) else None)
+               for side in SIDES}
+        rows.append({"query": q, **med,
+                     "change": (med["tree"] - med["rev"]) / med["rev"]
+                     if med["rev"] and med["tree"] is not None else None})
+    return rows
+
+
+def render_queries(rows, rev_name):
+    lines = [f"{'query median latency':<24} {'rev ' + rev_name:>30} {'working tree':>30} "
+             f"{'change':>8}"]
+    for r in rows:
+        def cell(v):
+            return "n/a" if v is None else f"{v:.4g} s"
+        ch = "n/a" if r["change"] is None else f"{100 * r['change']:+.1f}%"
+        lines.append(f"{r['query']:<24} {cell(r['rev']):>30} {cell(r['tree']):>30} {ch:>8}")
+    return "\n".join(lines)
+
+
 def render(rows, outcomes, rev_name):
     lines = [f"{'metric':<24} {'rev ' + rev_name:>30} {'working tree':>30} {'change':>8} "
              f"{'won':>5}  verdict"]
@@ -159,7 +193,17 @@ def result_line(stdout):
     return None
 
 
+def query_latencies(root, workload, seed, trace):
+    """{query: [timed latencies in s]} from a run's full result file, or {}."""
+    path = root / ".bench_build" / "graft" / "results" / f"{workload}-{seed}-trace{trace}.json"
+    try:
+        return json.loads(path.read_text()).get("queries") or {}
+    except (OSError, ValueError):
+        return {}
+
+
 def run_side(root, args, seed):
+    """The run's result line (None if it gave none) and its query latencies."""
     cmd = [sys.executable, "graftbench/run.py", "--workload", args.workload, "--seed",
            str(seed), "--seconds", str(args.seconds), "--trace", str(args.trace)]
     p = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
@@ -167,7 +211,8 @@ def run_side(root, args, seed):
     if res is None:
         print(f"# run failed ({root}, seed {seed}, exit {p.returncode}): "
               f"{p.stderr[-500:]}", file=sys.stderr)
-    return res
+        return None, {}
+    return res, query_latencies(root, args.workload, seed, args.trace)
 
 
 def main():
@@ -195,12 +240,14 @@ def main():
             seed = a.first_seed + i
             order = (rev, tree) if i % 2 == 0 else (tree, rev)
             got = {root: run_side(root, a, seed) for root in order}
-            pairs.append({"seed": seed, "rev": got[rev], "tree": got[tree]})
+            pairs.append({"seed": seed, "rev": got[rev][0], "tree": got[tree][0],
+                          "queries": {"rev": got[rev][1], "tree": got[tree][1]}})
             print(f"# pair {i + 1}/{a.pairs} seed {seed} done", file=sys.stderr, flush=True)
     if a.out:
         Path(a.out).write_text(json.dumps(pairs, indent=1))
     higher, bounds = directions(tree)
     print(render(summarize(pairs, higher, bounds), outcome(pairs), a.rev))
+    print(render_queries(query_medians(pairs), a.rev))
     return 0
 
 

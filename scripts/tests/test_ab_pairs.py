@@ -106,5 +106,44 @@ class SummaryTest(unittest.TestCase):
         self.assertIsNone(ab_pairs.result_line("no result\n"))
 
 
+class QueryMediansTest(unittest.TestCase):
+    def test_each_side_reads_the_median_of_its_runs_medians(self):
+        pairs = [
+            {"queries": {"rev": {"q1": [1.0, 3.0, 2.0], "q2": [0.5]},
+                         "tree": {"q1": [1.0, 1.5, 2.0], "q2": [0.5]}}},
+            {"queries": {"rev": {"q1": [4.0, 4.0, 4.0], "q2": [0.7]},
+                         "tree": {"q1": [2.0], "q2": [0.6]}}},
+            {"queries": {"rev": {"q1": [3.0], "q2": [0.6]}, "tree": {}}},
+        ]
+        rows = {r["query"]: r for r in ab_pairs.query_medians(pairs)}
+        self.assertEqual(rows["q1"]["rev"], 3.0)      # run medians 2, 4, 3
+        self.assertEqual(rows["q1"]["tree"], 1.75)    # 1.5, 2; the third gave none
+        self.assertAlmostEqual(rows["q1"]["change"], (1.75 - 3.0) / 3.0)
+        self.assertEqual(rows["q2"]["rev"], 0.6)
+        text = ab_pairs.render_queries(list(rows.values()), "HEAD")
+        self.assertIn("q1", text)
+        self.assertIn("-41.7%", text)
+
+    def test_a_query_one_side_lacks_reads_na(self):
+        (row,) = ab_pairs.query_medians([{"queries": {"rev": {"q": [1.0]}, "tree": {}}}])
+        self.assertEqual((row["rev"], row["tree"], row["change"]), (1.0, None, None))
+        self.assertIn("n/a", ab_pairs.render_queries([row], "HEAD"))
+        self.assertEqual(ab_pairs.query_medians([{"rev": None, "tree": None}]), [])
+
+    def test_latencies_come_from_the_runs_full_result_file(self):
+        import json
+        import tempfile
+        with tempfile.TemporaryDirectory() as tmp:
+            root = Path(tmp)
+            self.assertEqual(ab_pairs.query_latencies(root, "wordcount", 3, 0), {})
+            results = root / ".bench_build" / "graft" / "results"
+            results.mkdir(parents=True)
+            (results / "wordcount-3-trace0.json").write_text(
+                json.dumps({"queries": {"wordcount_topk": [0.4, 0.5]}, "metrics": {}}))
+            self.assertEqual(ab_pairs.query_latencies(root, "wordcount", 3, 0),
+                             {"wordcount_topk": [0.4, 0.5]})
+            self.assertEqual(ab_pairs.query_latencies(root, "wordcount", 3, 1), {})
+
+
 if __name__ == "__main__":
     unittest.main()

@@ -22,18 +22,20 @@ import graft.sources.Tables
   * counts ([[full]], [[fullFromTextFile]]) keep the reference's range
   * layout: [[graft.plans.TokenCountStrategy]] plans `orderBy(word)` over
   * [[countsOf]] as one exchange by first-letter range
-  * ([[graft.functions.AzRangeId]]) under a sort-based final count, so
-  * each partition's sorted words are one slice of the global order — no
-  * sampling job, no second shuffle, no single-task sort. Crucially the
+  * ([[graft.functions.AzRangeId]]) under the graft merge
+  * ([[graft.plans.TokenMergeExec]]), which sorts each partition's words
+  * in its own table, so each partition is one slice of the global order
+  * — no sampling job, no second shuffle, no single-task sort. Crucially the
   * physical plan fixes the reference's two structural scale killers:
   *   - the reference has NO map-side combine — every reducer re-reads ALL
   *     map outputs (`slave.cc:177-210`), so shuffle volume is
   *     R × total-tokens. The fused [[graft.plans.TokenCountExec]] is
   *     that combine: per partition it counts the a-z byte slices of
   *     each row in one open-addressing table (no per-token object or
-  *     row) and emits one partial row per distinct word, which a final
-  *     aggregate merges after the shuffle — so shuffle volume
-  *     is O(distinct words per partition).
+  *     row) and emits one partial row per distinct word, which
+  *     [[graft.plans.TokenMergeExec]] adds into the same kind of table
+  *     after the shuffle (the reference's reducer map) — so shuffle
+  *     volume is O(distinct words per partition).
   *   - the reference's driver reads every (word,count) to pick top-K
   *     (`master.cc:406-452`). Spark plans `orderBy(...).limit(k)` as
   *     `TakeOrderedAndProject` — per-partition heaps of size k, only
@@ -70,7 +72,7 @@ object WordCount {
 
   /** O4 + O7 + O8 fused — `(word, cnt)` for every word of [[wordsOf]]
     * over `texts`, as one [[graft.plans.TokenCount]] node: a per-
-    * partition byte-slice counter under a final aggregate, with no
+    * partition byte-slice counter under a byte-slice merge, with no
     * per-token row; a global `orderBy("word")` right over the result is
     * planned as the first-letter range exchange (O6). Arms the planner
     * strategy on the session (idempotently): the caller may have built
@@ -79,10 +81,10 @@ object WordCount {
     countsOf(texts, textCol, TokenCount.MaxKeys)
 
   /** [[countsOf]] with an explicit per-partition table cap, so a spec
-    * can force the early-flush path. */
+    * can force the early-flush and merge-fallback paths. */
   private[graft] def countsOf(texts: DataFrame, textCol: String, maxKeys: Int): DataFrame = {
-    // the final aggregate is planned without state, so a stream would
-    // count each micro-batch alone
+    // the merge keeps no state across batches, so a stream would count
+    // each micro-batch alone
     require(!texts.isStreaming, "word count needs a batch DataFrame, got a stream")
     val spark = texts.sparkSession
     GraftExtensions.registerRuntime(spark)

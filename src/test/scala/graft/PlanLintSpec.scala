@@ -121,6 +121,7 @@ class PlanLintSpec extends SparkSpec {
       case _: org.apache.spark.sql.execution.aggregate.HashAggregateExec => true
       case _: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => true
       case _: org.apache.spark.sql.execution.aggregate.SortAggregateExec => true
+      case _: graft.plans.TokenMergeExec => true
       case _: org.apache.spark.sql.execution.GlobalLimitExec => true
       case _: org.apache.spark.sql.execution.LocalLimitExec => true
       case _: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => true
@@ -429,7 +430,9 @@ class PlanLintSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import graft.plans.{TokenCount, TokenCountExec}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    import graft.plans.{TokenCount, TokenCountExec, TokenMergeExec}
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
       case other => other.children
@@ -460,6 +463,19 @@ class PlanLintSpec extends SparkSpec {
       assert(wordShuffle.size == 1, s"$q: no exchange directly over TokenCountExec")
       assert(!nodes(wordShuffle.head).exists(isPartialAgg),
         s"$q plans a partial aggregate under the word exchange")
+      // the words are merged by the graft exec right over that exchange,
+      // with no Tungsten aggregate or sort at word level
+      val merges = exec.filter(_.children.exists(_ eq wordShuffle.head))
+      assert(merges.size == 1 && merges.head.isInstanceOf[TokenMergeExec],
+        s"$q: the exec over the word exchange is not TokenMergeExec:\n${qe.executedPlan}")
+      val tungsten: SparkPlan => Boolean = {
+        case _: HashAggregateExec | _: SortAggregateExec | _: SortExec => true
+        case _ => false
+      }
+      assert(!nodes(merges.head).exists(tungsten),
+        s"$q aggregates or sorts words outside TokenMergeExec:\n${qe.executedPlan}")
+      if (q != "letter_buckets")
+        assert(!exec.exists(tungsten), s"$q aggregates or sorts words:\n${qe.executedPlan}")
     }
     val buckets = SparkEntry.queries("letter_buckets")(spark, sf).queryExecution.optimizedPlan
     val distinct = buckets.collect { case p => p.expressions }.flatten.flatMap(_.collect {

@@ -85,6 +85,33 @@ object WordCountProps extends Properties("WordCount") {
   property("TokenCount counts equal wordsOf + groupBy counts when the table flushes early") =
     Prop.forAll(textsWithNull) { ts => fusedCounts(ts, 2) == explodedCounts(ts) }
 
+  // words for the ordered merge's slot sort: lengths around the 8- and
+  // 16-byte packing boundaries, embedded NULs (which tie with the zero
+  // padding), multi-byte UTF-8, and words sharing a 16-byte prefix so
+  // that only their arena bytes tell them apart
+  private val sortByte: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf("a", "b", "z"), 2 -> Gen.const("\u0000"), 1 -> Gen.oneOf("é", "中", "😀"))
+  private val sortWord: Gen[String] = for {
+    prefix <- Gen.oneOf("", "", "abcdefghijklmnop")
+    n <- Gen.oneOf(1, 7, 8, 9, 15, 16, 17)
+    rest <- Gen.listOfN(n, sortByte)
+    first <- Gen.oneOf("a", "b")
+  } yield first + prefix + rest.mkString
+  private val sortTexts: Gen[List[String]] =
+    Gen.listOfN(12, Gen.listOfN(8, sortWord).map(_.mkString(" ")))
+
+  property("ordered TokenCount rows come out in UTF8String byte order, with exact counts") =
+    Prop.forAll(sortTexts) { ts =>
+      val want = explodedCounts(ts).toMap
+      Seq(TokenCount.MaxKeys, 3).forall { cap =>
+        val got = WordCount.countsOf(textFrame(ts), "text", cap).orderBy("word")
+          .as[(String, Long)].collect().toSeq
+        val keys = got.map(r => UTF8String.fromString(r._1))
+        keys.zip(keys.drop(1)).forall { case (a, b) => a.compareTo(b) < 0 } &&
+          got.size == want.size && got.toMap == want
+      }
+    }
+
   // words for the range id: one-letter words, second bytes below 'a'
   // and above 'z' (é and 😀 lead bytes among them), first bytes outside
   // a-z, and the empty word

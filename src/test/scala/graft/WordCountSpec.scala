@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import graft.operators.WordCount
 
@@ -11,6 +13,35 @@ class WordCountSpec extends SparkSpec {
     WordCount.countsOf(lines.toDF("text"))
       .orderBy(desc("cnt"), asc("word"))
       .as[(String, Long)].collect().toSeq
+
+  /** The executed nodes of `p`, read through adaptive and query-stage
+    * wrappers (after execution: the final plan). */
+  private def executedNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case other => other.children
+    }).flatMap(executedNodes)
+  }
+
+  /** The metrics of the one `TokenMergeExec` in `ds`'s executed plan. */
+  private def mergeMetrics(ds: Dataset[_]): Map[String, Long] = {
+    val merges = executedNodes(ds.queryExecution.executedPlan).collect {
+      case m: graft.plans.TokenMergeExec => m
+    }
+    assert(merges.size == 1, ds.queryExecution.executedPlan.toString)
+    merges.head.metrics.map { case (k, m) => k -> m.value }
+  }
+
+  /** Edge words, keys of 1 to 40 bytes, and the sf corpus, over 3
+    * partitions. */
+  private def mixedTexts = {
+    val edge = Seq("a b z a", "aA a0 a' a{ a~ aé a中 a😀 zz z😀", "b\u0000 bZ by bz b{") ++
+      (1 to 40).map(n => ("abcdefghijklmnopqrstuvwxyz" * 2).take(n)).map(w => s"$w x$w $w")
+    val docs = graft.sources.Tables.documents(spark, sf).select("text").as[String].collect().toSeq
+    spark.sparkContext.parallelize(edge ++ docs, 3).toDF("text")
+  }
 
   test("tiny_corpus golden: filter, counts, tie order") {
     val got = countsOf(
@@ -38,20 +69,13 @@ class WordCountSpec extends SparkSpec {
   }
 
   test("TokenCountExec metrics: tokens seen, rows out and flushes at the cap") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import graft.plans.TokenCountExec
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case other => other.children
-    }).flatMap(nodes)
     // 8 kept tokens, 5 distinct words, one partition
     val texts = spark.sparkContext.parallelize(Seq("a b a c", "b d e a Zed"), 1).toDF("text")
     def run(maxKeys: Int): (Map[String, Long], Map[String, Long]) = {
       val ds = WordCount.countsOf(texts, "text", maxKeys).as[(String, Long)]
       val got = ds.collect().toMap
-      val exec = nodes(ds.queryExecution.executedPlan).collect { case t: TokenCountExec => t }
+      val exec = executedNodes(ds.queryExecution.executedPlan).collect { case t: TokenCountExec => t }
       assert(exec.size == 1)
       (got, exec.head.metrics.map { case (k, m) => k -> m.value })
     }
@@ -128,6 +152,89 @@ class WordCountSpec extends SparkSpec {
           p.numPartitions == math.min(n, graft.functions.AzRangeId.Keys)
         case _ => false
       }), s"aqe=$aqe, $n partitions: $exchanges")
+    }
+  }
+
+  test("TokenMergeExec at small caps: the sorted fallback merges both shapes, AQE on and off") {
+    val texts = mixedTexts
+    val want = WordCount.wordsOf(texts).groupBy("word").count().orderBy("word")
+      .as[(String, Long)].collect().toSeq
+    for (cap <- Seq(2, 3); aqe <- Seq("true", "false"); n <- Seq(1, 4, 32)) withConf(
+        "spark.sql.adaptive.enabled" -> aqe, "spark.sql.shuffle.partitions" -> n.toString) {
+      val at = s"cap $cap, aqe=$aqe, $n partitions"
+      val hash = WordCount.countsOf(texts, "text", cap).as[(String, Long)]
+      val hashRows = hash.collect().toSeq
+      assert(hashRows.size == want.size && hashRows.toMap == want.toMap, at)
+      assert(mergeMetrics(hash)("numFallbacks") >= 1, at)
+      val ordered = WordCount.countsOf(texts, "text", cap).orderBy("word").as[(String, Long)]
+      val got = ordered.collect().toSeq
+      val firstDiff = got.zip(want).indexWhere { case (g, w) => g != w }
+      assert(got.size == want.size && firstDiff < 0, s"$at: first difference at $firstDiff")
+      val m = mergeMetrics(ordered)
+      assert(m("numFallbacks") >= 1 && m("numOutputRows") == want.size, s"$at: $m")
+    }
+  }
+
+  test("TokenMergeExec peak table bytes are bounded by the words, with no fallback at MaxKeys") {
+    // 20,000 generated words, 2,000 of them longer than 16 bytes, on
+    // top of the sf corpus; 4 reduce tasks
+    val vocab = (0 until 20000).map { i =>
+      val w = s"w${Integer.toString(i, 36)}"
+      if (i % 10 == 0) w + "-long-enough-for-the-arena" else w
+    }
+    val texts = spark.sparkContext.parallelize(
+      vocab.grouped(50).map(_.mkString(" ")).toSeq ++ mixedTexts.as[String].collect(), 4)
+      .toDF("text")
+    val distinct = WordCount.wordsOf(texts).distinct().as[String].collect()
+    val d = distinct.length.toLong
+    val arenaBytes = distinct.map(_.getBytes("UTF-8").length).filter(_ > 16).map(_.toLong).sum
+    assert(d > 20000 && arenaBytes > 2000 * 16)
+    withConf("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "4") {
+      for (ordered <- Seq(false, true)) {
+        val counts = WordCount.countsOf(texts)
+        val ds = (if (ordered) counts.orderBy("word") else counts).as[(String, Long)]
+        assert(ds.collect().length == d)
+        val m = mergeMetrics(ds)
+        // a slot is 32 B and the table doubles at half load, so it holds
+        // 64–128 B per word (32 KiB of slots and a 4 KiB arena at least
+        // per task); the arena at most doubles the long words' bytes
+        val bound = 4 * (32768 + 4096) + 128 * d + 2 * arenaBytes
+        assert(m("numFallbacks") == 0 && m("numOutputRows") == d, s"ordered=$ordered: $m")
+        assert(m("peakTableBytes") >= 64 * d + arenaBytes && m("peakTableBytes") <= bound,
+          s"ordered=$ordered: ${m("peakTableBytes")} table bytes for $d words, bound $bound")
+      }
+    }
+  }
+
+  test("ordered counts at 200 shuffle partitions: AQE coalesces the range exchange") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
+    val texts = graft.sources.Tables.documents(spark, sf).select("text")
+    withConf("spark.sql.adaptive.enabled" -> "true", "spark.sql.shuffle.partitions" -> "200") {
+      val stages = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+      val listener = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          stages.put(e.stageInfo.stageId, e.stageInfo.numTasks): Unit
+      }
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val ordered = WordCount.countsOf(texts).orderBy("word").as[(String, Long)]
+      val got =
+        try {
+          val rows = ordered.collect().toSeq
+          org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+          rows
+        } finally spark.sparkContext.removeSparkListener(listener)
+      val want = WordCount.wordsOf(texts).groupBy("word").count().orderBy("word")
+        .as[(String, Long)].collect().toSeq
+      assert(got.nonEmpty && got == want)
+      val reads = executedNodes(ordered.queryExecution.executedPlan).collect {
+        case r: AQEShuffleReadExec => r
+      }
+      assert(reads.size == 1 && reads.head.isCoalescedRead && reads.head.partitionSpecs.size < 200,
+        ordered.queryExecution.executedPlan.toString)
+      val finalTasks = stages.get(stages.keySet.toArray.map(_.asInstanceOf[Int]).max)
+      assert(finalTasks == reads.head.partitionSpecs.size, s"stages: $stages")
     }
   }
 
