@@ -100,10 +100,8 @@ object VectorOps {
     * eval split first) keep the per-call form. */
   def vectorGroupsIndex(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): (DataFrame, DataFrame) =
-    // sfDir MUST be in params: the cache's stale-fingerprint sweep
-    // reclaims sibling fingerprints of the same (name, params) key, so
-    // omitting the corpus path would make two corpora in one JVM evict
-    // each other's collapse (caught by DedupSpec's clone-corpus tests)
+    // sfDir is in params, so each corpus path keys its own collapse
+    // even when two copies' files fingerprint alike
     graft.sources.ArtifactCache.readOrWritePair(spark, "vector-groups",
       sfDir, s"$sfDir/embeddings.parquet")(
       exactVectorGroups(normalizedEmbeddings(spark, sfDir)))

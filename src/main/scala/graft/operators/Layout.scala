@@ -115,62 +115,29 @@ object Layout {
     * forever". The write pays ONE hash shuffle; every later equi-join
     * or aggregation on `key` between tables sharing the bucket spec
     * runs with ZERO exchange and zero sort (the scan itself reports
-    * `HashPartitioning(key, buckets)` + per-bucket order). Keyed by the
-    * source corpus fingerprint like every [[ArtifactCache]] artifact:
-    * refreshing the data in place yields a new table name, and stale
-    * fingerprints of the same (name, buckets) are DROPPED — catalog
-    * entry and backing files both — mirroring `ArtifactCache`'s
-    * stale-fingerprint cleanup, so repeated refreshes don't leak.
-    * `repartition(buckets, key)` before the write keeps it
-    * to ONE file per bucket, which is what lets the reader trust the
-    * sort and skip its own.
+    * `HashPartitioning(key, buckets)` + per-bucket order).
+    * `repartition(buckets, key)` before the write keeps it to ONE file
+    * per bucket, which is what lets the reader trust the sort and skip
+    * its own.
     *
-    * The table name carries a SOURCE-PATH discriminator as well as the
-    * content fingerprint: the sweep below treats any same-prefix
-    * directory with a different fingerprint as a stale refresh, so the
-    * prefix must be unique per (logical name, source). Without the
-    * discriminator, two sessions bucketing the same logical name from
-    * different source paths (two scale factors, say) would sweep each
-    * other's live backing files. */
-  private[graft] def bucketedTablePrefix(name: String, buckets: Int,
-      srcPath: String): String = {
-    val srcTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(srcPath.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
-    s"graft_bkt_${name}_s${srcTag}_b${buckets}_"
-  }
-
+    * Like every [[ArtifactCache]] artifact, the table lives for one
+    * SparkContext: the catalog entry is the context's in-memory one and
+    * the backing files sit under [[ArtifactCache.root]], which the
+    * context deletes when it stops. The name carries the source path's
+    * hash and the source's fingerprint, so two sources bucketed under
+    * one logical name get two tables, and a source rewritten in place
+    * gets a new table; the old one stays until the context stops. */
   def bucketedTable(spark: SparkSession, name: String, buckets: Int,
       key: String, srcPath: String)(df: => DataFrame): DataFrame = synchronized {
+    val srcTag = java.security.MessageDigest.getInstance("MD5")
+      .digest(srcPath.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
     val fp = ArtifactCache.fingerprint(spark, srcPath).take(8)
-    val prefix = bucketedTablePrefix(name, buckets, srcPath)
-    val tbl = s"$prefix$fp"
-    if (!spark.catalog.tableExists(tbl)) {
-      // stale fingerprints of the same (name, source, buckets) are garbage.
-      // Sweep the FILESYSTEM, not the catalog: the in-memory catalog
-      // dies with the JVM while the backing dirs persist in tmpdir, so
-      // a catalog scan would never see a previous run's leftovers.
-      // Exact-match the suffix (8 hex chars) so a sibling table whose
-      // NAME merely extends this prefix can never be swept. The legacy
-      // (pre-source-discriminator) pattern is swept too — those dirs
-      // predate the rename and would otherwise be orphaned forever.
-      val legacy = java.util.regex.Pattern.quote(
-        s"graft_bkt_${name}_b${buckets}_") + "[0-9a-f]{8}"
-      val base = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft-bucketed").toFile
-      Option(base.listFiles()).getOrElse(Array.empty)
-        .filter(d => d.getName != tbl &&
-          (d.getName.matches(java.util.regex.Pattern.quote(prefix) + "[0-9a-f]{8}") ||
-            d.getName.matches(legacy)))
-        .foreach { stale =>
-          spark.sql(s"DROP TABLE IF EXISTS ${stale.getName}")
-          ArtifactCache.deleteRecursively(stale)
-        }
-      val path = java.nio.file.Paths.get(base.toString, tbl).toString
+    val tbl = s"graft_bkt_${name}_s${srcTag}_b${buckets}_$fp"
+    if (!spark.catalog.tableExists(tbl))
       df.repartition(buckets, col(key))
-        .write.mode("overwrite").option("path", path)
+        .write.mode("overwrite").option("path", s"${ArtifactCache.root(spark)}/$tbl")
         .bucketBy(buckets, key).sortBy(key)
         .saveAsTable(tbl)
-    }
     spark.table(tbl)
   }
 

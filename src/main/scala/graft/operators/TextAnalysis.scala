@@ -2135,8 +2135,8 @@ object TextAnalysis {
     // (spec-asserted): the trainer's arithmetic is order-independent
     // by construction (qsum), so the round-trip cannot perturb it.
     val spoolDir: Option[java.nio.file.Path] =
-      if (reliableBase) Some(java.nio.file.Files
-        .createTempDirectory("graft-cls-base")) else None
+      if (reliableBase) Some(graft.sources.ArtifactCache.scratchDir(spark, "cls-base-"))
+      else None
     val base = spoolDir match {
       case Some(dir) =>
         classifierBase(spark, sfDir, docs).write

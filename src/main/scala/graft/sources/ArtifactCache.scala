@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Write-then-reuse materialization for derived artifacts (near-dup pair
@@ -8,20 +9,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * artifact — the posture any 100 TB pipeline takes, where an index or
   * pair table is a catalog table, not a per-query recomputation. The
   * reference's own map→reduce file contract (`slave.cc:64-66` →
-  * `slave.cc:177`) is the single-node precedent.
+  * `slave.cc:177`) is the single-node precedent: its intermediate
+  * files live for one job, as these live for one SparkContext.
   *
   * Two layers:
   *  - [[materialize]]: explicit, user-facing. Write to the caller's
   *    path unless a COMPLETED artifact (writer's `_SUCCESS` marker) is
   *    already there — a partial/failed write is redone, a finished one
   *    is reused even by a different JVM.
-  *  - [[readOrWrite]]: session cache. Deterministic location under the
-  *    JVM temp dir keyed by (artifact name, params, corpus fingerprint);
-  *    at most one writer per key per JVM (per-key future, so the Spark
-  *    job runs outside any map bin lock and a failed write retries);
-  *    stale fingerprints of the same key are deleted; a second session
-  *    over an unchanged corpus reuses the on-disk artifact via the
-  *    [[materialize]] read-if-exists check.
+  *  - [[readOrWrite]]: session cache. A location under [[root]] keyed
+  *    by (artifact name, params, corpus fingerprint); at most one
+  *    writer per location (per-path future, so the Spark job runs
+  *    outside any map bin lock and a failed write retries).
+  *
+  * [[root]] lies in the `userFiles-<uuid>` directory Spark creates for
+  * each SparkContext and deletes when the context stops (`SparkEnv.stop`
+  * and Spark's shutdown hook), so the session cache, `Layout`'s
+  * bucketed tables and the drain spools need no cleanup of their own,
+  * and two JVMs on one host never share a store. Within one context an
+  * artifact whose corpus is rewritten in place is written again under
+  * its new fingerprint; the old-fingerprint directory stays until the
+  * context stops.
   *
   * Both read artifacts back through [[Tables.parquet]]: the footer
   * schema is memoized per artifact path, keyed by the artifact's file
@@ -32,6 +40,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * params and corpus fingerprint).
   */
 object ArtifactCache {
+
+  /** The scratch root of `spark`'s SparkContext: every engine-written
+    * artifact, bucketed table and spool lives under it and goes away
+    * with the context. */
+  def root(spark: SparkSession): String = {
+    require(!spark.sparkContext.isStopped, "no artifact root for a stopped SparkContext")
+    s"${SparkFiles.getRootDirectory()}/graft-artifacts"
+  }
+
+  /** A new, empty directory under [[root]] whose name starts with `prefix`. */
+  private[graft] def scratchDir(spark: SparkSession, prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root(spark))), prefix)
 
   /** Write `df` to `outPath` (parquet) unless a completed artifact is
     * already there; return a reader over the artifact. Row order is not
@@ -74,19 +95,21 @@ object ArtifactCache {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** (artifact key, fingerprint) → the one in-flight/completed write. */
+  /** Artifact path → the one in-flight/completed write. The path holds
+    * [[root]], so a later SparkContext in this JVM never reuses a slot
+    * whose directory went away with an earlier one. */
   private val inFlight =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
 
   /** Session-cached artifact: materialize `df` at a deterministic
-    * location keyed by (`name`, `params`, fingerprint of `tablePath`),
-    * computed at most once per JVM and reusable across sessions. */
+    * location under [[root]] keyed by (`name`, `params`, fingerprint
+    * of `tablePath`), computed at most once per SparkContext. */
   def readOrWrite(spark: SparkSession, name: String, params: String,
       tablePath: String)(df: => DataFrame): DataFrame =
-    readBack(name)(Tables.parquet(spark,
+    Tables.parquet(spark,
       computeOnce(spark, name, params, tablePath) { out =>
         unlessDone(spark, out)(Sinks.writePartitionedParquet(df, out))
-      }))
+      })
 
   /** Two-output sibling of [[readOrWrite]] for artifacts cut from ONE
     * shared computation (the vector-group collapse: a single window
@@ -94,7 +117,7 @@ object ArtifactCache {
     * them as independent artifacts would run that pass twice on a cold
     * cache). `dfs` is forced at most once; each half lands in its own
     * subdir with the usual completed-write (_SUCCESS) check, so a
-    * partial write (killed JVM) redoes both halves. */
+    * partial write (a failed job) redoes both halves. */
   def readOrWritePair(spark: SparkSession, name: String, params: String,
       tablePath: String)(dfs: => (DataFrame, DataFrame))
       : (DataFrame, DataFrame) = {
@@ -109,87 +132,40 @@ object ArtifactCache {
         b.write.mode("overwrite").parquet(s"$out/b")
       }
     }
-    readBack(name)(
-      (Tables.parquet(spark, s"$dir/a"), Tables.parquet(spark, s"$dir/b")))
+    (Tables.parquet(spark, s"$dir/a"), Tables.parquet(spark, s"$dir/b"))
   }
-
-  /** ONE-JVM INVARIANT, made diagnosable: the session cache lives in a
-    * shared temp location, and a SECOND concurrent graft JVM over the
-    * same corpus can reclaim/replace this JVM's artifact dir between
-    * our write and our read (its stale-fingerprint sweep, or its own
-    * in-flight write). The raw failure is an opaque PATH_NOT_FOUND
-    * that reads like an operator bug; name the actual cause.
-    *
-    * Only PATH-GONE failures get the relabel: a schema mismatch, a bad
-    * path construction in a new caller, or a fatal error (OOM) must
-    * surface unchanged — relabeling those as "concurrent JVM" would
-    * actively misdirect debugging. */
-  private def readBack[T](name: String)(read: => T): T =
-    try read catch {
-      case scala.util.control.NonFatal(e) if pathGone(e, 0) =>
-        throw new IllegalStateException(
-          s"artifact '$name' unreadable immediately after its write " +
-            "completed — almost always a SECOND graft JVM (bench/verify/" +
-            "scale sweep) running concurrently and reclaiming the shared " +
-            "artifact cache. Run one graft JVM at a time (see README " +
-            "operations note).", e)
-    }
-
-  /** True iff the failure chain is file-/path-not-found shaped — the
-    * signature a reclaimed artifact dir leaves (AnalysisException
-    * PATH_NOT_FOUND on planning, FileNotFoundException from a task
-    * reading a deleted part file, either possibly wrapped). */
-  private[graft] def pathGone(e: Throwable, depth: Int = 0): Boolean =
-    if (e == null || depth > 16) false
-    else e match {
-      case _: java.io.FileNotFoundException => true
-      case a: org.apache.spark.sql.AnalysisException
-          if Option(a.getCondition).exists(_.startsWith("PATH_NOT_FOUND")) =>
-        true
-      case other =>
-        val cause = other.getCause
-        (cause ne other) && pathGone(cause, depth + 1)
-    }
 
   /** Text-format sibling of [[readOrWrite]] for corpora whose CONTRACT
     * is a newline-delimited text file (the reference's literal input
     * modality, `slave.cc:56`): the frame's single string column writes
     * as raw lines and reads back via `spark.read.text`. Same keying,
-    * same one-writer-per-JVM and completed-artifact (`_SUCCESS`)
+    * same one-writer-per-location and completed-artifact (`_SUCCESS`)
     * discipline as the parquet path. */
   def readOrWriteText(spark: SparkSession, name: String, params: String,
       tablePath: String)(df: => DataFrame): DataFrame =
-    readBack(name)(spark.read.text(
+    spark.read.text(
       computeOnce(spark, name, params, tablePath) { out =>
         unlessDone(spark, out)(df.write.mode("overwrite").text(out))
-      }))
+      })
 
-  /** The shared keyed-location + single-writer mechanics of the two
+  /** The shared keyed-location + single-writer mechanics of the
     * readOrWrite formats: resolve the (name, params, fingerprint)
-    * location, reclaim stale fingerprints of the same key, and run
-    * `write` at most once per JVM (per-key future; a failed write
-    * clears the slot so a retry recomputes). Returns the artifact
-    * path once the write — this thread's or a racer's — completes. */
+    * location under [[root]] and run `write` at most once per location
+    * (per-path future; a failed write clears the slot so a retry
+    * recomputes). Returns the artifact path once the write — this
+    * thread's or a racer's — completes. */
   private def computeOnce(spark: SparkSession, name: String, params: String,
       tablePath: String)(write: String => Unit): String = {
     val keyHash = md5(s"$name|$params").take(16)
-    val fp = fingerprint(spark, tablePath)
-    val base = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-artifact-cache", s"$name-$keyHash")
-    val out = base.resolve(fp).toString
-    val key = s"$name-$keyHash/$fp"
+    val out = s"${root(spark)}/$name-$keyHash/${fingerprint(spark, tablePath)}"
     val fut = new java.util.concurrent.CompletableFuture[String]()
-    val prev = inFlight.putIfAbsent(key, fut)
+    val prev = inFlight.putIfAbsent(out, fut)
     if (prev == null) {
       try {
-        // stale fingerprints of the same (name, params) are garbage
-        val dir = base.toFile
-        if (dir.isDirectory)
-          dir.listFiles().filter(_.getName != fp).foreach(deleteRecursively)
         write(out)
         fut.complete(out)
       } catch { case e: Throwable =>
-        inFlight.remove(key, fut)
+        inFlight.remove(out, fut)
         fut.completeExceptionally(e)
         throw e
       }

@@ -72,23 +72,20 @@ object EventStream {
     * its immediate predecessor's — so a long bench sweep (warm +
     * passes×reps re-runs of 4 row-scaled drains) holds bounded
     * row-scaled output per drain on disk instead of accumulating
-    * GB-scale dirs until JVM exit. Keeping exactly one generation back
-    * closes the dangling-frame hazard the old delete-on-next-call rule
-    * had: a prefix's RETURNED frame reads its spool lazily, and a
-    * caller that re-runs the drain while still holding the previous
-    * result (compare new vs old, say) would have found the old frame's
-    * files already deleted. Now the predecessor stays readable until
-    * the run AFTER next; only the grandparent is reclaimed. A single
-    * shutdown hook sweeps whatever is still registered at exit. */
+    * GB-scale dirs until the context stops. Keeping exactly one
+    * generation back closes the dangling-frame hazard the old
+    * delete-on-next-call rule had: a prefix's RETURNED frame reads its
+    * spool lazily, and a caller that re-runs the drain while still
+    * holding the previous result (compare new vs old, say) would have
+    * found the old frame's files already deleted. Now the predecessor
+    * stays readable until the run AFTER next; only the grandparent is
+    * reclaimed. Spools live under [[graft.sources.ArtifactCache.root]],
+    * so whatever is left goes away with the SparkContext. */
   private val spoolDirs =
     new java.util.concurrent.ConcurrentHashMap[String, List[java.io.File]]()
-  private lazy val spoolHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => spoolDirs.values.forEach(
-      _.foreach(graft.sources.ArtifactCache.deleteRecursively))))
 
-  private def freshSpoolDir(prefix: String): String = {
-    spoolHook
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-drain-$prefix-")
+  private def freshSpoolDir(spark: SparkSession, prefix: String): String = {
+    val dir = graft.sources.ArtifactCache.scratchDir(spark, s"drain-$prefix-")
     spoolDirs.compute(prefix, (_, old) => {
       val prev = Option(old).getOrElse(Nil)
       // reclaim everything OLDER than the immediate predecessor: the
@@ -254,10 +251,9 @@ object EventStream {
       "row-scaled spool drain supports Complete/Append only")
     require(perBatch.isEmpty || rowScaled,
       "perBatch finishing runs in the foreachBatch spool path only")
-    // prefix-keyed: the previous run's spool for THIS drain is
-    // reclaimed now, and the registry's shutdown hook sweeps the rest
-    // at exit — one live spool per drain, not one per call
-    val spool = if (rowScaled) Some(freshSpoolDir(prefix)) else None
+    // prefix-keyed: the grandparent run's spool for THIS drain is
+    // reclaimed now, and the context's stop removes the rest
+    val spool = if (rowScaled) Some(freshSpoolDir(spark, prefix)) else None
     try {
       val base = out.writeStream
         .queryName(name)

@@ -90,33 +90,6 @@ class BucketedJoinSpec extends SparkSpec {
     assert(plain.nonEmpty)
   }
 
-  test("bucketedTable drops stale fingerprints of the same (name, source, buckets)") {
-    import graft.operators.Layout
-    // plant a stale table under the same (name, source) prefix with a
-    // different fingerprint — only THAT should be swept
-    val src = s"$sf/orders.parquet"
-    val staleTbl = Layout.bucketedTablePrefix("stalecheck", 4, src) + "00000000"
-    val stalePath = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-bucketed", staleTbl)
-    spark.range(3).toDF("k").write.mode("overwrite")
-      .option("path", stalePath.toString)
-      .bucketBy(4, "k").saveAsTable(staleTbl)
-    assert(spark.catalog.tableExists(staleTbl))
-    try {
-      val fresh = Layout.bucketedTable(spark, "stalecheck", 4, "o_orderkey", src) {
-        graft.sources.Tables.orders(spark, sf).select("o_orderkey")
-      }
-      assert(fresh.count() > 0)
-      // the stale catalog entry AND its backing files are gone
-      assert(!spark.catalog.tableExists(staleTbl), "stale table not dropped")
-      assert(!stalePath.toFile.exists(), "stale files not deleted")
-    } finally {
-      spark.catalog.listTables().collect().map(_.name)
-        .filter(_.startsWith("graft_bkt_stalecheck_"))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-  }
-
   test("bucketedTable: a sibling table from a DIFFERENT source survives the sweep") {
     import graft.operators.Layout
     // same logical name, two source paths — the path discriminator in

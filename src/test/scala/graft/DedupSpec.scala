@@ -416,7 +416,8 @@ class DedupSpec extends SparkSpec {
     val lshIndexed = Dedup.minhashLshPairs(spark, sf).collect().map(_.toString).toSeq
     assert(lshIndexed === lshDirect)
     // the indexes exist as completed parquet artifacts on disk
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-artifact-cache")
+    val root = graft.sources.ArtifactCache.root(spark)
+    val base = java.nio.file.Paths.get(root)
     for (name <- Seq("shingle-hashes", "minhash-sig", "simhash-sig")) {
       val dirs = base.toFile.listFiles().filter(_.getName.startsWith(s"$name-"))
       assert(dirs.nonEmpty, s"stored artifact for $name must exist under $base")
@@ -424,6 +425,20 @@ class DedupSpec extends SparkSpec {
         new java.io.File(fp, "_SUCCESS").exists())),
         s"artifact for $name must carry a _SUCCESS marker")
     }
+    // every engine-written scratch path lies under the context's root:
+    // a readOrWrite artifact, a bucketed table and a row-scaled spool
+    def files(df: org.apache.spark.sql.DataFrame) = {
+      val fs = df.inputFiles.toSeq
+      assert(fs.nonEmpty)
+      fs
+    }
+    val stored = files(graft.sources.ArtifactCache.readOrWrite(spark, "root-check", "v1",
+      s"$sf/documents.parquet")(spark.range(3).toDF("id")))
+    val bucketed = files(graft.operators.Layout.bucketedTable(spark, "rootcheck", 2,
+      "doc_id", s"$sf/documents.parquet")(docs.select("doc_id")))
+    val spooled = files(graft.streaming.EventStream.sessionizeViaStream(spark, sf))
+    for (f <- stored ++ bucketed ++ spooled)
+      assert(new java.net.URI(f).getPath.startsWith(s"$root/"), s"$f is not under $root")
   }
 
   test("incremental probes read STORED fingerprint indexes; driver forms match library forms") {
@@ -440,7 +455,7 @@ class DedupSpec extends SparkSpec {
     assert(chunkIndexed === chunkDirect)
     // both indexes exist as completed on-disk artifacts (the O(batch)
     // probe posture: an arrival never re-reads the prior corpus)
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-artifact-cache")
+    val base = java.nio.file.Paths.get(graft.sources.ArtifactCache.root(spark))
     for (name <- Seq("doc-fp-index", "chunk-keeper-index")) {
       val dirs = base.toFile.listFiles().filter(_.getName.startsWith(s"$name-"))
       assert(dirs.nonEmpty, s"stored artifact for $name must exist under $base")

@@ -14,6 +14,9 @@ object DupSpanProps extends Properties("DupSpans") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8) // each case runs Spark jobs; keep tight
 
+  // neither property shrinks: every shrink step runs Spark jobs, so a
+  // shrinking failure took many minutes to report
+
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -57,10 +60,10 @@ object DupSpanProps extends Properties("DupSpans") {
   }
 
   property("scrub equals an independent in-memory position-set oracle") =
-    Prop.forAll(corpus) { docs => sparkScrub(docs) == refScrub(docs) }
+    Prop.forAllNoShrink(corpus) { docs => sparkScrub(docs) == refScrub(docs) }
 
   property("merge profile agrees with scrub: dup_tok = n_removed, spans iff removals") =
-    Prop.forAll(corpus) { docs =>
+    Prop.forAllNoShrink(corpus) { docs =>
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val merge = Dedup.dupSpanMergeOf(df).collect()

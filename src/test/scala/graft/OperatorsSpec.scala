@@ -17,9 +17,7 @@ class OperatorsSpec extends SparkSpec {
         forced += 1
         (Seq((1L, 10L)).toDF("k", "a"), Seq((1L, "canon")).toDF("k", "c"))
       }
-      // params carries the corpus dir — the keying rule the r12 clone
-      // tests caught (omitting it lets two corpora in one JVM evict
-      // each other's artifact through the stale-fingerprint sweep)
+      // params carries the corpus dir, as every corpus-keyed caller's does
       val (a1, b1) = ArtifactCache.readOrWritePair(spark, "spec-pair",
         dir, s"$dir/t.parquet")(halves)
       assert(forced === 1, "one forcing writes BOTH halves")
@@ -77,24 +75,6 @@ class OperatorsSpec extends SparkSpec {
     failedFut.completeExceptionally(new DomainBoom)
     cache.put("dboom", new Memo.Slot(failedFut, new Thread()))
     intercept[DomainBoom] { Memo.once(cache, "dboom")(0L) }: Unit
-  }
-
-  test("readBack relabel fires only on path-gone failures (ADVICE r12)") {
-    import graft.sources.ArtifactCache.pathGone
-    assert(pathGone(new java.io.FileNotFoundException("/tmp/x part-0000")))
-    // wrapped cause (a task failure surfaces as SparkException(cause))
-    assert(pathGone(new RuntimeException("stage failed",
-      new java.io.FileNotFoundException("gone"))))
-    // planning-time missing root path
-    assert(pathGone(new org.apache.spark.sql.AnalysisException(
-      errorClass = "PATH_NOT_FOUND", messageParameters = Map("path" -> "/tmp/x"))))
-    // a schema mismatch / fatal error must NOT be relabeled as a
-    // concurrent-JVM reclaim — it would misdirect debugging
-    assert(!pathGone(new org.apache.spark.sql.AnalysisException(
-      errorClass = "UNRESOLVED_COLUMN.WITHOUT_SUGGESTION",
-      messageParameters = Map("objectName" -> "`nope`"))))
-    assert(!pathGone(new IllegalStateException("unrelated")))
-    assert(!pathGone(new OutOfMemoryError("heap").asInstanceOf[Throwable]))
   }
 
   test("range join: bucketed formulation equals naive quadratic join") {

@@ -205,8 +205,7 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val asg1 = Similarity.assignmentIndex(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val cacheRoot = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-artifact-cache").toFile
+    val cacheRoot = new java.io.File(graft.sources.ArtifactCache.root(spark))
     val dirs = cacheRoot.listFiles().map(_.getName).toSet
     assert(dirs.exists(_.startsWith("srp-sig-")), "signature index on disk")
     assert(dirs.exists(_.startsWith("ivf-centroids-")), "centroid index on disk")

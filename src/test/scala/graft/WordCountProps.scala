@@ -15,6 +15,9 @@ object WordCountProps extends Properties("WordCount") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10) // each case runs Spark jobs; keep tight
 
+  // properties that run Spark jobs do not shrink: every shrink step
+  // runs jobs, so a shrinking failure took many minutes to report
+
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -78,12 +81,12 @@ object WordCountProps extends Properties("WordCount") {
   private val textsWithNull: Gen[List[String]] = texts.map(null :: _)
 
   property("TokenCount counts equal wordsOf + groupBy counts") =
-    Prop.forAll(textsWithNull) { ts =>
+    Prop.forAllNoShrink(textsWithNull) { ts =>
       fusedCounts(ts, TokenCount.MaxKeys) == explodedCounts(ts)
     }
 
   property("TokenCount counts equal wordsOf + groupBy counts when the table flushes early") =
-    Prop.forAll(textsWithNull) { ts => fusedCounts(ts, 2) == explodedCounts(ts) }
+    Prop.forAllNoShrink(textsWithNull) { ts => fusedCounts(ts, 2) == explodedCounts(ts) }
 
   // words for the ordered merge's slot sort: lengths around the 8- and
   // 16-byte packing boundaries, embedded NULs (which tie with the zero
@@ -101,7 +104,7 @@ object WordCountProps extends Properties("WordCount") {
     Gen.listOfN(12, Gen.listOfN(8, sortWord).map(_.mkString(" ")))
 
   property("ordered TokenCount rows come out in UTF8String byte order, with exact counts") =
-    Prop.forAll(sortTexts) { ts =>
+    Prop.forAllNoShrink(sortTexts) { ts =>
       val want = explodedCounts(ts).toMap
       Seq(TokenCount.MaxKeys, 3).forall { cap =>
         val got = WordCount.countsOf(textFrame(ts), "text", cap).orderBy("word")
@@ -134,22 +137,22 @@ object WordCountProps extends Properties("WordCount") {
     }
 
   property("az_tokens kernel equals the split + regex reference") =
-    Prop.forAll(texts) { ts => kernelTokens(ts) == ts.map(refTokens) }
+    Prop.forAllNoShrink(texts) { ts => kernelTokens(ts) == ts.map(refTokens) }
 
   property("counts equal an independent in-memory oracle") =
-    Prop.forAll(corpus) { lines => sparkCounts(lines) == refCounts(lines) }
+    Prop.forAllNoShrink(corpus) { lines => sparkCounts(lines) == refCounts(lines) }
 
   property("sum of counts == number of matching tokens") =
-    Prop.forAll(corpus) { lines =>
+    Prop.forAllNoShrink(corpus) { lines =>
       sparkCounts(lines).values.sum ==
         lines.flatMap(_.split("[ \n]")).count(_.matches("^[a-z].*"))
     }
 
   property("invariant under line permutation") =
-    Prop.forAll(corpus) { lines => sparkCounts(lines) == sparkCounts(lines.reverse) }
+    Prop.forAllNoShrink(corpus) { lines => sparkCounts(lines) == sparkCounts(lines.reverse) }
 
   property("tokenize . mkString round-trips a clean word multiset") =
-    Prop.forAll(Gen.listOfN(8, Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString take 6))) {
+    Prop.forAllNoShrink(Gen.listOfN(8, Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString take 6))) {
       words =>
         words.isEmpty || sparkCounts(Seq(words.mkString(" "))) ==
           words.groupBy(identity).view.mapValues(_.size.toLong).toMap
